@@ -88,9 +88,11 @@ object Main {
       // enforces it at ingest)
       .withColumn("detections", filter(col("detections"),
         d => d.getField("confidence") >= c.confidenceThreshold))
+    // one part-file per micro-batch: the wall's file listing and the
+    // `metrics` fold both grow with the file count
     StatefulOps.pauseGatedWriter(events, paused) { (batch, _) =>
       Sinks.detectionPublishFrame(batch, "nvr/detections")
-        .write.mode("append").parquet(s"$outDir/detections")
+        .coalesce(1).write.mode("append").parquet(s"$outDir/detections")
     }.option("checkpointLocation", s"$ckRoot/pipeline").start()
   }
 
@@ -168,17 +170,15 @@ object Main {
     * like the reference expires on `get`. */
   def wallWriter(events: DataFrame, tilesPath: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      if (!batch.isEmpty) {
-        val latest = EventOps.latestPerKey(batch,
-          Seq("source_id"), "timestamp", "frame_id")
-          .withColumn("labels", concat_ws("|", transform(col("detections"),
-            d => EventOps.label(d.getField("class_name"),
-              d.getField("confidence"), d.getField("tracker_id")))))
-          .drop("detections")
-        Sinks.upsertRetained(batch.sparkSession, latest, tilesPath,
-          Seq("source_id"), "timestamp", "frame_id")
-      }
+    StatefulOps.eachBatch(events) { (batch, _) =>
+      val latest = EventOps.latestPerKey(batch,
+        Seq("source_id"), "timestamp", "frame_id")
+        .withColumn("labels", concat_ws("|", transform(col("detections"),
+          d => EventOps.label(d.getField("class_name"),
+            d.getField("confidence"), d.getField("tracker_id")))))
+        .drop("detections")
+      Sinks.upsertRetained(batch.sparkSession, latest, tilesPath,
+        Seq("source_id"), "timestamp", "frame_id")
     }
 
   /** Periodic lightweight-metrics publication (ST3/K5 cadence,
@@ -198,25 +198,21 @@ object Main {
       StatefulOps.metricsAggregateStreaming(
         events.withColumnRenamed("source_id", "user_id"),
         windowSec = intervalSec, lateness = s"$intervalSec seconds"), "rate")
-    report.writeStream
-      // update mode = the CURRENT interval's aggregates each trigger (the
-      // reference publishes a live snapshot, not a watermark-closed one);
-      // the watermark still bounds window state
-      .outputMode("update")
+    // update mode = the CURRENT interval's aggregates each trigger (the
+    // reference publishes a live snapshot, not a watermark-closed one);
+    // the watermark still bounds window state
+    StatefulOps.eachBatch(report) { (batch, _) =>
+      val rows = batch
+        .select(col("user_id").as("source_id"),
+          col("window.start").as("window_start"), col("n"),
+          col("n_valid"), col("rate"), col("avg_val_ms").as("avg_inference_ms"))
+        .withColumn("instance_id", lit(instanceId))
+      Sinks.upsertRetained(batch.sparkSession, rows,
+        s"$outDir/metrics_lite", Seq("instance_id", "source_id"),
+        "window_start", "n")
+    }.outputMode("update")
       .trigger(org.apache.spark.sql.streaming.Trigger
         .ProcessingTime(s"$intervalSec seconds"))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val rows = batch
-            .select(col("user_id").as("source_id"),
-              col("window.start").as("window_start"), col("n"),
-              col("n_valid"), col("rate"), col("avg_val_ms").as("avg_inference_ms"))
-            .withColumn("instance_id", lit(instanceId))
-          Sinks.upsertRetained(batch.sparkSession, rows,
-            s"$outDir/metrics_lite", Seq("instance_id", "source_id"),
-            "window_start", "n")
-        }
-      }
   }
 
   private def runWall(spark: SparkSession, args: Map[String, String],

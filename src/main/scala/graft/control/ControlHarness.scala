@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import graft.model.{Ack, Command, InstanceStatus}
 
-/** The driver-side control loop (ST6-ST8): a `foreachBatch` interpreter
+/** The driver-side control loop (ST6-ST8): a micro-batch interpreter
   * over the command stream that mutates the pipeline through
   * `StreamingQuery` stop/rebuild/start, mirroring
   * processor/pipeline_manager.py:217-334 + processor/processor.py:207-273.
@@ -163,10 +163,11 @@ class ControlHarness(
     } finally _restarting = false
   }
 
-  /** Attach to a streaming command source: a `foreachBatch` loop that
-    * interprets the batch's commands in arrival order. The command
-    * volume is human-scale (a control topic), so the per-batch collect
-    * is a few rows — never event data.
+  /** Attach to a streaming command source: a micro-batch loop
+    * ([[graft.streaming.StatefulOps.eachBatch]]) that interprets the
+    * batch's commands in arrival order. The command volume is
+    * human-scale (a control topic), so the per-batch collect is a few
+    * rows — never event data.
     *
     * Process-exit semantics for `stop` (processor.py:236-266): once a
     * stop command has been applied — its own received→completed ACKs and
@@ -181,7 +182,7 @@ class ControlHarness(
     * the class doc applies.) */
   def attach(commands: DataFrame, orderCol: String): DataStreamWriter[Row] = {
     import org.apache.spark.sql.functions.col
-    commands.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+    graft.streaming.StatefulOps.eachBatch(commands) { (batch, _) =>
       val rows = batch.orderBy(col(orderCol)).collect()
       rows.iterator.takeWhile(_ => !_stopped).foreach { r =>
         val params = Option(r.getAs[scala.collection.Map[String, String]]("params"))

@@ -3,7 +3,6 @@ package graft.io
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
-import graft.ops.EventOps
 
 /** Sinks (K1-K5). The reference's broker-side behaviors map to two table
   * disciplines:
@@ -23,10 +22,13 @@ object Sinks {
 
   /** Merge a micro-batch into a last-value-wins table at `path`, keyed by
     * `key`, newest by (`orderCol`, `tieBreak`). Atomic via
-    * write-then-swap of a staging directory. */
+    * write-then-swap of a staging directory. Streaming callers reach it
+    * through [[graft.streaming.StatefulOps.eachBatch]], which skips
+    * empty micro-batches, so it makes no emptiness check of its own (one
+    * more scan of the batch); an empty `batch` rewrites the table
+    * unchanged. */
   def upsertRetained(spark: SparkSession, batch: DataFrame, path: String,
                      key: Seq[String], orderCol: String, tieBreak: String): Unit = {
-    if (batch.isEmpty) return
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     val target = new org.apache.hadoop.fs.Path(path)
@@ -48,13 +50,6 @@ object Sinks {
     fs.rename(staging, target)
   }
 
-  /** K3: retained per-instance status upsert. */
-  def statusWriter(status: DataFrame, path: String): DataStreamWriter[Row] =
-    status.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      upsertRetained(batch.sparkSession, batch, path,
-        Seq("instance_id"), "timestamp", "status")
-    }
-
   /** K4: ACK append (QoS 1, not retained) — plain append-mode parquet.
     * Exactly-once per micro-batch via the streaming commit log. */
   def ackWriter(acks: DataFrame, path: String, checkpoint: String): DataStreamWriter[Row] =
@@ -64,20 +59,12 @@ object Sinks {
       .outputMode("append")
 
   /** K1/K2: per-key publish — serialize the event struct to JSON with its
-    * topic (events/protocol.py:11-28), partitioned by source for
-    * per-topic consumption. At-least-once ≥ the reference's QoS 0. */
+    * topic (events/protocol.py:11-28). `Main.pipelineBuilder` appends it
+    * unpartitioned, one part-file per micro-batch, at-least-once (≥ the
+    * reference's QoS 0). */
   def detectionPublishFrame(events: DataFrame, topicPrefix: String): DataFrame =
     events.select(
       graft.ops.Protocol.topicForSource(col("source_id"), topicPrefix).as("topic"),
       col("source_id"),
       to_json(struct(events.columns.map(col): _*)).as("payload"))
-
-  def detectionWriter(events: DataFrame, path: String, checkpoint: String,
-                      topicPrefix: String = graft.ops.Protocol.DefaultTopicPrefix): DataStreamWriter[Row] =
-    detectionPublishFrame(events, topicPrefix)
-      .writeStream.format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .partitionBy("source_id")
-      .outputMode("append")
 }

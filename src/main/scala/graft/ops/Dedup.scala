@@ -980,7 +980,8 @@ object Dedup {
     * operator's job — this is the arrival-time half of Lee et al.'s
     * pipeline, the contaminationCheck→decontaminate posture applied to
     * exact substrings. Stateless w.r.t. the stream, so the same call
-    * is streaming-safe ([[graft.streaming.StatefulOps.spanExciseWriter]]).
+    * is streaming-safe (per micro-batch through
+    * [[graft.streaming.StatefulOps.eachBatch]]).
     *
     * Output: one row per INCOMING doc
     * `(doc_id, text_out, n_spans, n_tokens_removed)`.
@@ -1451,8 +1452,8 @@ object Dedup {
     * ALREADY-BUILT line set (sunk build cost — the serving posture):
     * mark each doc's lines against `boiler` by md5 equi-join,
     * reassemble in order. Per-micro-batch safe (no corpus statistics
-    * recomputed), which is what
-    * [[graft.streaming.StatefulOps.boilerplateFilterWriter]] runs. */
+    * recomputed), so it runs at ingest per micro-batch through
+    * [[graft.streaming.StatefulOps.eachBatch]]. */
   def applyBoilerplateLines(df: DataFrame, id: String, text: String,
                             boiler: DataFrame): DataFrame = {
     val lines = df
@@ -2092,8 +2093,8 @@ object Dedup {
     * shared fingerprints. The incoming side is fingerprinted ROW-LOCALLY
     * ([[winnowingFingerprintsLocal]]) so the only shuffle is the
     * fingerprint equi-join + the pair count — cost ∝ batch, and the
-    * same call is streaming-safe (see
-    * [[graft.streaming.StatefulOps.winnowServeWriter]]). */
+    * same call is streaming-safe (per micro-batch through
+    * [[graft.streaming.StatefulOps.eachBatch]]). */
   def winnowMatchAgainst(incoming: DataFrame, existingFp: DataFrame,
                          id: String, text: String, exId: String = "doc_id",
                          k: Int = 3, win: Int = 4, minShared: Int = 2,
@@ -2362,8 +2363,8 @@ object Dedup {
   }
 
   /** Paragraph boilerplate removal against a FROZEN corpus table
-    * ([[paragraphDfTable]]) — the ingest-gate form ([[
-    * graft.streaming.StatefulOps.paragraphGateWriter]] wraps it): an
+    * ([[paragraphDfTable]]) — the ingest-gate form (run per micro-batch
+    * through [[graft.streaming.StatefulOps.eachBatch]]): an
     * arriving document loses the paragraphs the REFERENCE corpus
     * already holds in more than `maxDf` documents; a paragraph the
     * reference never saw has frequency 0 and is kept. Stream-static

@@ -829,6 +829,18 @@ object TextAnalysis {
         aggregate(valid, col(text), (acc, c) => replace(acc, c, lit("<IBAN>"))))
   }
 
+  /** The validated-PII chain: [[creditCardRedact]] then [[ibanRedact]]
+    * over its output. Cards claim their spans first — both surfaces are
+    * digit runs, and a card never parses as an IBAN or vice versa after
+    * replacement. Row-local (extraction + candidate-bounded checksum
+    * folds), so it runs per micro-batch as is. Output: input columns +
+    * `(n_card_candidates, n_cards, n_iban_candidates, n_ibans,
+    * redacted)` — `redacted` carries both replacements. */
+  def validatedPiiRedact(df: DataFrame, id: String, text: String): DataFrame =
+    ibanRedact(creditCardRedact(df, id, text)
+        .withColumnRenamed("redacted", "__afterCards"), id, "__afterCards")
+      .drop("__afterCards")
+
   /** Top-N most DISTINCTIVE terms per document — the TF-IDF shape with
     * an integer-exact ranking: rarer-in-corpus first (document frequency
     * ascending), then more-frequent-in-doc (term frequency descending),
@@ -4209,8 +4221,8 @@ object TextAnalysis {
     * BM25 top-k candidates from [[bm25Search]], length buckets straight
     * from the index's `(doc, dl)` projection (no corpus text touched),
     * reranked by the trained weights. The online half of the rerank
-    * story; per-micro-batch streaming form in
-    * [[graft.streaming.StatefulOps.ltrServeWriter]]. */
+    * story; it serves a query stream per micro-batch through
+    * [[graft.streaming.StatefulOps.eachBatch]]. */
   def ltrSearch(postings: DataFrame, queries: DataFrame, qid: String,
                 qtext: String, k: Int, weights: Array[Long], bias: Long,
                 dlBucket: Int = 64): DataFrame = {

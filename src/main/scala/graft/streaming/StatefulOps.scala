@@ -80,48 +80,8 @@ object StatefulOps {
       }
   }
 
-  /** [[latestPerKeyTtl]] on the MODERN arbitrary-state API
-    * (`transformWithState`, Spark 4): a [[StatefulProcessor]] holding one
-    * TTL-configured [[ValueState]] per key — the state store itself
-    * expires entries past the TTL (native read-path expiry, the exact
-    * analog of the reference cache returning None after
-    * `now - insert_time > ttl`, wall/detection_cache.py:48-69), so the
-    * processor carries no timeout bookkeeping at all. Requires the
-    * RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass`). Kept alongside the
-    * `flatMapGroupsWithState` form: same contract, two engines. */
-  private class LatestEventProcessor(ttlMs: Long, arrivalOrder: Boolean)
-      extends StatefulProcessor[Long, KeyedEvent, KeyedEvent] {
-    @transient private var state: ValueState[KeyedEvent] = _
-
-    private def rank(e: KeyedEvent): (Long, Long) =
-      if (arrivalOrder) (e.event_id, 0L) else (e.ts.getTime, e.event_id)
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[KeyedEvent]("latest",
-        Encoders.product[KeyedEvent],
-        TTLConfig(java.time.Duration.ofMillis(ttlMs)))
-
-    override def handleInputRows(key: Long, rows: Iterator[KeyedEvent],
-                                 timers: TimerValues): Iterator[KeyedEvent] = {
-      val incoming = rows.maxBy(rank)
-      // state.get() returns null past the TTL — the store-side expiry
-      val winner = (Option(state.get()).toSeq :+ incoming).maxBy(rank)
-      state.update(winner)
-      Iterator.single(winner)
-    }
-  }
-
-  /** See [[LatestEventProcessor]]. Update-mode, processing-time. */
-  def latestPerKeyTtlTws(events: Dataset[KeyedEvent], ttlMs: Long,
-                         arrivalOrder: Boolean): Dataset[KeyedEvent] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new LatestEventProcessor(ttlMs, arrivalOrder),
-        TimeMode.ProcessingTime(), OutputMode.Update())
-  }
-
-  /** EVENT-TIME TTL variant of [[latestPerKeyTtlTws]] (ST1/ST2): the
+  /** EVENT-TIME TTL variant of [[latestPerKeyTtl]] on
+    * `transformWithState` (ST1/ST2): the
     * cache entry expires when the WATERMARK passes `winner.ts + ttl`,
     * not when a wall clock does. Processing-time expiry is faithful to
     * the reference's render cache but non-deterministic under replay —
@@ -316,48 +276,6 @@ object StatefulOps {
       }
   }
 
-  /** [[asOfCoProcess]] on the modern arbitrary-state API: the same
-    * union → key-partitioned arrival-order co-processing, but state is a
-    * TTL-configured [[ValueState]] the store expires by itself (the
-    * read-path-expiry analog without processor timeout bookkeeping).
-    * Requires the RocksDB state store provider. */
-  private class AsOfProcessor(ttlMs: Long)
-      extends StatefulProcessor[Long, FrameOrEvent, PairedFrame] {
-    @transient private var state: ValueState[KeyedEvent] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[KeyedEvent]("latest",
-        Encoders.product[KeyedEvent],
-        TTLConfig(java.time.Duration.ofMillis(ttlMs)))
-
-    override def handleInputRows(key: Long, rows: Iterator[FrameOrEvent],
-                                 timers: TimerValues): Iterator[PairedFrame] = {
-      val out = Seq.newBuilder[PairedFrame]
-      rows.toSeq.sortBy(_.seq).foreach {
-        case FrameOrEvent(_, _, _, Some(e)) =>
-          state.update(e) // last-arrival-wins overwrite (W1)
-        case FrameOrEvent(_, _, Some(f), _) =>
-          val cur = Option(state.get()) // null past the TTL (store expiry)
-          out += PairedFrame(f.frame_id, f.user_id, f.ts,
-            cur.map(_.event_id), cur.map(_.value))
-        case _ => ()
-      }
-      out.result().iterator
-    }
-  }
-
-  /** See [[AsOfProcessor]]; same contract as [[asOfCoProcess]]. */
-  def asOfCoProcessTws(frames: Dataset[Frame], events: Dataset[KeyedEvent],
-                       ttlMs: Long): Dataset[PairedFrame] = {
-    import frames.sparkSession.implicits._
-    val tagged = frames
-      .map(f => FrameOrEvent(f.frame_id * 2 + 1, f.user_id, Some(f), None))
-      .union(events.map(e => FrameOrEvent(e.event_id * 2, e.user_id, None, Some(e))))
-    tagged.groupByKey(_.user_id)
-      .transformWithState(new AsOfProcessor(ttlMs),
-        TimeMode.ProcessingTime(), OutputMode.Append())
-  }
-
   /** Streaming exact dedup — the ingest-time form of
     * [[graft.ops.Dedup.exactDedup]] for a continuous training-data feed:
     * drops any row whose content hash has been seen before, with state
@@ -438,24 +356,6 @@ object StatefulOps {
           .as("session_end_us"),
         col("n_events"))
   }
-
-  /** Ingest-time plagiarism/overlap gate: each arriving document is
-    * winnowing-fingerprinted ROW-LOCALLY
-    * ([[graft.ops.Dedup.winnowingFingerprintsLocal]] — a stateless
-    * projection, bit-equal to the batch window form) and matched against
-    * a persisted corpus fingerprint table via
-    * [[graft.ops.Dedup.winnowMatchAgainst]]. The pair-count aggregation
-    * is per micro-batch (foreachBatch — batch-local, exact), mirroring
-    * [[bm25ServeWriter]]/[[ivfSq8ServeWriter]]. */
-  def winnowServeWriter(stream: DataFrame, existingFp: DataFrame,
-      id: String, text: String, exId: String = "doc_id", k: Int = 3,
-      win: Int = 4, minShared: Int = 2, salt: String = "winnow")(
-      process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty)
-        process(graft.ops.Dedup.winnowMatchAgainst(batch, existingFp,
-          id, text, exId, k, win, minShared, salt), bid)
-    }
 
   /** Streaming edit-distance near-dup — the ingest-time form of
     * [[graft.ops.Dedup.incrementalEditDistancePairs]]: arriving docs
@@ -771,86 +671,6 @@ object StatefulOps {
           range).as("iscore"))
       .filter(col("iscore") >= minScore)
   }
-
-  /** Serve-time LTR rerank — [[bm25ServeWriter]] with the trained
-    * pointwise ranker applied per micro-batch
-    * ([[graft.ops.TextAnalysis.ltrSearch]] against the persisted
-    * postings index): the online retrieval + rerank stage in one
-    * writer. */
-  def ltrServeWriter(stream: DataFrame, postings: DataFrame, qid: String,
-      qtext: String, k: Int, weights: Array[Long], bias: Long,
-      dlBucket: Int = 64)(
-      process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty)
-        process(graft.ops.TextAnalysis.ltrSearch(postings, batch, qid,
-          qtext, k, weights, bias, dlBucket), bid)
-    }
-
-  /** The dense twin of [[bm25ServeWriter]]: exact ranked top-k ANN
-    * serving over a persisted IVF-SQ8 index by running the unmodified
-    * batch [[graft.ops.Similarity.ivfSq8Search]] per query micro-batch
-    * inside `foreachBatch` — full [[graft.ops.Similarity.topKMerge]]
-    * ranking semantics online, parity by construction (vs
-    * [[streamingIvfSq8Search]]'s stateless radius form). */
-  def ivfSq8ServeWriter(stream: DataFrame, index: DataFrame, id: String,
-      vec: String, k: Int, cent: DataFrame, nProbe: Int,
-      lo: Array[Long], hi: Array[Long], scaleBits: Int = 12)(
-      process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty)
-        process(graft.ops.Similarity.ivfSq8Search(index, batch, id, vec,
-          k, cent, nProbe, lo, hi, scaleBits), bid)
-    }
-
-  /** Graph-ANN serving — the HNSW-class member of the ServeWriter
-    * family ([[ivfSq8ServeWriter]]'s posture): each query micro-batch
-    * runs the unmodified batch
-    * [[graft.ops.Similarity.knnGraphBeamSearch]] over the persisted
-    * graph's live `(edges, vectors)` views
-    * ([[graft.ops.Similarity.loadKnnGraph]]) — full beam semantics and
-    * exact scoring online, parity by construction. Pass persisted
-    * views for long-lived serving (the edge/vector tables are the sunk
-    * index). */
-  def knnGraphServeWriter(stream: DataFrame, edges: DataFrame,
-      vectors: DataFrame, id: String, vec: String, k: Int,
-      beamWidth: Int, hops: Int, entryBuckets: Int = 4,
-      salt: String = "knng")(
-      process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty)
-        process(graft.ops.Similarity.knnGraphBeamSearch(batch, edges,
-          vectors, id, vec, k, beamWidth, hops, entryBuckets, salt), bid)
-    }
-
-  /** UniMax mixture policy at ingest — the streaming twin of
-    * [[graft.ops.Sampling.uniMaxSample]]: the allocation plan is a
-    * FROZEN driver artifact (trained on the reference corpus
-    * snapshot), each arriving document gets its epoch-capped copy
-    * count row-locally (broadcast plan join + consistent-hash band, no
-    * state) — the "how many times does this doc train" decision made
-    * where documents arrive, batch parity by construction. */
-  def uniMaxGateWriter(stream: DataFrame, id: String, domain: String,
-      plan: Seq[(String, Long, Long)], salt: String)(
-      process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty)
-        process(graft.ops.Sampling.uniMaxSample(batch, id, domain, plan,
-          salt), bid)
-    }
-
-  /** Pause gate (F1/ST6, processor/mqtt_sink.py:77-94): drop all rows while
-    * the driver-toggled flag is set.
-    *
-    * IMPORTANT: `paused()` is evaluated when this function is CALLED, not
-    * per-row — on a streaming DataFrame the result would be frozen into the
-    * plan at query start. Correct usage is per micro-batch: call it inside
-    * `foreachBatch` (see [[pauseGatedWriter]]), which re-evaluates the flag
-    * at every batch boundary — the reference's "immediate" pause level
-    * (in-flight batch still drains, matching the reference's 5-10 s queue
-    * drain, interfaces.py:121-124). */
-  def pauseGate(df: DataFrame, paused: () => Boolean): DataFrame =
-    if (paused()) df.filter(lit(false)) else df
 
   /** Embedding-outlier scoring AT INGEST: the streaming form of
     * [[graft.ops.Similarity.centroidDistances]]. The trained integer
@@ -1221,416 +1041,201 @@ object StatefulOps {
       .withColumnRenamed("k", key)
   }
 
-  /** Streaming pause gate done right: a `foreachBatch` writer that checks
-    * the flag once per micro-batch on the driver and drops the whole batch
-    * while paused. `process` receives only un-paused batches. */
+  /** The one micro-batch stage: every `foreachBatch` sink in the engine
+    * is built here. The batch is persisted, so it is read from its
+    * source once however many actions `process` runs on it (each extra
+    * action on an unpersisted foreachBatch frame re-runs the source
+    * scan); a batch that one check on the cached data finds empty never
+    * reaches `process`, so no job, part-file or state write is spent on
+    * it; and the cache is released in a `finally`, also when `process`
+    * throws and fails the query. */
+  def eachBatch(stream: DataFrame)(
+      process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
+      batch.persist()
+      try if (!batch.isEmpty) process(batch, bid)
+      finally batch.unpersist()
+    }
+
+  /** Streaming pause gate (F1/ST6, processor/mqtt_sink.py:77-94): the
+    * flag is checked once per micro-batch on the driver and the whole
+    * batch drops while paused — the reference's "immediate" pause level
+    * (an in-flight batch still drains, interfaces.py:121-124). A flag
+    * read while building the plan would be frozen at query start.
+    * `process` receives only un-paused batches. */
   def pauseGatedWriter(stream: DataFrame, paused: () => Boolean)(
       process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      if (!paused()) process(batch, id)
-    }
+    eachBatch(stream) { (batch, id) => if (!paused()) process(batch, id) }
 
-  /** EXACT top-k retrieval serving — the full-fidelity complement to
-    * [[streamingBm25Search]]'s threshold form: each micro-batch of
-    * queries runs the UNMODIFIED batch ranker against the persisted
-    * postings index inside `foreachBatch` (per-batch batch semantics —
-    * ranked top-k plus RRF fusion, which a pure streaming plan can't
-    * express without a second stateful stage), and `process` receives
-    * the finished `(q_id, rank, doc_id, …)` table per batch. The batch
-    * op IS the serving op, so parity is by construction; `hybrid`
-    * chooses [[graft.ops.TextAnalysis.hybridRrfSearch]] (BM25 +
-    * overlap + RRF) over plain [[graft.ops.TextAnalysis.bm25Search]].
-    * Empty micro-batches skip (the ranker's nonempty-vocabulary
-    * contract). */
-  /** Boilerplate-line removal at stream ingest against an
-    * ALREADY-TRAINED line set ([[graft.ops.Dedup.boilerplateLineSet]]
-    * — sunk build cost, the persisted-artifact rule): each micro-batch
-    * runs the batch rewrite
-    * ([[graft.ops.Dedup.applyBoilerplateLines]]) verbatim, so
-    * streaming output ≡ batch output row for row. foreachBatch because
-    * the rewrite regroups a doc's lines (an ordered per-doc
-    * re-aggregation — not expressible as an append-mode stream-static
-    * join). */
-  def boilerplateFilterWriter(stream: DataFrame, boiler: DataFrame,
-      id: String, text: String)(
-      process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty)
-        process(graft.ops.Dedup.applyBoilerplateLines(batch, id, text,
-          boiler), bid)
-    }
-
-  /** CCNet line-language spans at stream ingest
-    * ([[graft.ops.TextAnalysis.lineLanguageSpans]] per micro-batch —
-    * the op's windows are PER DOCUMENT and a document's lines arrive in
-    * its one row, so micro-batch output ≡ batch output row for row;
-    * foreachBatch because the span numbering is an ordered per-doc
-    * re-aggregation). Uniform ingest-gate posture with
-    * [[boilerplateFilterWriter]]. */
-  def lineLanguageSpanWriter(stream: DataFrame, id: String, text: String)(
-      process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty)
-        process(graft.ops.TextAnalysis.lineLanguageSpans(batch, id, text),
-          bid)
-    }
-
-  /** CCNet monolingual line filter at stream ingest
-    * ([[graft.ops.TextAnalysis.keepLanguageLines]] per micro-batch —
-    * row-local per document, same parity-by-construction argument). */
-  def keepLanguageLinesWriter(stream: DataFrame, id: String, text: String,
-      keep: String)(
-      process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty)
-        process(graft.ops.TextAnalysis.keepLanguageLines(batch, id, text,
-          keep), bid)
-    }
-
-  /** C4 blocklist gate at stream ingest
-    * ([[graft.ops.TextAnalysis.blocklistFilter]] per micro-batch; the
-    * blocklist is a driver-side constant, so the gate is a pure
-    * document-local decision — parity by construction). */
-  def blocklistGateWriter(stream: DataFrame, id: String, text: String,
-      blocklist: Seq[String])(
-      process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty)
-        process(graft.ops.TextAnalysis.blocklistFilter(batch, id, text,
-          blocklist), bid)
-    }
-
-  /** Exact phrase / NEAR serving from the persisted POSITIONAL index
-    * ([[graft.ops.TextAnalysis.savePositionalIndex]] — sunk build
-    * cost): each phrase-query micro-batch runs the unmodified batch
-    * ranker ([[graft.ops.TextAnalysis.phraseSearchPositional]], or
-    * [[graft.ops.TextAnalysis.nearSearch]] when `window > 0`) inside
-    * foreachBatch — the [[bm25ServeWriter]] posture for positional
-    * retrieval, parity by construction. */
-  def phraseServeWriter(stream: DataFrame, postings: DataFrame,
-      qid: String, qtext: String, k: Int, window: Int = 0,
-      maxQueryTerms: Int = 10000)(
-      process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty) {
-        val ranked =
-          if (window > 0)
-            graft.ops.TextAnalysis.nearSearch(postings, batch, qid,
-              qtext, window, k, maxQueryTerms)
-          else
-            graft.ops.TextAnalysis.phraseSearchPositional(postings,
-              batch, qid, qtext, k, maxQueryTerms)
-        process(ranked, bid)
-      }
-    }
-
-  /** Late-interaction serving: each query-token micro-batch runs the
-    * two-stage [[graft.ops.Similarity.maxSimRerank]] (pooled prefilter
-    * → exact maxsim rescore) against the static doc-token corpus — the
-    * multi-vector member of the foreachBatch serving family
-    * ([[bm25ServeWriter]] / [[phraseServeWriter]] /
-    * `ivfSq8ServeWriter`), parity by construction. The query batch must
-    * carry complete token bags per query id (the stream's unit is a
-    * QUERY, arriving as its token rows in one batch). */
-  def maxSimServeWriter(stream: DataFrame, docTokens: DataFrame,
-      id: String, vec: String, qid: String, qtok: String, k: Int,
-      kCand: Int, scaleBits: Int = 12)(
-      process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty)
-        process(graft.ops.Similarity.maxSimRerank(docTokens, id, vec,
-          batch, qid, qtok, k, kCand, scaleBits), bid)
-    }
-
-  def bm25ServeWriter(stream: DataFrame, postings: DataFrame,
-      qid: String, qtext: String, k: Int, hybrid: Boolean = false,
-      scaleBits: Int = 12, maxQueryTerms: Int = 10000)(
-      process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      if (!batch.isEmpty) {
-        val ranked =
-          if (hybrid)
-            graft.ops.TextAnalysis.hybridRrfSearch(postings, batch, qid,
-              qtext, k, scaleBits = scaleBits,
-              maxQueryTerms = maxQueryTerms)
-          else
-            graft.ops.TextAnalysis.bm25Search(postings, batch, qid,
-              qtext, k, scaleBits, maxQueryTerms)
-        process(ranked, id)
-      }
-    }
   /** Ingest-time INDEX MAINTENANCE — the CDC→index loop as one sink
     * (the Lucene soft-delete + background-merge shape on the
-    * [[graft.io.IndexMaintenance]] tombstone machinery): each
-    * micro-batch carries commands `(id, text, op)` with op ∈
-    * {"upsert", "delete"}; deletes tombstone first, upserts run
-    * [[graft.ops.TextAnalysis.replaceInPostingsIndex]] (replace ≡
-    * delete + append, so NEW ids are a plain append and UPDATED ids
-    * supersede — true upsert semantics), and after every batch
-    * [[graft.io.IndexMaintenance.compactIfNeeded]] fires the amortized
-    * rewrite exactly when the dead share reaches `maxDeadBp`.
-    * `onBatch(batchId, compacted)` reports whether this batch paid the
-    * compaction. Unknown op values fail the batch loudly. Serving reads
-    * continue through [[graft.ops.TextAnalysis.loadPostingsIndex]]
-    * untouched; long-lived serving sessions must
-    * [[graft.ops.Caches.release]] before a compaction can land (the
-    * compact scaladoc's cache-substitution note), and — standard Spark
-    * cross-session table semantics — a reader session OTHER than the
-    * micro-batch's (which is a clone) must `refreshTable` to see the
-    * batch's appends, or it serves its stale cached file listing.
-    * O(batch) per batch except the threshold-gated compaction.
+    * [[graft.io.IndexMaintenance]] tombstone machinery), shared by the
+    * five `*MaintenanceWriter`s, which bind only their index's calls.
+    * Each micro-batch carries commands `(id, payload, op)` with op ∈
+    * {"upsert", "delete"}; deletes tombstone first, upserts `replace`
+    * (replace ≡ delete + append, so NEW ids are a plain append and
+    * UPDATED ids supersede — true upsert semantics), and after every
+    * batch `compact` fires the amortized rewrite when the index's dead
+    * share reaches its threshold. `onBatch(batchId, compacted)` reports
+    * whether this batch paid the compaction. Serving reads continue
+    * through each index's live view untouched; long-lived serving
+    * sessions must [[graft.ops.Caches.release]] before a compaction can
+    * land, and — standard Spark cross-session table semantics — a reader
+    * session OTHER than the micro-batch's (which is a clone) must
+    * `refreshTable` to see the batch's appends. O(batch) per batch
+    * except the threshold-gated compaction.
     *
-    * MULTIPLE COMMANDS PER ID PER BATCH (normal for CDC sources): the
-    * batch is collapsed to the LATEST command per id by `orderCol`
-    * (last-writer-wins — the Debezium/compacted-topic convention)
-    * before anything is applied; ordering values should totally order
-    * each id's events, and residual ties break DETERMINISTICALLY by
-    * (orderCol, op, text) so an at-least-once replay of the batch
-    * collapses to the SAME winner as the failed attempt (an arbitrary
-    * tie pick would make the replay non-idempotent with the first
-    * attempt's partial effects — r12 advice). Without
-    * `orderCol` there is no order to collapse by, so the writer
-    * REQUIRES at most one command per id per batch and fails the batch
-    * loudly otherwise — applying them blindly would run all deletes
-    * before all upserts (an upsert-then-delete resurrects the doc) and
-    * merge two upserts' token streams into one document (silently
-    * wrong BM25 stats). */
+    * NULL and unknown op values fail the batch loudly (three-valued
+    * logic would drop NULL rows from a bare `!isin` filter, silently
+    * ignoring the command). MULTIPLE COMMANDS PER ID PER BATCH (normal
+    * for CDC sources): the batch collapses to the LATEST command per id
+    * by `orderCol` (last-writer-wins — the Debezium/compacted-topic
+    * convention) before anything is applied; residual ties break
+    * DETERMINISTICALLY by (orderCol, op, payload) so an at-least-once
+    * replay of the batch collapses to the SAME winner as the failed
+    * attempt. Without `orderCol` there is no order to collapse by, so
+    * the engine REQUIRES at most one command per id per batch —
+    * applying them blindly would run all deletes before all upserts (an
+    * upsert-then-delete resurrects the doc) and merge two upserts'
+    * payloads into one document. Deletes before the index exists are
+    * no-ops (nothing indexed to hide) — running them would write an
+    * orphan sidecar and the dead-share probe would throw on the missing
+    * table, failing the stream on a legal delete-only first batch. */
+  private def cdcMaintenanceWriter(stream: DataFrame, writer: String,
+      id: String, payload: String, op: String, table: String,
+      orderCol: Option[String])(
+      delete: (SparkSession, DataFrame) => Unit,
+      replace: DataFrame => Unit, compact: SparkSession => Boolean)(
+      onBatch: (Long, Boolean) => Unit): DataStreamWriter[Row] =
+    eachBatch(stream) { (batch, bid) =>
+      val spark = batch.sparkSession
+      val bad = batch.filter(col(op).isNull ||
+        !col(op).isin("upsert", "delete"))
+      require(bad.isEmpty, s"$writer: unknown op values " +
+        s"${bad.select(col(op)).distinct().collect().mkString(",")}")
+      val cmds = orderCol match {
+        case Some(oc) =>
+          // one narrow batch-scale aggregate; the winning struct carries
+          // both payload columns, ordered by (orderCol, op, payload) —
+          // struct comparison is lexicographic
+          batch.groupBy(col(id))
+            .agg(max_by(struct(col(payload).as("__p"), col(op).as("__o")),
+              struct(col(oc), col(op), col(payload))).as("__c"))
+            .select(col(id), col("__c.__p").as(payload),
+              col("__c.__o").as(op))
+        case None =>
+          val dup = batch.groupBy(col(id)).agg(count(lit(1)).as("__n"))
+            .filter(col("__n") > 1)
+          require(dup.isEmpty,
+            s"$writer: multiple commands for id(s) " +
+              dup.select(col(id)).limit(5).collect().mkString(",") +
+              " in one micro-batch with no orderCol — pass orderCol " +
+              "so the batch can collapse to the latest command per id")
+          batch
+      }
+      val dels = cmds.filter(col(op) === "delete").select(col(id))
+      val ups = cmds.filter(col(op) === "upsert")
+        .select(col(id), col(payload))
+      if (!dels.isEmpty && spark.catalog.tableExists(table))
+        delete(spark, dels)
+      if (!ups.isEmpty) replace(ups)
+      onBatch(bid, spark.catalog.tableExists(table) && compact(spark))
+    }
+
+  /** Threshold compaction for the two-table PAIR indexes: the shared
+    * sidecar's dead share of `table` decides, and `compact` swaps both
+    * tables behind the crash guard. */
+  private def compactPairIfDead(spark: SparkSession, table: String,
+      maxDeadBp: Long)(compact: => Unit): Boolean = {
+    val (_, _, _, deadBp) = graft.io.IndexMaintenance
+      .tombstoneStats(spark, table, "doc_id")
+    val fire = deadBp >= maxDeadBp
+    if (fire) compact
+    fire
+  }
+
+  /** CDC maintenance of a persisted postings index
+    * ([[graft.ops.TextAnalysis.replaceInPostingsIndex]] /
+    * [[graft.ops.TextAnalysis.deleteFromPostingsIndex]], threshold
+    * compaction via [[graft.io.IndexMaintenance.compactIfNeeded]]) on
+    * the [[cdcMaintenanceWriter]] engine; commands `(id, text, op)`.
+    * Serving reads go through
+    * [[graft.ops.TextAnalysis.loadPostingsIndex]]. */
   def postingsMaintenanceWriter(stream: DataFrame, id: String,
       text: String, op: String, table: String, buckets: Int,
       maxDeadBp: Long = 3000, orderCol: Option[String] = None)(
       onBatch: (Long, Boolean) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty) {
-        val spark = batch.sparkSession
-        // NULL must be caught explicitly: three-valued logic drops NULL
-        // rows from a bare !isin filter, silently ignoring the command
-        // (r13 advice)
-        val bad = batch.filter(col(op).isNull ||
-          !col(op).isin("upsert", "delete"))
-        require(bad.isEmpty,
-          s"postingsMaintenanceWriter: unknown op values " +
-            s"${bad.select(col(op)).distinct().collect().mkString(",")}")
-        val cmds = orderCol match {
-          case Some(oc) =>
-            // one narrow batch-scale aggregate; the winning struct
-            // carries both payload columns. The ordering key is
-            // (orderCol, op, text) — struct comparison is
-            // lexicographic — so orderCol ties break deterministically
-            // and a replayed batch picks the identical winner.
-            batch.groupBy(col(id))
-              .agg(max_by(struct(col(text).as("__t"), col(op).as("__o")),
-                struct(col(oc), col(op), col(text))).as("__c"))
-              .select(col(id), col("__c.__t").as(text),
-                col("__c.__o").as(op))
-          case None =>
-            val dup = batch.groupBy(col(id)).agg(count(lit(1)).as("__n"))
-              .filter(col("__n") > 1)
-            require(dup.isEmpty,
-              "postingsMaintenanceWriter: multiple commands for id(s) " +
-                dup.select(col(id)).limit(5).collect().mkString(",") +
-                " in one micro-batch with no orderCol — pass orderCol " +
-                "so the batch can collapse to the latest command per id")
-            batch
-        }
-        val dels = cmds.filter(col(op) === "delete").select(col(id))
-        val ups = cmds.filter(col(op) === "upsert")
-          .select(col(id), col(text))
-        // Deletes before the index exists are no-ops (nothing indexed
-        // to hide) — running them would write an orphan sidecar and
-        // the stats probe below would throw on the missing table,
-        // failing the stream on a legal delete-only first batch (r13
-        // advice).
-        if (!dels.isEmpty && spark.catalog.tableExists(table))
-          graft.ops.TextAnalysis.deleteFromPostingsIndex(spark, table,
-            dels, id)
-        if (!ups.isEmpty)
-          graft.ops.TextAnalysis.replaceInPostingsIndex(ups, id, text,
-            table, buckets)
-        val compacted = spark.catalog.tableExists(table) &&
-          graft.io.IndexMaintenance.compactIfNeeded(spark,
-            table, "term", buckets, "doc", maxDeadBp)
-        onBatch(bid, compacted)
-      }
-    }
+    cdcMaintenanceWriter(stream, "postingsMaintenanceWriter", id, text, op,
+      table, orderCol)(
+      (spark, dels) => graft.ops.TextAnalysis.deleteFromPostingsIndex(
+        spark, table, dels, id),
+      ups => graft.ops.TextAnalysis.replaceInPostingsIndex(ups, id, text,
+        table, buckets),
+      spark => graft.io.IndexMaintenance.compactIfNeeded(spark, table,
+        "term", buckets, "doc", maxDeadBp))(onBatch)
 
-  /** CDC maintenance for a persisted winnowing fingerprint index —
-    * the [[postingsMaintenanceWriter]] posture over
-    * [[graft.ops.Dedup.saveWinnowIndex]]'s lifecycle: commands
-    * `(id, text, op ∈ upsert/delete)`, LWW collapse by `orderCol` with
-    * the deterministic (orderCol, op, text) tie-break (or
-    * one-command-per-id required loudly), deletes tombstone, upserts
-    * re-fingerprint + replace, threshold compaction via
-    * `compactIfNeeded` (fp-bucketed rewrite). NULL ops fail loudly; a
-    * delete-only first batch against a missing index is a no-op.
-    * Serving reads go through [[graft.ops.Dedup.winnowMatchFromIndex]]
-    * (live view); the usual cross-session refreshTable caveat
-    * applies. */
+  /** CDC maintenance for a persisted winnowing fingerprint index
+    * ([[graft.ops.Dedup.saveWinnowIndex]]'s lifecycle: upserts
+    * re-fingerprint + replace, fp-bucketed threshold compaction) on the
+    * [[cdcMaintenanceWriter]] engine. Serving reads go through
+    * [[graft.ops.Dedup.winnowMatchFromIndex]] (live view). */
   def winnowMaintenanceWriter(stream: DataFrame, id: String,
       text: String, op: String, table: String, buckets: Int,
       k: Int = 3, win: Int = 4, salt: String = "winnow",
       maxDeadBp: Long = 3000, orderCol: Option[String] = None)(
       onBatch: (Long, Boolean) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty) {
-        val spark = batch.sparkSession
-        val bad = batch.filter(col(op).isNull ||
-          !col(op).isin("upsert", "delete"))
-        require(bad.isEmpty,
-          s"winnowMaintenanceWriter: unknown op values " +
-            s"${bad.select(col(op)).distinct().collect().mkString(",")}")
-        val cmds = orderCol match {
-          case Some(oc) =>
-            batch.groupBy(col(id))
-              .agg(max_by(struct(col(text).as("__t"), col(op).as("__o")),
-                struct(col(oc), col(op), col(text))).as("__c"))
-              .select(col(id), col("__c.__t").as(text),
-                col("__c.__o").as(op))
-          case None =>
-            val dup = batch.groupBy(col(id)).agg(count(lit(1)).as("__n"))
-              .filter(col("__n") > 1)
-            require(dup.isEmpty,
-              "winnowMaintenanceWriter: multiple commands for id(s) " +
-                dup.select(col(id)).limit(5).collect().mkString(",") +
-                " in one micro-batch with no orderCol — pass orderCol " +
-                "so the batch can collapse to the latest command per id")
-            batch
-        }
-        val dels = cmds.filter(col(op) === "delete").select(col(id))
-        val ups = cmds.filter(col(op) === "upsert")
-          .select(col(id), col(text))
-        if (!dels.isEmpty && spark.catalog.tableExists(table))
-          graft.ops.Dedup.deleteFromWinnowIndex(spark, table, dels, id)
-        if (!ups.isEmpty)
-          graft.ops.Dedup.replaceInWinnowIndex(ups, id, text, table,
-            buckets, k, win, salt)
-        val compacted = spark.catalog.tableExists(table) &&
-          graft.io.IndexMaintenance.compactIfNeeded(spark, table, "fp",
-            buckets, "doc_id", maxDeadBp)
-        onBatch(bid, compacted)
-      }
-    }
+    cdcMaintenanceWriter(stream, "winnowMaintenanceWriter", id, text, op,
+      table, orderCol)(
+      (spark, dels) => graft.ops.Dedup.deleteFromWinnowIndex(spark, table,
+        dels, id),
+      ups => graft.ops.Dedup.replaceInWinnowIndex(ups, id, text, table,
+        buckets, k, win, salt),
+      spark => graft.io.IndexMaintenance.compactIfNeeded(spark, table,
+        "fp", buckets, "doc_id", maxDeadBp))(onBatch)
 
-  /** CDC maintenance for a persisted MinHash LSH band index — the
-    * [[winnowMaintenanceWriter]] posture over
-    * [[graft.ops.Dedup.saveMinHashIndex]]'s lifecycle (r15 — the last
-    * near-dup family without the maintained index): commands
-    * `(id, text, op ∈ upsert/delete)`, LWW collapse by `orderCol` with
-    * the deterministic (orderCol, op, text) tie-break (or
-    * one-command-per-id required loudly), deletes tombstone, upserts
-    * re-sign + replace (signature params guarded against the saved
-    * table's — a mismatched (numHashes, bands) would silently stop
-    * matching), threshold compaction via `compactIfNeeded`
-    * (band-bucketed rewrite). NULL ops fail loudly; a delete-only
-    * first batch against a missing index is a no-op. Serving reads go
-    * through [[graft.ops.Dedup.minHashPairsFromIndex]] (live view);
-    * the usual cross-session refreshTable caveat applies. */
+  /** CDC maintenance for a persisted MinHash LSH band index
+    * ([[graft.ops.Dedup.saveMinHashIndex]]'s lifecycle: upserts re-sign
+    * + replace, the signature params guarded against the saved table's
+    * — a mismatched (numHashes, bands) would silently stop matching;
+    * band-bucketed threshold compaction) on the
+    * [[cdcMaintenanceWriter]] engine. Serving reads go through
+    * [[graft.ops.Dedup.minHashPairsFromIndex]] (live view). */
   def minHashMaintenanceWriter(stream: DataFrame, id: String,
       text: String, op: String, table: String, buckets: Int,
       numHashes: Int, bands: Int, maxDeadBp: Long = 3000,
       orderCol: Option[String] = None)(
       onBatch: (Long, Boolean) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty) {
-        val spark = batch.sparkSession
-        val bad = batch.filter(col(op).isNull ||
-          !col(op).isin("upsert", "delete"))
-        require(bad.isEmpty,
-          s"minHashMaintenanceWriter: unknown op values " +
-            s"${bad.select(col(op)).distinct().collect().mkString(",")}")
-        val cmds = orderCol match {
-          case Some(oc) =>
-            batch.groupBy(col(id))
-              .agg(max_by(struct(col(text).as("__t"), col(op).as("__o")),
-                struct(col(oc), col(op), col(text))).as("__c"))
-              .select(col(id), col("__c.__t").as(text),
-                col("__c.__o").as(op))
-          case None =>
-            val dup = batch.groupBy(col(id)).agg(count(lit(1)).as("__n"))
-              .filter(col("__n") > 1)
-            require(dup.isEmpty,
-              "minHashMaintenanceWriter: multiple commands for id(s) " +
-                dup.select(col(id)).limit(5).collect().mkString(",") +
-                " in one micro-batch with no orderCol — pass orderCol " +
-                "so the batch can collapse to the latest command per id")
-            batch
-        }
-        val dels = cmds.filter(col(op) === "delete").select(col(id))
-        val ups = cmds.filter(col(op) === "upsert")
-          .select(col(id), col(text))
-        if (!dels.isEmpty && spark.catalog.tableExists(table))
-          graft.ops.Dedup.deleteFromMinHashIndex(spark, table, dels, id)
-        if (!ups.isEmpty)
-          graft.ops.Dedup.replaceInMinHashIndex(ups, id, text, table,
-            buckets, numHashes, bands)
-        val compacted = spark.catalog.tableExists(table) &&
-          graft.io.IndexMaintenance.compactIfNeeded(spark, table, "band",
-            buckets, "doc_id", maxDeadBp)
-        onBatch(bid, compacted)
-      }
-    }
+    cdcMaintenanceWriter(stream, "minHashMaintenanceWriter", id, text, op,
+      table, orderCol)(
+      (spark, dels) => graft.ops.Dedup.deleteFromMinHashIndex(spark, table,
+        dels, id),
+      ups => graft.ops.Dedup.replaceInMinHashIndex(ups, id, text, table,
+        buckets, numHashes, bands),
+      spark => graft.io.IndexMaintenance.compactIfNeeded(spark, table,
+        "band", buckets, "doc_id", maxDeadBp))(onBatch)
 
-  /** CDC maintenance for the STORAGE-LEAN MinHash PAIR index — the
-    * [[minHashMaintenanceWriter]] semantics over
-    * [[graft.ops.Dedup.saveMinHashPairIndex]]'s two-table lifecycle
-    * (the maxsim-pair posture): deletes tombstone BOTH tables through
-    * the one shared sidecar, upserts replace in both, and the band
-    * table's dead share drives threshold compaction of the PAIR
+  /** CDC maintenance for the STORAGE-LEAN MinHash PAIR index
+    * ([[graft.ops.Dedup.saveMinHashPairIndex]]'s two-table lifecycle)
+    * on the [[cdcMaintenanceWriter]] engine: deletes tombstone BOTH
+    * tables through the one shared sidecar, upserts replace in both, and
+    * the band table's dead share drives compaction of the PAIR
     * ([[graft.ops.Dedup.compactMinHashPairIndex]] — both tables swap
-    * behind the crash guard, serving identical across it). LWW
-    * collapse, NULL-op and no-orderCol hardening identical to the wide
-    * writer. Serving reads go through
-    * [[graft.ops.Dedup.minHashPairsFromPairIndex]]. */
+    * behind the crash guard, serving identical across it). Serving
+    * reads go through [[graft.ops.Dedup.minHashPairsFromPairIndex]]. */
   def minHashPairMaintenanceWriter(stream: DataFrame, id: String,
       text: String, op: String, table: String, buckets: Int,
       numHashes: Int, bands: Int, maxDeadBp: Long = 3000,
       orderCol: Option[String] = None)(
       onBatch: (Long, Boolean) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty) {
-        val spark = batch.sparkSession
-        val bad = batch.filter(col(op).isNull ||
-          !col(op).isin("upsert", "delete"))
-        require(bad.isEmpty,
-          s"minHashPairMaintenanceWriter: unknown op values " +
-            s"${bad.select(col(op)).distinct().collect().mkString(",")}")
-        val cmds = orderCol match {
-          case Some(oc) =>
-            batch.groupBy(col(id))
-              .agg(max_by(struct(col(text).as("__t"), col(op).as("__o")),
-                struct(col(oc), col(op), col(text))).as("__c"))
-              .select(col(id), col("__c.__t").as(text),
-                col("__c.__o").as(op))
-          case None =>
-            val dup = batch.groupBy(col(id)).agg(count(lit(1)).as("__n"))
-              .filter(col("__n") > 1)
-            require(dup.isEmpty,
-              "minHashPairMaintenanceWriter: multiple commands for " +
-                "id(s) " +
-                dup.select(col(id)).limit(5).collect().mkString(",") +
-                " in one micro-batch with no orderCol — pass orderCol " +
-                "so the batch can collapse to the latest command per id")
-            batch
-        }
-        val dels = cmds.filter(col(op) === "delete").select(col(id))
-        val ups = cmds.filter(col(op) === "upsert")
-          .select(col(id), col(text))
-        if (!dels.isEmpty && spark.catalog.tableExists(table))
-          graft.ops.Dedup.deleteFromMinHashPairIndex(spark, table, dels,
-            id)
-        if (!ups.isEmpty)
-          graft.ops.Dedup.replaceInMinHashPairIndex(ups, id, text, table,
-            buckets, numHashes, bands)
-        val compacted = spark.catalog.tableExists(table) && {
-          val (_, _, _, deadBp) = graft.io.IndexMaintenance
-            .tombstoneStats(spark, table, "doc_id")
-          val fire = deadBp >= maxDeadBp
-          if (fire)
-            graft.ops.Dedup.compactMinHashPairIndex(spark, table, buckets)
-          fire
-        }
-        onBatch(bid, compacted)
-      }
-    }
+    cdcMaintenanceWriter(stream, "minHashPairMaintenanceWriter", id, text,
+      op, table, orderCol)(
+      (spark, dels) => graft.ops.Dedup.deleteFromMinHashPairIndex(spark,
+        table, dels, id),
+      ups => graft.ops.Dedup.replaceInMinHashPairIndex(ups, id, text,
+        table, buckets, numHashes, bands),
+      spark => compactPairIfDead(spark, table, maxDeadBp) {
+        graft.ops.Dedup.compactMinHashPairIndex(spark, table, buckets)
+      })(onBatch)
 
   /** 5-gram LADDER LM scoring at ingest — the streaming form of
     * [[graft.ops.TextAnalysis.ladderLmScore]] (q248; r15 verdict item
@@ -1657,135 +1262,6 @@ object StatefulOps {
       .agg(count(lit(1)).as("n_ngrams"),
         sum(col("__c")).as("total_cost"))
       .withColumn("avg_cost_q", expr("total_cost div n_ngrams"))
-
-  /** Min-K% Prob over the ladder at ingest — the streaming twin of
-    * [[graft.ops.TextAnalysis.minKProbScoreLadder]] (q249) in the
-    * [[minKProbWriter]] posture: the per-doc top-k% selection window
-    * sees whole documents in single rows, so each micro-batch scores
-    * independently and batch parity holds by construction — the
-    * membership/leak alarm at the deepest trained order, wired where
-    * documents arrive. */
-  def minKProbLadderWriter(stream: DataFrame, id: String, text: String,
-      ladder: Seq[Seq[(String, Long)]], oovCost: Long,
-      scaleBits: Int = 12, kPct: Int = 20)(
-      process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty)
-        process(graft.ops.TextAnalysis.minKProbScoreLadder(batch, id,
-          text, ladder, oovCost, scaleBits, kPct), bid)
-    }
-
-  /** Min-K% Prob scoring at ingest — the streaming twin of
-    * [[graft.ops.TextAnalysis.minKProbScore]] (the q112/q123 writer
-    * posture): the trained LM is a SUNK artifact, each micro-batch's
-    * documents score independently (the per-doc window sees whole docs
-    * in single rows, so batch parity holds by construction) — the
-    * membership/leak alarm wired where documents arrive. */
-  def minKProbWriter(stream: DataFrame, id: String, text: String,
-      costs: Seq[(String, String, Long)], oovCost: Long,
-      kPct: Int = 20)(
-      process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty)
-        process(graft.ops.TextAnalysis.minKProbScore(batch, id, text,
-          costs, oovCost, kPct), bid)
-    }
-
-  /** PII redaction at ingest — the streaming twin of
-    * [[graft.ops.TextAnalysis.redactFull]] (the minKProbWriter
-    * posture): each micro-batch's documents redact independently
-    * (row-local regexp chains, so batch parity holds by construction) —
-    * the hygiene gate wired where documents arrive, composable in
-    * front of the curation writer the way the batch op fronts the
-    * funnel. `process` receives the batch with the six audit counts
-    * and the `redacted` column. */
-  def redactionWriter(stream: DataFrame, text: String)(
-      process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty)
-        process(graft.ops.TextAnalysis.redactFull(batch, text), bid)
-    }
-
-  /** Validated-PII redaction at ingest — the streaming twin of the
-    * [[graft.ops.TextAnalysis.creditCardRedact]] →
-    * [[graft.ops.TextAnalysis.ibanRedact]] chain (cards claim their
-    * spans first — both surfaces are digit runs, and a card never
-    * parses as an IBAN or vice versa after replacement): each
-    * micro-batch redacts independently (row-local extraction +
-    * candidate-bounded checksum folds, batch parity by construction).
-    * `process` receives the batch with `(n_card_candidates, n_cards,
-    * n_iban_candidates, n_ibans, redacted)` — `redacted` carries both
-    * replacements. */
-  def validatedPiiWriter(stream: DataFrame, id: String, text: String)(
-      process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty) {
-        val cards = graft.ops.TextAnalysis
-          .creditCardRedact(batch, id, text)
-          .withColumnRenamed("redacted", "__afterCards")
-        val both = graft.ops.TextAnalysis
-          .ibanRedact(cards, id, "__afterCards")
-          .drop("__afterCards")
-        process(both, bid)
-      }
-    }
-
-  /** Distribution-shift monitoring at ingest — the streaming twin of
-    * [[graft.ops.Curation.histogramShift]] in the writer posture: each
-    * micro-batch is the CANDIDATE corpus, judged against the frozen
-    * REFERENCE snapshot (the distribution the pipeline was tuned on);
-    * a sudden |dev_ppm| spike at ingest means the upstream source
-    * changed (new crawl mix, encoder swap, corrupted batch) — caught
-    * before it pollutes an index build or a trained gate. Exact
-    * integer ppm shares per batch; parity with the batch op by
-    * construction. `process` receives `(bucket, n_ref, n_cand,
-    * ref_ppm, cand_ppm, dev_ppm)` rows. */
-  def histogramShiftWriter(stream: DataFrame, ref: DataFrame,
-      value: String, bucketWidth: Long)(
-      process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty)
-        process(graft.ops.Curation.histogramShift(ref, batch, value,
-          bucketWidth), bid)
-    }
-
-  /** Paragraph boilerplate gate at ingest — the streaming twin of
-    * [[graft.ops.Dedup.dropFrequentParagraphs]] in the frozen-artifact
-    * posture ([[graft.ops.Dedup.dropFrequentParagraphsAgainst]]): each
-    * arriving document is rewritten without the paragraphs the
-    * REFERENCE corpus holds in more than `maxDf` documents (cookie
-    * banners, nav bars — the within-page repetition document-level
-    * dedup cannot see), BEFORE it reaches dedup/quality stages whose
-    * signals boilerplate pollutes. Stream-static left join against the
-    * sunk [[graft.ops.Dedup.paragraphDfTable]] + row-local reassembly
-    * — parity with the batch call by construction; unseen paragraphs
-    * keep (frequency 0). `process` receives `(id, text_out, n_paras,
-    * n_dropped)`. */
-  def paragraphGateWriter(stream: DataFrame, paraDf: DataFrame,
-      id: String, text: String, maxDf: Long, sep: String = "\n")(
-      process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty)
-        process(graft.ops.Dedup.dropFrequentParagraphsAgainst(batch, id,
-          text, paraDf, maxDf, sep), bid)
-    }
-
-  /** Cross-corpus span excision at ingest — the streaming twin of
-    * [[graft.ops.Dedup.exciseNewAgainst]] (each arriving document
-    * loses the token spans it shares with the FROZEN keeper corpus;
-    * stream-static by nature since the keeper gram table is the sunk
-    * artifact — long-lived consumers should `.persist()` it; parity
-    * with the batch call by construction). `process` receives the
-    * batch's rewritten docs `(doc_id, text_out, n_spans,
-    * n_tokens_removed)`. */
-  def spanExciseWriter(stream: DataFrame, keeperGrams: DataFrame,
-      id: String, text: String, n: Int, minRun: Int)(
-      process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty)
-        process(graft.ops.Dedup.exciseNewAgainst(batch, keeperGrams,
-          id, text, n, minRun), bid)
-    }
 
   /** URL/domain curation at CRAWL INGEST — the streaming twin of
     * [[graft.ops.Curation.urlCurationVerdicts]] (web-corpus stage 0
@@ -1862,76 +1338,74 @@ object StatefulOps {
       canonicalizeUrls: Boolean = false)(
       process: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     require(maxPerDomain >= 1, s"bad maxPerDomain: $maxPerDomain")
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty) {
-        val spark = batch.sparkSession
-        registryKeySchemeGuard(spark, table, canonicalizeUrls)
-        // the registry key: raw URL or its canonical form (the batch
-        // operator's canonicalizeUrls twin — tracking-param/fragment/
-        // case/port/param-order re-crawls collapse to one admission)
-        val key =
-          if (canonicalizeUrls) graft.ops.Curation.canonicalUrl(col("__u"))
-          else col("__u")
-        val b = batch.select(col(id).as("doc_id"), col(url).as("__u"))
-          .withColumn("host", graft.ops.Curation.urlHost(col("__u")))
-          .withColumn("__uh", md5(key))
-        val wU = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("__uh")).orderBy(col("doc_id"))
-        val bb = b.withColumn("__urn", row_number().over(wU))
-        val haveReg = spark.catalog.tableExists(table)
-        if (haveReg) {
-          spark.catalog.refreshTable(table)
-          registryBidGuard(spark, table)
-        }
-        // same-bid rows are THIS batch's own prior (replayed) admits —
-        // excluding them reproduces the original run's registry state,
-        // so the verdict computation below is replay-stable
-        val prior =
-          if (haveReg) spark.table(table).filter(col("__bid") =!= bid)
-          else b.select(col("__uh"), col("host")).limit(0)
-            .withColumn("__bid", lit(bid))
-        val seen = prior.select(col("__uh"))
-        val quota = prior.groupBy(col("host"))
-          .agg(count(lit(1)).as("__c"))
-        val wH = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("host"))
-          .orderBy(graft.ops.Sampling.hash60(col("doc_id"), salt),
-            col("doc_id"))
-        // eager materialization BEFORE the registry append: the plan
-        // reads the registry (seen/quota), so a lazy re-evaluation for
-        // the verdicts join after the append would see this batch's own
-        // admitted rows and mis-report them as duplicates
-        val novel = bb.filter(col("__urn") === 1)
-          .join(seen, Seq("__uh"), "left_anti")
-          .join(quota, Seq("host"), "left")
-          .withColumn("__rn", row_number().over(wH))
-          .withColumn("__keep",
-            col("__rn") + coalesce(col("__c"), lit(0L)) <= maxPerDomain)
-          .localCheckpoint()
-        // the append anti-joins the FULL registry (same-bid included):
-        // on replay the batch's own committed admits are already there,
-        // so nothing duplicates; eager-materialized so the write never
-        // reads the table it appends to
-        val already =
-          if (haveReg) spark.table(table).select(col("__uh"))
-          else b.select(col("__uh")).limit(0)
-        val toAppend = novel.filter(col("__keep"))
-          .join(already, Seq("__uh"), "left_anti")
-          .select(col("__uh"), col("host"), col("doc_id"))
-          .withColumn("__bid", lit(bid))
-          .localCheckpoint()
-        toAppend
-          .write.mode("append").format("parquet").saveAsTable(table)
-        val verdicts = bb
-          .join(novel.select(col("doc_id"), col("__keep")),
-            Seq("doc_id"), "left")
-          .select(col("doc_id"), col("host"),
-            coalesce(col("__keep"), lit(false)).as("kept"),
-            when(col("__keep").isNull, lit("url_dup"))
-              .when(!col("__keep"), lit("domain_cap"))
-              .otherwise(lit(null).cast("string")).as("reason"))
-        process(verdicts, bid)
+    eachBatch(stream) { (batch, bid) =>
+      val spark = batch.sparkSession
+      registryKeySchemeGuard(spark, table, canonicalizeUrls)
+      // the registry key: raw URL or its canonical form (the batch
+      // operator's canonicalizeUrls twin — tracking-param/fragment/
+      // case/port/param-order re-crawls collapse to one admission)
+      val key =
+        if (canonicalizeUrls) graft.ops.Curation.canonicalUrl(col("__u"))
+        else col("__u")
+      val b = batch.select(col(id).as("doc_id"), col(url).as("__u"))
+        .withColumn("host", graft.ops.Curation.urlHost(col("__u")))
+        .withColumn("__uh", md5(key))
+      val wU = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("__uh")).orderBy(col("doc_id"))
+      val bb = b.withColumn("__urn", row_number().over(wU))
+      val haveReg = spark.catalog.tableExists(table)
+      if (haveReg) {
+        spark.catalog.refreshTable(table)
+        registryBidGuard(spark, table)
       }
+      // same-bid rows are THIS batch's own prior (replayed) admits —
+      // excluding them reproduces the original run's registry state,
+      // so the verdict computation below is replay-stable
+      val prior =
+        if (haveReg) spark.table(table).filter(col("__bid") =!= bid)
+        else b.select(col("__uh"), col("host")).limit(0)
+          .withColumn("__bid", lit(bid))
+      val seen = prior.select(col("__uh"))
+      val quota = prior.groupBy(col("host"))
+        .agg(count(lit(1)).as("__c"))
+      val wH = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("host"))
+        .orderBy(graft.ops.Sampling.hash60(col("doc_id"), salt),
+          col("doc_id"))
+      // eager materialization BEFORE the registry append: the plan
+      // reads the registry (seen/quota), so a lazy re-evaluation for
+      // the verdicts join after the append would see this batch's own
+      // admitted rows and mis-report them as duplicates
+      val novel = bb.filter(col("__urn") === 1)
+        .join(seen, Seq("__uh"), "left_anti")
+        .join(quota, Seq("host"), "left")
+        .withColumn("__rn", row_number().over(wH))
+        .withColumn("__keep",
+          col("__rn") + coalesce(col("__c"), lit(0L)) <= maxPerDomain)
+        .localCheckpoint()
+      // the append anti-joins the FULL registry (same-bid included):
+      // on replay the batch's own committed admits are already there,
+      // so nothing duplicates; eager-materialized so the write never
+      // reads the table it appends to
+      val already =
+        if (haveReg) spark.table(table).select(col("__uh"))
+        else b.select(col("__uh")).limit(0)
+      val toAppend = novel.filter(col("__keep"))
+        .join(already, Seq("__uh"), "left_anti")
+        .select(col("__uh"), col("host"), col("doc_id"))
+        .withColumn("__bid", lit(bid))
+        .localCheckpoint()
+      toAppend
+        .write.mode("append").format("parquet").saveAsTable(table)
+      val verdicts = bb
+        .join(novel.select(col("doc_id"), col("__keep")),
+          Seq("doc_id"), "left")
+        .select(col("doc_id"), col("host"),
+          coalesce(col("__keep"), lit(false)).as("kept"),
+          when(col("__keep").isNull, lit("url_dup"))
+            .when(!col("__keep"), lit("domain_cap"))
+            .otherwise(lit(null).cast("string")).as("reason"))
+      process(verdicts, bid)
     }
   }
 
@@ -1964,71 +1438,62 @@ object StatefulOps {
       text: String, table: String, buckets: Int)(
       process: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     require(buckets >= 1, s"bad buckets: $buckets")
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty) {
-        val spark = batch.sparkSession
-        val b = batch.select(col(id).as("doc_id"),
-          md5(col(text)).as("h"))
-        val wH = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("h")).orderBy(col("doc_id"))
-        val bb = b.withColumn("__rn", row_number().over(wH))
-        val haveReg = spark.catalog.tableExists(table)
-        if (haveReg) {
-          spark.catalog.refreshTable(table)
-          registryBidGuard(spark, table)
-        }
-        val prior =
-          if (haveReg) spark.table(table).filter(col("__bid") =!= bid)
-            .select(col("h"))
-          else b.select(col("h")).limit(0)
-        // eager (the plan reads the registry the append mutates)
-        val novel = bb.filter(col("__rn") === 1)
-          .join(prior, Seq("h"), "left_anti")
-          .select(col("doc_id"), col("h"))
-          .localCheckpoint()
-        val already =
-          if (haveReg) spark.table(table).select(col("h"))
-          else b.select(col("h")).limit(0)
-        val toAppend = novel.join(already, Seq("h"), "left_anti")
-          .select(col("h"), col("doc_id"))
-          .withColumn("__bid", lit(bid))
-          .localCheckpoint()
-        graft.io.Layout.appendBucketed(toAppend, table, "h", buckets)
-        val verdicts = bb
-          .join(novel.select(col("doc_id"), lit(true).as("__keep")),
-            Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("__keep"), lit(false)).as("kept"),
-            when(col("__keep").isNull, lit("exact_dup"))
-              .otherwise(lit(null).cast("string")).as("reason"))
-        process(verdicts, bid)
+    eachBatch(stream) { (batch, bid) =>
+      val spark = batch.sparkSession
+      val b = batch.select(col(id).as("doc_id"),
+        md5(col(text)).as("h"))
+      val wH = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("h")).orderBy(col("doc_id"))
+      val bb = b.withColumn("__rn", row_number().over(wH))
+      val haveReg = spark.catalog.tableExists(table)
+      if (haveReg) {
+        spark.catalog.refreshTable(table)
+        registryBidGuard(spark, table)
       }
+      val prior =
+        if (haveReg) spark.table(table).filter(col("__bid") =!= bid)
+          .select(col("h"))
+        else b.select(col("h")).limit(0)
+      // eager (the plan reads the registry the append mutates)
+      val novel = bb.filter(col("__rn") === 1)
+        .join(prior, Seq("h"), "left_anti")
+        .select(col("doc_id"), col("h"))
+        .localCheckpoint()
+      val already =
+        if (haveReg) spark.table(table).select(col("h"))
+        else b.select(col("h")).limit(0)
+      val toAppend = novel.join(already, Seq("h"), "left_anti")
+        .select(col("h"), col("doc_id"))
+        .withColumn("__bid", lit(bid))
+        .localCheckpoint()
+      graft.io.Layout.appendBucketed(toAppend, table, "h", buckets)
+      val verdicts = bb
+        .join(novel.select(col("doc_id"), lit(true).as("__keep")),
+          Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("__keep"), lit(false)).as("kept"),
+          when(col("__keep").isNull, lit("exact_dup"))
+            .otherwise(lit(null).cast("string")).as("reason"))
+      process(verdicts, bid)
     }
   }
 
-  /** CDC maintenance for the maxsim SQ8 PAIR index — the late-
-    * interaction twin of [[postingsMaintenanceWriter]], over the r13
-    * [[graft.ops.Similarity.saveMaxSimSq8Index]] lifecycle: each
-    * micro-batch carries commands `(id, vecs, op)` with `vecs` the
-    * doc's FULL token bag (`array<array<float>>` — one row per doc
-    * command, so multi-token docs never split across rows) and op ∈
-    * {"upsert", "delete"}; deletes tombstone BOTH tables through the
-    * one shared sidecar, upserts run
-    * [[graft.ops.Similarity.replaceInMaxSimSq8Index]] (replace ≡
-    * delete + append — new ids are a plain append, updated ids
-    * supersede), and after every batch the token table's dead share
-    * drives threshold compaction of the PAIR
-    * ([[graft.ops.Similarity.compactMaxSimSq8Index]] — both tables
-    * swap, serving identical across it). Multiple commands per id per
-    * batch collapse LAST-WRITER-WINS by `orderCol` with the
-    * deterministic (orderCol, op, vecs) tie-break; without `orderCol`
-    * the writer requires one command per id per batch, loudly.
-    * `onBatch(batchId, compacted)` reports the compaction. Serving
-    * reads go through [[graft.ops.Similarity.maxSimSearchSq8]] (live
-    * views + pair-consistency check) — and, standard cross-session
-    * semantics, a reader session other than the micro-batch's clone
-    * must `refreshTable` after maintenance batches. O(batch) per
-    * batch except the threshold-gated compaction. */
+  /** CDC maintenance for the maxsim SQ8 PAIR index
+    * ([[graft.ops.Similarity.saveMaxSimSq8Index]]'s lifecycle) on the
+    * [[cdcMaintenanceWriter]] engine: commands `(id, vecs, op)` with
+    * `vecs` the doc's FULL token bag (`array<array<float>>` — one row
+    * per doc command, so multi-token docs never split across rows);
+    * deletes tombstone BOTH tables through the one shared sidecar,
+    * upserts explode the bag and run
+    * [[graft.ops.Similarity.replaceInMaxSimSq8Index]], and the token
+    * table's dead share drives compaction of the PAIR
+    * ([[graft.ops.Similarity.compactMaxSimSq8Index]]). An upsert whose
+    * bag is empty or NULL would VANISH in the explode — neither
+    * replacing nor deleting, stale rows keep serving — so the batch's
+    * winning upserts must all carry tokens; a removal is spelled
+    * op = 'delete'. Serving reads go through
+    * [[graft.ops.Similarity.maxSimSearchSq8]] (live views +
+    * pair-consistency check). */
   def maxSimMaintenanceWriter(stream: DataFrame, id: String,
       vecs: String, op: String, table: String, buckets: Int,
       lo: Array[Long], hi: Array[Long], scaleBits: Int = 12,
@@ -2036,70 +1501,25 @@ object StatefulOps {
       onBatch: (Long, Boolean) => Unit): DataStreamWriter[Row] = {
     require(maxDeadBp >= 1 && maxDeadBp <= 10000,
       s"maxDeadBp must be in [1, 10000], got $maxDeadBp")
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty) {
-        val spark = batch.sparkSession
-        // NULL ops must be caught explicitly (three-valued logic drops
-        // them from a bare !isin — the postingsMaintenanceWriter gap
-        // repeated here, r13 advice)
-        val bad = batch.filter(col(op).isNull ||
-          !col(op).isin("upsert", "delete"))
-        require(bad.isEmpty,
-          s"maxSimMaintenanceWriter: unknown op values " +
-            s"${bad.select(col(op)).distinct().collect().mkString(",")}")
-        // an upsert with no token vectors would VANISH in the explode
-        // below — neither replacing nor deleting, stale rows keep
-        // serving. A delete is spelled "delete"; reject the ambiguity
-        // loudly (r13 advice).
-        val emptyUps = batch.filter(col(op) === "upsert" &&
-          (col(vecs).isNull || size(col(vecs)) === 0))
+    cdcMaintenanceWriter(stream, "maxSimMaintenanceWriter", id, vecs, op,
+      table, orderCol)(
+      (spark, dels) => graft.ops.Similarity.deleteFromMaxSimSq8Index(spark,
+        table, dels, id),
+      { ups =>
+        val emptyUps = ups.filter(col(vecs).isNull || size(col(vecs)) === 0)
         require(emptyUps.isEmpty,
           "maxSimMaintenanceWriter: upsert with an empty/NULL token " +
             "bag for id(s) " +
             emptyUps.select(col(id)).limit(5).collect().mkString(",") +
             " — an upsert must carry the doc's full token bag; spell " +
             "a removal as op = 'delete'")
-        val cmds = orderCol match {
-          case Some(oc) =>
-            batch.groupBy(col(id))
-              .agg(max_by(struct(col(vecs).as("__v"), col(op).as("__o")),
-                struct(col(oc), col(op), col(vecs))).as("__c"))
-              .select(col(id), col("__c.__v").as(vecs),
-                col("__c.__o").as(op))
-          case None =>
-            val dup = batch.groupBy(col(id)).agg(count(lit(1)).as("__n"))
-              .filter(col("__n") > 1)
-            require(dup.isEmpty,
-              "maxSimMaintenanceWriter: multiple commands for id(s) " +
-                dup.select(col(id)).limit(5).collect().mkString(",") +
-                " in one micro-batch with no orderCol — pass orderCol " +
-                "so the batch can collapse to the latest command per id")
-            batch
-        }
-        val dels = cmds.filter(col(op) === "delete").select(col(id))
-        val ups = cmds.filter(col(op) === "upsert")
-          .select(col(id), explode(col(vecs)).as("__tok"))
-        // deletes before the pair exists are no-ops — running them
-        // would leave an orphan sidecar and the dead-share probe would
-        // throw on the missing token table, failing the stream on a
-        // legal delete-only first batch (r13 advice)
-        if (!dels.isEmpty && spark.catalog.tableExists(table))
-          graft.ops.Similarity.deleteFromMaxSimSq8Index(spark, table,
-            dels, id)
-        if (!ups.isEmpty)
-          graft.ops.Similarity.replaceInMaxSimSq8Index(ups, id, "__tok",
-            table, buckets, lo, hi, scaleBits)
-        val fire = spark.catalog.tableExists(table) && {
-          val (_, _, _, deadBp) = graft.io.IndexMaintenance
-            .tombstoneStats(spark, table, "doc_id")
-          deadBp >= maxDeadBp
-        }
-        if (fire)
-          graft.ops.Similarity.compactMaxSimSq8Index(spark, table,
-            buckets)
-        onBatch(bid, fire)
-      }
-    }
+        graft.ops.Similarity.replaceInMaxSimSq8Index(
+          ups.select(col(id), explode(col(vecs)).as("__tok")), id, "__tok",
+          table, buckets, lo, hi, scaleBits)
+      },
+      spark => compactPairIfDead(spark, table, maxDeadBp) {
+        graft.ops.Similarity.compactMaxSimSq8Index(spark, table, buckets)
+      })(onBatch)
   }
 
   /** Streaming activity-fingerprint maintenance — the ingest-time twin
@@ -2136,97 +1556,46 @@ object StatefulOps {
     require(maxPartialsFactor >= 2,
       s"maxPartialsFactor must be >= 2 (1 would compact every batch), " +
         s"got $maxPartialsFactor")
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty) {
-        val spark = batch.sparkSession
-        if (spark.catalog.tableExists(countsTable + "__precompact"))
-          graft.io.IndexMaintenance.guardCrashState(spark, countsTable)
-        graft.ops.EventOps.hourCounts(batch, key, ts)
-          .write.mode("append").format("parquet")
-          .saveAsTable(countsTable)
-        spark.catalog.refreshTable(countsTable)
-        // physical rows + live (key, hour) groups in ONE collect (the
-        // union-collect job-merge discipline)
-        val stats = spark.table(countsTable)
+    eachBatch(stream) { (batch, bid) =>
+      val spark = batch.sparkSession
+      if (spark.catalog.tableExists(countsTable + "__precompact"))
+        graft.io.IndexMaintenance.guardCrashState(spark, countsTable)
+      graft.ops.EventOps.hourCounts(batch, key, ts)
+        .write.mode("append").format("parquet")
+        .saveAsTable(countsTable)
+      spark.catalog.refreshTable(countsTable)
+      // physical rows + live (key, hour) groups in ONE collect (the
+      // union-collect job-merge discipline)
+      val stats = spark.table(countsTable)
+        .agg(count(lit(1)).as("n"))
+        .select(lit("phys").as("side"), col("n"))
+        .unionByName(spark.table(countsTable)
+          .select(col("__k"), col("hr")).distinct()
           .agg(count(lit(1)).as("n"))
-          .select(lit("phys").as("side"), col("n"))
-          .unionByName(spark.table(countsTable)
-            .select(col("__k"), col("hr")).distinct()
-            .agg(count(lit(1)).as("n"))
-            .select(lit("groups").as("side"), col("n")))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val (physical, groups) = (stats("phys"), stats("groups"))
-        if (groups > 0 && physical > maxPartialsFactor * groups) {
-          val tmp = countsTable + "__compact"
-          val old = countsTable + "__precompact"
-          spark.sql(s"DROP TABLE IF EXISTS `$tmp`")
-          spark.sql(s"DROP TABLE IF EXISTS `$old`")
-          spark.table(countsTable)
-            .groupBy(col("__k"), col("hr"))
-            .agg(sum(col("cnt")).as("cnt"))
-            .write.format("parquet").saveAsTable(tmp)
-          spark.sql(s"ALTER TABLE `$countsTable` RENAME TO `$old`")
-          spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$countsTable`")
-          spark.sql(s"DROP TABLE `$old`")
-          spark.catalog.refreshTable(countsTable)
-        }
-        val merged = spark.table(countsTable)
+          .select(lit("groups").as("side"), col("n")))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val (physical, groups) = (stats("phys"), stats("groups"))
+      if (groups > 0 && physical > maxPartialsFactor * groups) {
+        val tmp = countsTable + "__compact"
+        val old = countsTable + "__precompact"
+        spark.sql(s"DROP TABLE IF EXISTS `$tmp`")
+        spark.sql(s"DROP TABLE IF EXISTS `$old`")
+        spark.table(countsTable)
           .groupBy(col("__k"), col("hr"))
           .agg(sum(col("cnt")).as("cnt"))
-        process(graft.ops.EventOps.fingerprintFromHourCounts(merged,
-          key), bid)
+          .write.format("parquet").saveAsTable(tmp)
+        spark.sql(s"ALTER TABLE `$countsTable` RENAME TO `$old`")
+        spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$countsTable`")
+        spark.sql(s"DROP TABLE `$old`")
+        spark.catalog.refreshTable(countsTable)
       }
+      val merged = spark.table(countsTable)
+        .groupBy(col("__k"), col("hr"))
+        .agg(sum(col("cnt")).as("cnt"))
+      process(graft.ops.EventOps.fingerprintFromHourCounts(merged,
+        key), bid)
     }
   }
-
-  /** Typo-tolerant BM25 serving — the full "did-you-mean" composition
-    * from TWO persisted artifacts (the [[bm25ServeWriter]] posture):
-    * each query micro-batch rewrites through the bucket-pruned
-    * [[graft.ops.TextAnalysis.saveSymSpellIndex]] key table, then ranks
-    * with the untouched bm25Search over the postings index. Parity with
-    * the batch [[graft.ops.TextAnalysis.fuzzyBm25SearchFromIndex]] by
-    * construction. */
-  def fuzzyBm25ServeWriter(stream: DataFrame, postings: DataFrame,
-      keyTable: String, qid: String, qtext: String, k: Int,
-      maxDist: Int = 1, scaleBits: Int = 12, maxQueryTerms: Int = 10000,
-      maxTermLen: Int = 32)(
-      process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty)
-        process(graft.ops.TextAnalysis.fuzzyBm25SearchFromIndex(
-          postings, keyTable, batch, qid, qtext, k, maxDist, scaleBits,
-          maxQueryTerms, maxTermLen), bid)
-    }
-
-  /** BM25F serving from a persisted FIELDED index
-    * ([[graft.ops.TextAnalysis.saveFieldedPostingsIndex]] — sunk build
-    * cost): each query micro-batch runs the unmodified
-    * [[graft.ops.TextAnalysis.bm25fSearch]] — the [[bm25ServeWriter]]
-    * posture for multi-field retrieval, parity by construction. */
-  def bm25fServeWriter(stream: DataFrame, postings: DataFrame,
-      qid: String, qtext: String, k: Int, weights: Seq[(String, Long)],
-      scaleBits: Int = 12, maxQueryTerms: Int = 10000)(
-      process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty)
-        process(graft.ops.TextAnalysis.bm25fSearch(postings, batch, qid,
-          qtext, k, weights, scaleBits, maxQueryTerms), bid)
-    }
-
-  /** Semantic decontamination at stream ingest
-    * ([[graft.ops.Similarity.semanticDecontaminate]] per micro-batch
-    * against the STATIC holdout/benchmark embeddings — stream-static by
-    * nature since the benchmark set is fixed before the crawl; parity
-    * by construction, the [[blocklistGateWriter]] posture for the
-    * embedding-space gate). */
-  def semanticDecontamWriter(stream: DataFrame, id: String, vec: String,
-      holdout: DataFrame, hvec: String, threshold: Double)(
-      process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty)
-        process(graft.ops.Similarity.semanticDecontaminate(batch, id,
-          vec, holdout, hvec, threshold), bid)
-    }
 
   /** Ingest-time pretraining curation — the streaming composition of
     * [[graft.ops.Curation.pretrainingFunnel]] (r10 verdict item 2):
@@ -2240,8 +1609,8 @@ object StatefulOps {
     *
     * Contracts (each one the already-established posture of the
     * corresponding standalone streaming op):
-    *  - TRAINED artifacts are SUNK inputs (the persisted-artifact rule,
-    *    [[boilerplateFilterWriter]]): the boilerplate line set
+    *  - TRAINED artifacts are SUNK inputs (the persisted-artifact
+    *    rule): the boilerplate line set
     *    ([[graft.ops.Dedup.boilerplateLineSet]]) and the benchmark
     *    corpus (decontamination grams derive from it once here) are
     *    given, never re-trained mid-stream;
@@ -2403,11 +1772,9 @@ final class CurationFunnelStream private[streaming](
     process(s8, bid)
   }
 
-  /** The foreachBatch sink; start it like any other writer. */
+  /** The funnel's micro-batch sink; start it like any other writer. */
   def writer: DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      if (!batch.isEmpty) onBatch(batch, bid)
-    }
+    StatefulOps.eachBatch(stream)(onBatch)
 
   /** The accumulated curated corpus `(doc_id, ct, src)` — stage-8
     * survivors of every batch so far. */

@@ -117,6 +117,14 @@ class AppPipelineSpec extends SparkSpec {
       def tiles = spark.read.parquet(s"$outDir/tiles")
         .select("source_id", "frame_id").as[(Int, Long)].collect().toMap
       assert(tiles == Map(1 -> 2L, 2 -> 1L), "latest frame per source wins")
+      // the pipeline publishes the batch as ONE part-file, and the wall
+      // reads each of its micro-batches from the source once: its input
+      // rows equal the batch's three valid events, not a multiple
+      def detectionFiles = Files.list(Paths.get(s"$outDir/detections"))
+        .toArray.map(_.toString).count(_.endsWith(".parquet"))
+      assert(detectionFiles == 1, s"one part-file per batch, got $detectionFiles")
+      assert(wall.lastProgress.numInputRows == 3L,
+        s"wall read its batch ${wall.lastProgress.numInputRows} rows for 3 events")
       // labels carried for the renderer (E3)
       val label = spark.read.parquet(s"$outDir/tiles")
         .filter($"source_id" === 1).select("labels").as[String].collect().head

@@ -35,6 +35,13 @@ class AsOfCoProcessSpec extends SparkSpec {
       frames.addData(fr(13, "2024-01-01 00:00:03", 1))
       awaitCond("frame 13 sees overwritten event 12")(
         rows.get(13L).exists(_.contains(12L)))
+      // frame 101 (seq 203) > event 100 (seq 200): sees it however the
+      // adds split across micro-batches — from state when the event's
+      // batch ran first (the single-batch case has its own test)
+      events.addData(ev(100, "2024-01-01 00:00:10", 3, 3.0))
+      frames.addData(fr(101, "2024-01-01 00:00:11", 3))
+      awaitCond("frame 101 sees event 100")(
+        rows.get(101L).exists(_.contains(100L)))
     } finally q.stop()
   }
 
@@ -64,43 +71,6 @@ class AsOfCoProcessSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("transformWithState form pairs identically (pairing, bare, interleaving)") {
-    implicit val ctx = spark.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val oldProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val frames = MemoryStream[Frame]
-    val events = MemoryStream[KeyedEvent]
-    val q = StatefulOps.asOfCoProcessTws(frames.toDS(), events.toDS(), ttlMs = 60000)
-      .writeStream.format("memory").queryName("coproc_tws").outputMode("append").start()
-    try {
-      def rows = spark.table("coproc_tws").as[PairedFrame].collect()
-        .map(p => p.frame_id -> p.event_id).toMap
-      events.addData(ev(10, "2024-01-01 00:00:00", 1, 1.0))
-      frames.addData(fr(50, "2024-01-01 00:00:01", 1), fr(60, "2024-01-01 00:00:01", 2))
-      awaitCond("frame 50 paired, frame 60 bare")(
-        rows.get(50L).contains(Some(10L)) && rows.get(60L).contains(None))
-      events.addData(ev(12, "2024-01-01 00:00:02", 1, 2.0))
-      frames.addData(fr(13, "2024-01-01 00:00:03", 1))
-      awaitCond("frame 13 sees overwritten event 12")(
-        rows.get(13L).exists(_.contains(12L)))
-      // frame 101 (seq 203) > event 100 (seq 200): sees it regardless of
-      // how the adds split across micro-batches (no intra-batch race —
-      // the deterministic single-batch case has its own AvailableNow test)
-      events.addData(ev(100, "2024-01-01 00:00:10", 3, 3.0))
-      frames.addData(fr(101, "2024-01-01 00:00:11", 3))
-      awaitCond("frame 101 sees event 100")(
-        rows.get(101L).exists(_.contains(100L)))
-    } finally {
-      q.stop()
-      oldProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
-  }
-
   test("supervisor records crashes with exceptions, ignores clean stops") {
     implicit val ctx = spark.sqlContext
     @volatile var failed: Option[String] = None
@@ -114,13 +84,18 @@ class AsOfCoProcessSpec extends SparkSpec {
         .queryName("sup_ok").outputMode("append").start()
       in.addData(ev(1, "2024-01-01 00:00:00", 1, 1.0))
       ok.processAllAvailable(); ok.stop(); ok.awaitTermination()
-      // crash: foreachBatch throws
-      val bad = in.toDF().writeStream.foreachBatch {
-        (_: org.apache.spark.sql.DataFrame, _: Long) =>
-          throw new RuntimeException("boom")
+      // crash: the micro-batch stage's process throws. Specs run one at
+      // a time, so an RDD persisted now that was not before is the
+      // failed batch's cache, which eachBatch must have released.
+      val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+      val bad = StatefulOps.eachBatch(in.toDF()) { (batch, _) =>
+        batch.count()
+        throw new RuntimeException("boom")
       }.start()
       in.addData(ev(2, "2024-01-01 00:00:01", 1, 1.0))
       intercept[Exception] { bad.processAllAvailable() }
+      assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore,
+        "the failed batch's cache must be released")
       // listener delivery is async
       val deadline = System.currentTimeMillis + 20000
       while (failed.isEmpty && System.currentTimeMillis < deadline) Thread.sleep(100)
