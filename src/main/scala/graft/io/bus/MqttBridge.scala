@@ -8,12 +8,14 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
-/** A loopback MQTT 3.1.1 broker-bridge: the [[SocketBridge]] layering
-  * (network transport → atomic spool → exactly-once `graft-bus`
-  * connector) with the REAL broker wire protocol on top, so a client
-  * that today talks to the reference's broker (paho-mqtt,
-  * processor/mqtt_sink.py:104-117, wall/mqtt_listener.py:60-69) connects
-  * to this bridge unchanged.
+/** A loopback MQTT 3.1.1 broker-bridge: network transport → atomic
+  * spool → exactly-once `graft-bus` connector, with the REAL broker wire
+  * protocol on the transport, so a client that today talks to the
+  * reference's broker (paho-mqtt, processor/mqtt_sink.py:104-117,
+  * wall/mqtt_listener.py:60-69) connects to this bridge unchanged. The
+  * spool is there because a Spark streaming source must RE-SERVE any
+  * uncommitted offset range after a restart, which a raw socket cannot:
+  * durability is the spool, exactly-once is the connector's offset log.
   *
   * Served: CONNECT/CONNACK (protocol-level check, rc 0x01 on a non-3.1.1
   * client), PUBLISH QoS 0 and 1, SUBSCRIBE/SUBACK with `+`/`#` wildcard

@@ -298,17 +298,16 @@ object Dedup {
       .select("existing_id", "incoming_id", "jac")
   }
 
-  /** The static side of
-    * [[graft.streaming.StatefulOps.streamingIncrementalMinHash]]: the
-    * existing corpus as one row per (band key, doc), carrying the doc's
-    * shingles for in-join verification — `(band, existing_id, ex_sh)`.
+  /** The existing corpus as one row per (band key, doc), carrying the
+    * doc's shingles for in-join verification — `(band, existing_id,
+    * ex_sh)`: the table behind [[saveMinHashIndex]] and the pair index.
     * Carrying the shingle array through the band explode duplicates it
-    * ×bands, a width trade the streaming form accepts so the verdict is
-    * ONE stream-static equi-join (no second verification join per
-    * micro-batch); the batch operator ([[incrementalMinHashPairs]])
-    * keeps bands and shingles separate instead. Long-lived consumers
-    * should `.persist()` the result — a streaming query re-plans the
-    * static side every micro-batch. */
+    * ×bands, a width trade that makes the verdict ONE equi-join (no
+    * second verification join); the one-shot batch operator
+    * ([[incrementalMinHashPairs]]) keeps bands and shingles separate
+    * instead, and is what a live feed runs per micro-batch through
+    * [[graft.streaming.StatefulOps.eachBatch]]. Long-lived consumers
+    * should `.persist()` the result. */
   def minHashBandTable(df: DataFrame, id: String, text: String,
                        numHashes: Int, bands: Int): DataFrame = {
     require(bands >= 1 && numHashes >= bands && numHashes % bands == 0,
@@ -1062,12 +1061,13 @@ object Dedup {
         min(col("train_id")).as("sample_train_id"))
   }
 
-  /** The train side of [[contaminationCheck]], exposed for reuse by the
-    * streaming form ([[graft.streaming.StatefulOps.streamingContaminationCheck]]):
-    * ONE row per distinct word-n-gram hash in the train corpus, with the
+  /** The train side of [[contaminationCheck]], exposed for reuse: ONE
+    * row per distinct word-n-gram hash in the train corpus, with the
     * smallest containing doc id. Join volume downstream is bounded by
-    * the distinct-gram inventory, not corpus size. Long-lived consumers
-    * (a streaming query re-reads the static side every micro-batch)
+    * the distinct-gram inventory, not corpus size. A held-out stream is
+    * checked by running [[contaminationCheck]] itself on it, directly
+    * or per micro-batch through
+    * [[graft.streaming.StatefulOps.eachBatch]]. Long-lived consumers
     * should `.persist()` the result. */
   def trainGramInventory(train: DataFrame, id: String, text: String,
                          n: Int): DataFrame =
@@ -1809,20 +1809,6 @@ object Dedup {
         bit_count(col("x.__fp").bitwiseXOR(col("y.__fp"))).as("hd"))
       .distinct()
       .filter(col("hd") <= maxDist)
-  }
-
-  /** The pre-banded static side for streaming Hamming joins
-    * ([[graft.streaming.StatefulOps.streamingImageNearDup]]): the
-    * accumulated corpus's fingerprints exploded to
-    * `(existing_id, ex_fp, ck, cv)` band rows — compute once, persist,
-    * and let every micro-batch equi-join it. */
-  def hammingBandTable(fp: DataFrame, id: String, fpCol: String, bits: Int,
-                       maxDist: Int): DataFrame = {
-    require(bits >= 1 && bits <= 64, s"bits must be in [1,64]: $bits")
-    require(maxDist >= 0 && maxDist < bits, s"bad maxDist $maxDist for $bits bits")
-    hammingKeyed(fp, id, fpCol, bits, maxDist + 1)
-      .select(col("__doc").as("existing_id"), col("__fp").as("ex_fp"),
-        col("ck"), col("cv"))
   }
 
   /** Incremental form of [[hammingPairs]]: pairs BETWEEN an existing

@@ -186,8 +186,7 @@ object Multimodal {
   }
 
   /** Row-local dHash of one encoded image blob — the shared kernel of
-    * [[perceptualHash]] and the streaming form
-    * ([[graft.streaming.StatefulOps.streamingImageNearDup]]). */
+    * [[perceptualHash]] and the per-frame video hashes. */
   private[graft] def dhashOf(blob: Array[Byte], hashW: Int, hashH: Int): Long = {
     val w = hashW + 1
     val src = decodeImageBlob(blob)

@@ -1159,9 +1159,9 @@ object Similarity {
 
   /** The static index table of IVF-PQ: `(cell, c_id, codes)` — each
     * corpus vector's coarse cell plus its PQ codes. Built once, reused
-    * by [[ivfPqTopK]] and the streaming search
-    * ([[graft.streaming.StatefulOps.streamingIvfPqSearch]], which
-    * re-plans the static side per micro-batch — persist it). */
+    * by [[ivfPqTopK]]; a live query stream is served by running
+    * [[ivfPqTopK]] per micro-batch through
+    * [[graft.streaming.StatefulOps.eachBatch]]. */
   def ivfPqIndex(corpus: DataFrame, id: String, vec: String,
                  cent: DataFrame, codebooks: DataFrame, dim: Int,
                  m: Int): DataFrame = {
@@ -1169,37 +1169,6 @@ object Similarity {
       norm(col(vec)).as("c_norm"))
     pqEncode(corpus, id, vec, codebooks, dim, m)
       .join(assignCells(c, cent).select(col("c_id"), col("cell")), "c_id")
-  }
-
-  /** ROW-LOCAL probe-cell selection from a COLLECTED centroid table —
-    * the streaming-side form of [[ivfPqTopK]]'s probes (identical
-    * expression shape: sort by (−cosine, cent_id), take nProbe): the
-    * trained centroids are tiny literal artifacts, so each query row
-    * picks its cells with k unrolled codegen'd dot products and one
-    * bounded array_sort — no aggregation, which is what makes the
-    * streaming search stateless. Returns `array<cent_id>`. */
-  def adcProbeCells(qvec: Column, cent: Seq[(Long, Seq[Float], Double)],
-                    nProbe: Int): Column = {
-    require(cent.nonEmpty, "need at least one centroid")
-    val qn = norm(qvec)
-    val scored = cent.map { case (cid, v, nrm) =>
-      struct((-(dot(qvec, typedLit(v)) / (qn * lit(nrm)))).as("n"),
-        lit(cid).as("cent_id"))
-    }
-    slice(array_sort(array(scored: _*)), 1, nProbe).getField("cent_id")
-  }
-
-  /** ROW-LOCAL ADC lookup table from a COLLECTED codebook — the
-    * streaming-side form of [[ivfPqTopK]]'s `dt` (identical expression:
-    * slot sub·ksub+code = ⟨query subvector, codeword⟩, unrolled as
-    * m·ksub codegen'd dots in slot order). Feeds
-    * [[graft.functions.PqAdc]]. */
-  def adcLookupTable(qvec: Column, cb: Seq[(Int, Int, Seq[Float])],
-                     dsub: Int): Column = {
-    require(cb.nonEmpty, "need a non-empty codebook")
-    array(cb.sortBy(t => (t._1, t._2)).map { case (sub, _, v) =>
-      dot(slice(qvec, sub * dsub + 1, dsub), typedLit(v))
-    }: _*)
   }
 
   /** IVF-PQ top-k — the two optimizations composed, the shape a
@@ -2463,9 +2432,9 @@ object Similarity {
     * posture applied to the dense side) and append it to the bucketed
     * table, preserving the exchange-free search property
     * ([[graft.io.Layout.appendBucketed]]). Vectors outside the trained
-    * SQ8 bounds clamp at encode (the
-    * [[graft.streaming.StatefulOps.streamingSq8Audit]] err2 signal
-    * says when drift warrants a retrain + [[saveIvfSq8Index]] rebuild).
+    * SQ8 bounds clamp at encode ([[sq8Encode]]'s err2, run on the
+    * arriving stream directly, says when drift warrants a retrain +
+    * [[saveIvfSq8Index]] rebuild).
     * Search-after-append ≡ search over a full rebuild, bit for bit
     * (SimilaritySpec pins it). */
   def appendIvfSq8Index(batch: DataFrame, id: String, vec: String,

@@ -1282,9 +1282,9 @@ object TextAnalysis {
     bpeTokenCounts(df, id, text, collectMerges(df, text, k))
 
   /** The word → subword-count PRICING DICTIONARY under a trained merge
-    * list — the vocab-bounded static side [[bpeTokenCounts]] and the
-    * streaming ingest pricer
-    * ([[graft.streaming.StatefulOps.streamingBpePricing]]) broadcast.
+    * list — the vocab-bounded static side [[bpeTokenCounts]]
+    * broadcasts, also when it prices a live stream per micro-batch
+    * through [[graft.streaming.StatefulOps.eachBatch]].
     * Output: `(w, n_sub)`. */
   def bpePricingDict(corpus: DataFrame, text: String,
                      merges: Seq[(String, String)]): DataFrame =
@@ -4413,8 +4413,9 @@ object TextAnalysis {
     * [[bpeTokenCounts]]'s token-less convention. Output:
     * `(id, n_ngrams, total_cost, avg_cost_q)`, all exact int64. */
   /** The trained LM cost table as a DataFrame `(w1, w2, cost)` — the
-    * broadcast side [[bigramLmScore]] and the ingest gate
-    * ([[graft.streaming.StatefulOps.streamingLmScore]]) join. */
+    * broadcast side [[bigramLmScore]] joins, also when it gates a live
+    * stream per micro-batch through
+    * [[graft.streaming.StatefulOps.eachBatch]]. */
   def lmCostDict(spark: org.apache.spark.sql.SparkSession,
                  costs: Seq[(String, String, Long)]): DataFrame = {
     import spark.implicits._

@@ -43,7 +43,13 @@ case class FunnelProgress(user_id: Long, reached: Int, step_ts_us: Seq[Long])
   *    one the deterministic batch oracle uses). SURVEY.md §7.4(1).
   *  - TTL expiry is processing-time on read (wall/detection_cache.py:63-67)
   *    → `GroupStateTimeout.ProcessingTimeTimeout`, state dropped on
-  *    timeout. State size is O(keys), bounded by the TTL reaper. */
+  *    timeout. State size is O(keys), bounded by the TTL reaper.
+  *
+  * A batch operator that holds no state across micro-batches has no
+  * streaming form here: run it on the streaming DataFrame itself, or per
+  * micro-batch through [[StatefulOps.eachBatch]]. Each `streaming*`
+  * operator below keeps watermark-bounded or keyed state across
+  * micro-batches. */
 object StatefulOps {
 
   /** Latest event per key with TTL state (W1 + ST1). Emits the current
@@ -292,50 +298,6 @@ object StatefulOps {
       .dropDuplicatesWithinWatermark("__h")
       .drop("__h")
 
-  /** Streaming incremental near-dup detection — the ingest-time form of
-    * [[graft.ops.Dedup.incrementalMinHashPairs]] for a continuous feed:
-    * each arriving document is checked against a STATIC existing-corpus
-    * band table ([[graft.ops.Dedup.minHashBandTable]] — pass it
-    * persisted) and every verified near-dup pair is emitted once.
-    *
-    * Shape: the MinHash signature is computed ROW-LOCALLY on the stream
-    * side ([[graft.ops.Dedup.minHashSignature]], the executable spec the
-    * native batch aggregate is parity-pinned against — per-row HOF cost
-    * is the price of needing no stream-side aggregation); band keys
-    * explode statelessly; candidates come from ONE stream-static hash
-    * equi-join on the band key with the Jaccard check applied in-join
-    * (the static side carries the shingles); a pair matching in several
-    * bands collapses via `dropDuplicatesWithinWatermark` — the only
-    * state, bounded by the watermark, keyed by the pair. Same rounding
-    * and threshold discipline as batch, so verdicts agree exactly.
-    * Output: `(existing_id, incoming_id, jac)` in append mode. */
-  def streamingIncrementalMinHash(incoming: DataFrame, existingBands: DataFrame,
-                                  id: String, text: String, ts: String,
-                                  numHashes: Int, bands: Int, threshold: Double,
-                                  lateness: String): DataFrame = {
-    require(bands >= 1 && numHashes >= bands && numHashes % bands == 0,
-      s"need bands >= 1 and numHashes a positive multiple of bands " +
-        s"(got numHashes=$numHashes, bands=$bands)")
-    val rowsPerBand = numHashes / bands
-    val withSig = incoming
-      .withWatermark(ts, lateness)
-      .select(col(ts), col(id).as("incoming_id"),
-        graft.ops.Dedup.wordShingles(col(text)).as("__sh"))
-      .filter(size(col("__sh")) > 0)
-      .withColumn("__sig",
-        graft.ops.Dedup.minHashSignature(col("__sh"), numHashes))
-    val banded = withSig.select(col(ts), col("incoming_id"), col("__sh"),
-      explode(graft.ops.Dedup.lshBands(col("__sig"), bands, rowsPerBand))
-        .as("band"))
-    banded.join(existingBands, Seq("band")) // stream-static inner equi-join
-      .withColumn("jac",
-        round(graft.ops.Dedup.jaccard(col("__sh"), col("ex_sh")), 4))
-      .filter(col("jac") >= threshold)
-      .select(col(ts), col("existing_id"), col("incoming_id"), col("jac"))
-      .dropDuplicatesWithinWatermark("existing_id", "incoming_id")
-      .drop(ts)
-  }
-
   /** Streaming gap sessionization — the ingest-time form of
     * [[graft.ops.EventOps.sessionize]] on Structured Streaming's native
     * `session_window` (watermark-closed sessions, append mode, state
@@ -357,389 +319,30 @@ object StatefulOps {
         col("n_events"))
   }
 
-  /** Streaming edit-distance near-dup — the ingest-time form of
-    * [[graft.ops.Dedup.incrementalEditDistancePairs]]: arriving docs
-    * compute length + bucket row-locally, explode to the three adjacent
-    * length buckets statelessly, and probe a persisted corpus band table
-    * ([[graft.ops.Dedup.editDistBandTable]]) with ONE stream-static
-    * equi-join; verify is the same native Myers DP. Each cross pair
-    * matches exactly one band row, so the query is fully STATELESS (no
-    * watermark, no dedup state) and runs in append mode. Same banding
-    * and distance arithmetic as batch — verdicts agree exactly
-    * (StatefulOpsSpec pins the parity). Output:
-    * `(existing_id, incoming_id, dist)`. */
-  def streamingEditDistPairs(incoming: DataFrame, existingBands: DataFrame,
-                             id: String, text: String,
-                             within: Seq[String], maxLenDiff: Int,
-                             maxDist: Int): DataFrame =
-    graft.ops.Dedup.crossEditPairs(
-      graft.ops.Dedup.edProbeSide(incoming, id, text, within, maxLenDiff),
-      existingBands, within, maxLenDiff, maxDist)
-
-  /** Streaming perceptual-hash image near-dup — the ingest-time form of
-    * [[graft.ops.Multimodal.incrementalImageNearDupPairs]]: arriving
-    * image rows are dHashed ROW-LOCALLY ([[graft.ops.Multimodal]]'s
-    * shared kernel — decode never leaves the executor), band keys
-    * explode statelessly with the same balanced pigeonhole chunks as
-    * batch, and candidates come from ONE stream-static equi-join against
-    * the accumulated corpus's band table
-    * ([[graft.ops.Dedup.hammingBandTable]] — pass it persisted). A pair
-    * matching in several chunks collapses via
-    * `dropDuplicatesWithinWatermark` — the only state, bounded by the
-    * watermark. Same chunking and distance arithmetic as batch, so
-    * verdicts agree exactly (StatefulOpsSpec pins the parity).
-    * Output: `(existing_id, incoming_id, hd)` in append mode. */
-  def streamingImageNearDup(incoming: DataFrame, existingBands: DataFrame,
-                            ts: String, id: String, blob: String,
-                            maxDist: Int, lateness: String,
-                            hashW: Int = 8, hashH: Int = 8): DataFrame = {
-    val bits = hashW * hashH
-    import incoming.sparkSession.implicits._
-    val hashed = incoming
-      .select(col(ts), col(id).cast("long"), col(blob))
-      .as[(java.sql.Timestamp, Long, Array[Byte])]
-      .map { case (t, i, b) =>
-        (t, i, graft.ops.Multimodal.dhashOf(b, hashW, hashH))
-      }
-      .toDF(ts, "incoming_id", "__fp")
-      .withWatermark(ts, lateness)
-    val banded = graft.ops.Dedup.hammingKeyed(
-        hashed, "incoming_id", "__fp", bits, maxDist + 1, carry = Seq(ts))
-      .withColumnRenamed("__doc", "incoming_id")
-    banded.join(existingBands, Seq("ck", "cv")) // stream-static equi-join
-      .withColumn("hd", bit_count(col("__fp").bitwiseXOR(col("ex_fp"))))
-      .filter(col("hd") <= maxDist)
-      .select(col(ts), col("existing_id"), col("incoming_id"), col("hd"))
-      .dropDuplicatesWithinWatermark("existing_id", "incoming_id")
-      .drop(ts)
-  }
-
-  /** Streaming benchmark decontamination — the incremental form of
-    * [[graft.ops.Dedup.contaminationCheck]]: held-out documents arrive as
-    * a STREAM and are checked against a STATIC train-gram inventory
-    * ([[graft.ops.Dedup.trainGramInventory]] — one row per distinct gram,
-    * so the join is bounded by the gram inventory, not train-corpus
-    * size). Per-doc grams explode row-locally, hit the inventory via a
-    * stream-static hash equi-join (stateless — Spark re-plans the static
-    * side per micro-batch; pass a persisted inventory), and collapse to
-    * one report row per (window, contaminated doc) with a watermark-
-    * bounded windowed aggregation in append mode: state expires with the
-    * watermark, the property that keeps this runnable on an unbounded
-    * held-out feed.
-    *
-    * Output: `(window_start, test_id, n_shared_grams, sample_train_id)` —
-    * the batch report's columns plus the window that closed the row; for
-    * docs confined to one window the counts are identical to the batch
-    * operator (StatefulOpsSpec pins the parity on the q50 fixture). */
-  def streamingContaminationCheck(heldOut: DataFrame, trainGrams: DataFrame,
-                                  id: String, text: String, ts: String, n: Int,
-                                  lateness: String, windowLen: String): DataFrame = {
-    val grams = heldOut
-      .withWatermark(ts, lateness)
-      .select(col(ts), col(id).as("test_id"),
-        explode(graft.ops.Dedup.wordShingles(col(text), n)).as("gram"))
-      .select(col(ts), col("test_id"), md5(col("gram")).as("gh"))
-    grams.join(trainGrams, Seq("gh")) // stream-static inner equi-join
-      .groupBy(window(col(ts), windowLen), col("test_id"))
-      .agg(count(lit(1)).as("n_shared_grams"),
-        min(col("train_id")).as("sample_train_id"))
-      .select(col("window.start").as("window_start"), col("test_id"),
-        col("n_shared_grams"), col("sample_train_id"))
-  }
-
-  /** Streaming novelty profile — the ingest-time form of
-    * [[graft.ops.Dedup.noveltyProfile]]: documents arriving on a stream
-    * are scored against a STATIC reference gram inventory
-    * ([[graft.ops.Dedup.trainGramInventory]] — persist it; the static
-    * side re-plans every micro-batch), so a crawl pipeline can route
-    * low-novelty arrivals (rehash of held content) to down-sampling AT
-    * INGEST instead of in a nightly batch. Grams explode row-locally;
-    * the verdict is ONE stream-static LEFT OUTER hash equi-join
-    * (bounded by the gram inventory) and a watermark-bounded windowed
-    * aggregation in append mode — state expires with the watermark.
-    * Output: `(window_start, id, n_grams, n_known, novelty)` — the
-    * batch operator's row, windowed. */
-  def streamingNoveltyProfile(docs: DataFrame, refGrams: DataFrame,
-                              id: String, text: String, ts: String, n: Int,
-                              lateness: String, windowLen: String): DataFrame = {
-    val grams = docs
-      .withWatermark(ts, lateness)
-      .select(col(ts), col(id),
-        explode(graft.ops.Dedup.wordShingles(col(text), n)).as("gram"))
-      .select(col(ts), col(id), md5(col("gram")).as("gh"))
-    grams
-      .join(refGrams.select(col("gh"), lit(1).as("__k")), Seq("gh"), "left")
-      .groupBy(window(col(ts), windowLen), col(id))
-      .agg(count(lit(1)).as("n_grams"), count(col("__k")).as("n_known"))
-      .select(col("window.start").as("window_start"), col(id),
-        col("n_grams"), col("n_known"),
-        round(lit(1.0) - col("n_known").cast("double") / col("n_grams"), 4)
-          .as("novelty"))
-  }
-
-  /** Streaming semantic dedup — the ingest-time form of
-    * [[graft.ops.Similarity.semanticDedup]] for a continuous embedding
-    * feed: an arriving document is DROPPED iff the static reference
-    * corpus already holds a cosine-near neighbor (≥ threshold) in its
-    * cluster cell. Entirely STATELESS on the stream side:
-    *
-    *  - cell assignment is a row-local argmax over the centroid LITERALS
-    *    (`array_max` over `(cos, cent_id)` structs — the same
-    *    max-cos/larger-cent_id order as the batch `assignCells`
-    *    `max(struct)`, pinned by the spec). The centroid table is tiny
-    *    by construction (it is broadcast in every batch path), so
-    *    inlining it as literals trades a broadcast for zero shuffle;
-    *  - the dedup verdict is a stream-static LEFT ANTI equi-join on the
-    *    cell key with the cosine threshold as a residual condition — no
-    *    watermark, no state store, no aggregation. The static side is
-    *    re-planned every micro-batch: pass a PERSISTED
-    *    [[refAssignedCells]] result.
-    *
-    * Same cell-bounded candidate shape as the batch operator: an
-    * arriving doc is scored only against its cell's members, never the
-    * corpus. Cosine is rounded to 6 BEFORE thresholding (the batch
-    * operators' cross-engine discipline, kept here so batch and
-    * streaming verdicts agree exactly). */
-  def streamingSemanticDedupFilter(stream: DataFrame, refAssigned: DataFrame,
-      cents: Seq[(Long, Seq[Float], Double)], id: String, vec: String,
-      threshold: Double): DataFrame = {
-    require(cents.nonEmpty, "need at least one centroid")
-    val nrm = graft.ops.Similarity.norm(col(vec))
-    val cellExpr = array_max(array(cents.map { case (cid, cvec, cnrm) =>
-      struct(
-        (graft.ops.Similarity.dot(col(vec), typedLit(cvec)) / (nrm * lit(cnrm)))
-          .as("ccos"),
-        lit(cid).as("cent_id"))
-    }: _*)).getField("cent_id")
-    val s = stream
-      .withColumn("cell", cellExpr)
-      .withColumn("__nrm", nrm)
-    val dupCond = s("cell") === refAssigned("cell") &&
-      s(id) =!= refAssigned("c_id") &&
-      round(graft.ops.Similarity.cosine(s(vec), refAssigned("c_vec"),
-        s("__nrm"), refAssigned("c_norm")), 6) >= threshold
-    s.join(refAssigned, dupCond, "left_anti").drop("__nrm")
-  }
-
-  /** The static side of [[streamingSemanticDedupFilter]]: the reference
-    * corpus assigned to its cells, `(c_id, cell, c_vec, c_norm)`.
-    * Long-lived consumers should `.persist()` the result. */
-  def refAssignedCells(ref: DataFrame, id: String, vec: String,
-                       cent: DataFrame): DataFrame =
-    graft.ops.Similarity.assignCells(
-      ref.select(col(id).as("c_id"), col(vec).as("c_vec"),
-        graft.ops.Similarity.norm(col(vec)).as("c_norm")),
-      cent)
-
-  /** Streaming IVF-PQ similarity search — incoming vectors (new
-    * documents' embeddings, live queries) searched against a STATIC
-    * compressed index ([[graft.ops.Similarity.ivfPqIndex]] — persist
-    * it; a streaming query re-plans the static side per micro-batch):
-    * the streaming half of q85, and the alerting shape of semantic
-    * dedup ("does this incoming item already live in the corpus?").
-    *
-    * Entirely STATELESS: the trained artifacts (centroids, codebook)
-    * are collected literals, so probe-cell selection and the ADC
-    * lookup table are row-local unrolled expressions
-    * ([[graft.ops.Similarity.adcProbeCells]]/[[graft.ops.Similarity.adcLookupTable]]
-    * — bit-identical to the batch forms); candidates come from ONE
-    * stream-static cell equi-join; scoring is the codegen'd
-    * [[graft.functions.PqAdc]]. No watermark, no state store — emits
-    * every candidate with approximate inner product ≥ `minScore`
-    * (radius/alerting semantics; per-query top-k ranking is the
-    * consumer's per-batch step, [[graft.ops.Similarity.topKMerge]]'s
-    * job in foreachBatch).
-    * Output: `(q_id, c_id, adot)` rounded to 6. */
-  def streamingIvfPqSearch(queries: DataFrame, index: DataFrame,
-      cents: Seq[(Long, Seq[Float], Double)],
-      codebook: Seq[(Int, Int, Seq[Float])],
-      id: String, vec: String, dim: Int, m: Int, ksub: Int, nProbe: Int,
-      minScore: Double): DataFrame = {
-    require(m >= 1 && dim % m == 0,
-      s"need dim divisible by m, got dim=$dim m=$m")
-    val dsub = dim / m
-    queries
-      .select(col(id).as("q_id"), col(vec).as("q_vec"))
-      .withColumn("dt",
-        graft.ops.Similarity.adcLookupTable(col("q_vec"), codebook, dsub))
-      .withColumn("cell", explode(
-        graft.ops.Similarity.adcProbeCells(col("q_vec"), cents, nProbe)))
-      .join(index, Seq("cell")) // stream-static inner equi-join
-      .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"),
-        round(graft.functions.VectorExprs.pqAdc(col("codes"), col("dt"), ksub), 6)
-          .as("adot"))
-      .filter(col("adot") >= minScore)
-  }
-
-  /** Streaming BM25 serving — a live query stream against a persisted
-    * postings index ([[graft.ops.TextAnalysis.savePostingsIndex]] /
-    * [[graft.ops.TextAnalysis.appendPostingsIndex]]), the online half of
-    * the RAG stack whose batch side q124/q127/q129 eval. Same integer
-    * arithmetic as [[graft.ops.TextAnalysis.bm25Search]], bit for bit:
-    * the static side enriches each posting with its exact int64
-    * contribution ONCE at plan build (corpus stats + the StrictMath
-    * idf artifact collect at build time — the streamingIvfPqSearch
-    * trained-artifact shape — and the enriched index persists, since a
-    * streaming static side re-executes EVERY micro-batch: the
-    * build cost is sunk, exactly when a pre-built index pays); arriving
-    * queries explode to distinct terms (row-local), stream-static
-    * equi-join the enriched postings, and ONE watermarked
-    * per-(window, query, doc) aggregate emits exact scores when the
-    * window closes. Threshold (`minScore`) semantics rather than
-    * top-k — the [[streamingIvfPqSearch]] radius convention (a global
-    * per-query ranking needs a second stateful stage; gate then rank
-    * the survivors downstream). Output: `(window_start, window_end,
-    * q_id, doc_id, score_q, n_terms)`.
-    *
-    * The idf collect is ∝ FULL index vocabulary (queries are unknown at
-    * plan build — serving can't pre-filter the dictionary the way batch
-    * [[graft.ops.TextAnalysis.bm25Core]] does); `maxVocabTerms` bounds
-    * it loudly, the q123 LM-dictionary posture. */
-  def streamingBm25Search(stream: DataFrame, postings: DataFrame,
-      qid: String, ts: String, qtext: String, minScore: Long,
-      scaleBits: Int = 12, maxVocabTerms: Int = 1000000,
-      windowSec: Int = 10, lateness: String = "10 seconds"): DataFrame = {
-    require(scaleBits >= 1 && scaleBits <= 20, s"bad scaleBits: $scaleBits")
-    val spark = postings.sparkSession
-    import spark.implicits._
-    val ta = graft.ops.TextAnalysis
-    val (tTot, nDocs) = postings
-      .agg(sum(col("tf")), countDistinct(col("doc")))
-      .as[(Long, Long)].collect().head
-    require(tTot > 0, "streamingBm25Search: postings index is empty")
-    val dfRows = postings.groupBy(col("term"))
-      .agg(countDistinct(col("doc")).as("df"))
-      .limit(maxVocabTerms + 1).as[(String, Long)].collect()
-    require(dfRows.length <= maxVocabTerms,
-      s"streamingBm25Search: index vocabulary exceeds " +
-        s"maxVocabTerms=$maxVocabTerms — raise the bound explicitly")
-    val idfRows = ta.quantizedIdf(dfRows.map(_._1).sorted.toSeq,
-      dfRows.toMap, nDocs, scaleBits)
-    val s = 1L << scaleBits
-    val enriched = graft.ops.Caches.track(postings
-      .join(broadcast(idfRows.toDF("term", "idf_q")), Seq("term"))
-      .withColumn("norm_q",
-        expr(s"($s * ($tTot + 3 * dl * $nDocs)) div (4 * $tTot)"))
-      .withColumn("contrib",
-        expr(s"(idf_q * tf * 11 * $s) div (5 * tf * $s + 6 * norm_q)"))
-      .select(col("term"), col("doc"), col("contrib"))
-      .persist())
-    stream.withWatermark(ts, lateness)
-      .select(col(qid).as("q_id"), col(ts).as("__ts"),
-        explode(array_distinct(ta.tokens(lower(col(qtext))))).as("term"))
-      .join(enriched, Seq("term")) // stream-static inner equi-join
-      .groupBy(window(col("__ts"), s"$windowSec seconds"), col("q_id"),
-        col("doc"))
-      .agg(sum(col("contrib")).as("score_q"), count(lit(1)).as("n_terms"))
-      .filter(col("score_q") >= minScore)
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"), col("q_id"),
-        col("doc").as("doc_id"), col("score_q"), col("n_terms"))
-  }
-
-  /** Streaming IVF-SQ8 serving — the dense twin of
-    * [[streamingBm25Search]] over a persisted
-    * [[graft.ops.Similarity.saveIvfSq8Index]] table, closing the online
-    * half on the vector side: probe cells come from the collected
-    * trained centroids as a row-local literal expression
-    * ([[graft.ops.Similarity.adcProbeCells]] — identical cell choice to
-    * the batch search's per-query sort), the query quantizes row-locally
-    * onto the SQ8 grid, and candidates score by the all-int64 codegen'd
-    * [[graft.functions.VectorExprs.sq8Dot]] after ONE stateless
-    * stream-static cell equi-join — no watermark, no state store
-    * (the [[streamingIvfPqSearch]] shape), so batch ≡ streaming is
-    * bit-exact per candidate. Radius semantics: rows with
-    * `iscore >= minScore` pass. Output: `(q_id, c_id, iscore)`. */
-  def streamingIvfSq8Search(stream: DataFrame, index: DataFrame,
-      cents: Seq[(Long, Seq[Float], Double)], id: String, vec: String,
-      nProbe: Int, lo: Array[Long], hi: Array[Long], minScore: Long,
-      scaleBits: Int = 12): DataFrame = {
-    graft.ops.Similarity.sq8ExactnessGuard(lo, hi)
-    val range = lo.indices.map(j => hi(j) - lo(j)).toArray
-    val scale = (1L << scaleBits).toDouble
-    stream.select(col(id).as("q_id"), col(vec).as("q_vec"))
-      .withColumn("mq", array(lo.indices.map(j =>
-        floor(element_at(col("q_vec"), j + 1).cast("double") * scale)
-          .cast("long")): _*))
-      .withColumn("cell", explode(
-        graft.ops.Similarity.adcProbeCells(col("q_vec"), cents, nProbe)))
-      .join(index, Seq("cell")) // stream-static inner equi-join
-      .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"),
-        graft.functions.VectorExprs.sq8Dot(col("codes"), col("mq"), lo,
-          range).as("iscore"))
-      .filter(col("iscore") >= minScore)
-  }
-
-  /** Embedding-outlier scoring AT INGEST: the streaming form of
-    * [[graft.ops.Similarity.centroidDistances]]. The trained integer
-    * centroid ([[graft.ops.Similarity.trainEmbeddingCentroid]]) rides
-    * the plan as a fused codegen'd literal expression
-    * ([[graft.ops.Similarity.centroidDist2Expr]]) — STATELESS, no join,
-    * no state store, so it runs in append mode at ingest line rate and
-    * the verdict is bit-identical to the batch pass (exact int64).
-    * Rows at or above `minDist2` are flagged outliers (routed to
-    * quarantine / review in a deploy); the full scored stream is
-    * returned so callers can also keep the inliers. Output: input
-    * columns + `dist2` + `is_outlier`. */
-  def streamingOutlierScore(stream: DataFrame, vec: String,
-      mu: Array[Long], minDist2: Long): DataFrame =
-    stream
-      .withColumn("dist2", graft.ops.Similarity.centroidDist2Expr(col(vec), mu))
-      .withColumn("is_outlier", col("dist2") >= lit(minDist2))
-
-  /** PCA projection AT INGEST: the streaming form of
-    * [[graft.ops.Similarity.pcaProject]]. Trained integer weights
-    * ([[graft.ops.Similarity.trainPcaComponents]]) ride the plan as
-    * fused codegen'd literal expressions
-    * ([[graft.ops.Similarity.pcaProjectExprs]]) — STATELESS, so
-    * arriving embeddings are reduced to their k int64 coordinates in
-    * append mode with results bit-identical to the batch pass (route
-    * on components, store the compressed form, feed downstream ANN).
-    * Output: `(id, c, proj)`, one row per (row, component). */
-  def streamingPcaProject(stream: DataFrame, id: String, vec: String,
-      weights: Array[Array[Long]]): DataFrame =
-    stream.select(col(id).cast("long").as(id),
-      posexplode(array(
-        graft.ops.Similarity.pcaProjectExprs(col(vec), weights): _*))
-        .as(Seq("c", "proj")))
-
-  /** Trained quality-classifier gate AT INGEST: the streaming form of
-    * [[graft.ops.Curation.qualityScores]]. The trained int64 weights
-    * ([[graft.ops.Curation.trainQualityClassifier]]) ride the plan as a
-    * fused codegen'd literal dot ([[graft.ops.Curation.qualityScoreExpr]])
-    * — STATELESS, no join, no state store, so arriving documents are
-    * scored in append mode at ingest line rate with verdicts
-    * bit-identical to the batch pass (exact int64). The full scored
-    * stream is returned (`keep = 1 ⇔ score ≥ 0`) so callers can route
-    * rejects to a review sink instead of dropping them blind. */
-  def streamingQualityGate(stream: DataFrame, vec: String,
-      weights: Array[Long], bias: Long): DataFrame =
-    stream
-      .withColumn("score",
-        graft.ops.Curation.qualityScoreExpr(col(vec), weights, bias))
-      .withColumn("keep", when(col("score") >= 0, 1).otherwise(0))
-
-  /** Quality DRIFT monitor at ingest: the [[streamingQualityGate]]
+  /** Quality DRIFT monitor at ingest: the trained quality gate's
     * verdicts rolled into tumbling event-time windows — per window, how
-    * many documents arrived, how many the trained gate keeps, and the
-    * exact integer score sum (mean score = sum/n, derivable without a
-    * second pass). A falling keep-rate or score sum across windows is
-    * the first observable sign the upstream source degraded — the data
-    * dashboard a production ingest runs next to the gate itself. Same
-    * plan batch and streaming (the ST3 discipline); watermark bounds
-    * window state in append mode. Scores are exact int64, so window
-    * aggregates are engine- and order-exact. */
+    * many documents arrived, how many the gate keeps, and the exact
+    * integer score sum (mean score = sum/n, derivable without a second
+    * pass). A falling keep-rate or score sum across windows is the first
+    * observable sign the upstream source degraded — the data dashboard a
+    * production ingest runs next to the gate itself. Per row, the score
+    * and the `score ≥ 0` keep rule are exactly
+    * [[graft.ops.Curation.qualityScores]]' (its
+    * [[graft.ops.Curation.qualityScoreExpr]]; the batch op projects the
+    * event time away, which the window needs); the per-row gate alone
+    * is `qualityScores` run on the stream. Watermark bounds window state
+    * in append mode; scores are exact int64, so window aggregates are
+    * engine- and order-exact. */
   def streamingQualityDrift(stream: DataFrame, ts: String, vec: String,
                             weights: Array[Long], bias: Long,
                             windowSec: Int = 10,
                             lateness: String = "10 seconds"): DataFrame =
-    streamingQualityGate(stream.withWatermark(ts, lateness), vec,
-        weights, bias)
+    stream.withWatermark(ts, lateness)
+      .select(col(ts), graft.ops.Curation.qualityScoreExpr(col(vec),
+        weights, bias).as("score"))
       .groupBy(window(col(ts), s"$windowSec seconds"))
       .agg(count(lit(1)).as("n"),
-        sum(col("keep")).as("n_keep"),
+        sum(when(col("score") >= 0, 1).otherwise(0)).as("n_keep"),
         sum(col("score")).as("score_sum"))
 
   /** Data-quality constraints AT INGEST — the streaming half of
@@ -813,8 +416,8 @@ object StatefulOps {
     * Probes read estimates row-locally off the emitted grid via
     * [[graft.ops.Sampling.cmsEstimate]], and grids from consecutive
     * windows ADD into coarser panels (the CMS merge property — the
-    * frequency mirror of [[streamingHllRegisters]]'s cardinality
-    * panel). Output: `(window_start, grid)`. */
+    * frequency mirror of [[graft.ops.Sampling.hllRegisters]] grouped by
+    * a `window(...)` key). Output: `(window_start, grid)`. */
   def streamingCmsSketch(stream: DataFrame, ts: String, value: String,
                          depth: Int, width: Int, windowSec: Int = 10,
                          lateness: String = "10 seconds"): DataFrame =
@@ -824,116 +427,6 @@ object StatefulOps {
       .agg(graft.functions.CmsSketch.agg(col("__h"), depth, width)
         .as("grid"))
       .select(col("window.start").as("window_start"), col("grid"))
-
-  /** HyperLogLog distinct registers AT INGEST — the streaming form of
-    * [[graft.ops.Sampling.hllRegisters]]: the same native
-    * TypedImperativeAggregate runs inside a watermarked tumbling window
-    * (its element-wise-MAX merge is what makes it legal in streaming
-    * aggregation), each closed window emitting its exact-int64
-    * `(bucket, register)` rows. Registers are a pure function of the
-    * window's value SET, so the emitted rows equal the batch sketch of
-    * the same rows bit-for-bit, and [[graft.ops.Sampling.hllMerge]]
-    * folds them into running daily/weekly cardinality panels (the live
-    * "distinct users this window" gauge at O(2^bucketBits) state).
-    * Output: `(window_start, <groupBy...>, bucket, register)`. */
-  def streamingHllRegisters(stream: DataFrame, ts: String,
-                            groupBy: Seq[String], value: String,
-                            bucketBits: Int, windowSec: Int = 10,
-                            lateness: String = "10 seconds"): DataFrame = {
-    val keys = window(col(ts), s"$windowSec seconds") +: groupBy.map(col)
-    stream.withWatermark(ts, lateness)
-      .groupBy(keys: _*)
-      .agg(graft.functions.HllRegisters.agg(
-        graft.functions.Md5Hash.prefix60(col(value)), bucketBits)
-        .as("__regs"))
-      .select((col("window.start").as("window_start") +: groupBy.map(col) :+
-        posexplode(col("__regs")).as(Seq("bucket", "register"))): _*)
-  }
-
-  /** SQ8 encode + audit AT INGEST: the streaming form of
-    * [[graft.ops.Similarity.sq8Encode]] — trained bounds ride the plan
-    * as fused literals (STATELESS, no join, no state store), so
-    * arriving vectors byte-encode in append mode with checksums and
-    * reconstruction errors bit-identical to the batch pass. An `err2`
-    * spike at ingest is the live signal that new data has drifted
-    * outside the trained quantization bounds and the index needs
-    * retraining — the SQ8 analog of [[streamingOutlierScore]]. */
-  def streamingSq8Audit(stream: DataFrame, id: String, vec: String,
-                        lo: Array[Long], hi: Array[Long]): DataFrame =
-    graft.ops.Similarity.sq8Encode(stream, id, vec, lo, hi)
-
-  /** BPE token PRICING at ingest — the streaming form of
-    * [[graft.ops.TextAnalysis.bpeTokenCounts]] (q101), the size gauge a
-    * token-budgeted pipeline reads live: arriving documents tokenize
-    * row-locally, every word STREAM-STATIC broadcast-joins the trained
-    * pricing dictionary ([[graft.ops.TextAnalysis.bpePricingDict]] —
-    * trained once, fused into the plan). OPERATING BOUND (the r15
-    * dictionaryJoin finding applies here too): the dictionary is
-    * TRAINING-CORPUS-vocabulary-sized, not vocab-parameter-sized —
-    * the broadcast form is right up to the
-    * [[graft.ops.TextAnalysis.MaxBroadcastDictWords]]-scale dicts a
-    * curated reference corpus yields; a dict trained on a raw web
-    * corpus (Heaps' law: 10⁷⁺ words) must instead be persisted as a
-    * word-bucketed table and this op re-pointed at it (the stream side
-    * then shuffles batch-bounded rows into the dict's bucketing). A
-    * WATERMARKED per-(window, doc) aggregate emits each document's
-    * `(n_words, n_bpe)` when its event-time window closes (append mode;
-    * the watermark bounds state — the q112-gate shape with one stateful
-    * agg on top). A document's tokens share its single timestamp, so
-    * each emitted row carries the document's COMPLETE price, equal to
-    * the batch pass (StatefulOpsSpec pins the parity). Words outside
-    * the trained dictionary drop, exactly as in the batch form (the
-    * dictionary covers the training corpus's vocabulary by
-    * construction). */
-  def streamingBpePricing(stream: DataFrame, id: String, ts: String,
-                          text: String, dict: DataFrame,
-                          windowSec: Int = 10,
-                          lateness: String = "10 seconds"): DataFrame =
-    stream.withWatermark(ts, lateness)
-      .select(col(id), col(ts),
-        explode(graft.ops.TextAnalysis.tokens(col(text))).as("w"))
-      .join(broadcast(dict), Seq("w"))
-      .groupBy(window(col(ts), s"$windowSec seconds"), col(id))
-      .agg(count(lit(1)).as("n_words"), sum(col("n_sub")).as("n_bpe"))
-
-  /** N-gram LM perplexity scoring AT INGEST — the streaming form of
-    * [[graft.ops.TextAnalysis.bigramLmScore]] (q123), the CCNet-style
-    * "does this look like reference text" gate applied live: arriving
-    * documents explode to adjacent word pairs (row-local), LEFT
-    * stream-static broadcast-join the trained cost dictionary (missing
-    * pair → the trained OOV cost, never a dropped row — unlike the
-    * pricing join, the LM must charge for unseen text), and a
-    * watermarked per-(window, doc) aggregate emits each document's
-    * exact `(n_ngrams, total_cost, avg_cost_q)` when its window closes
-    * — equal to the batch pass (StatefulOpsSpec). Gating on
-    * `avg_cost_q` at ingest is the live CCNet filter. */
-  def streamingLmScore(stream: DataFrame, id: String, ts: String,
-                       text: String, dict: DataFrame, oovCost: Long,
-                       windowSec: Int = 10,
-                       lateness: String = "10 seconds"): DataFrame =
-    stream.withWatermark(ts, lateness)
-      .select(col(id), col(ts),
-        explode(graft.ops.TextAnalysis.bigramPairs(col(text))).as("b"))
-      .select(col(id), col(ts), col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .join(broadcast(dict), Seq("w1", "w2"), "left")
-      .groupBy(window(col(ts), s"$windowSec seconds"), col(id))
-      .agg(count(lit(1)).as("n_ngrams"),
-        sum(coalesce(col("cost"), lit(oovCost))).as("total_cost"))
-      .withColumn("avg_cost_q", expr("total_cost div n_ngrams"))
-
-  /** Stream-static range (interval) join — the ALERTING use of
-    * [[graft.ops.EventOps.rangeJoin]] (q122): a live point stream
-    * matched against a static interval table (maintenance windows,
-    * incident spans, labeling epochs). The same bucketized plan is
-    * STATELESS under streaming — the point side's bucket key is
-    * row-local arithmetic, the interval side explodes on the static
-    * side, and the match is an append-mode stream-static equi-join +
-    * residual filter; no watermark, no state store, and therefore
-    * bit-exact batch ≡ streaming parity (StatefulOpsSpec). */
-  def streamingRangeJoin(stream: DataFrame, intervals: DataFrame,
-                         t: String, lo: String, hi: String,
-                         bucketWidth: Long): DataFrame =
-    graft.ops.EventOps.rangeJoin(stream, intervals, t, lo, hi, bucketWidth)
 
   /** Per-key rate anomaly detection AT INGEST — the streaming form of
     * [[graft.ops.EventOps.rateAnomalies]], the NVR "camera went noisy /
@@ -1236,32 +729,6 @@ object StatefulOps {
       spark => compactPairIfDead(spark, table, maxDeadBp) {
         graft.ops.Dedup.compactMinHashPairIndex(spark, table, buckets)
       })(onBatch)
-
-  /** 5-gram LADDER LM scoring at ingest — the streaming form of
-    * [[graft.ops.TextAnalysis.ladderLmScore]] (q248; r15 verdict item
-    * 6): the trained ladder is a SUNK top-V-bounded artifact, each
-    * arriving document explodes to its top-order n-grams (row-local),
-    * LEFT stream-static broadcast-joins ONE dictionary per order (the
-    * shared [[graft.ops.TextAnalysis.ladderCosted]] backoff-chain
-    * stage, `ts` carried through the explode), and a watermarked
-    * per-(window, doc) aggregate emits each document's exact
-    * `(n_ngrams, total_cost, avg_cost_q)` when its window closes —
-    * equal to the batch pass at every prefix (StatefulOpsSpec). Cost ∝
-    * batch; no state beyond the windowed agg. Gating on `avg_cost_q`
-    * here is the live CCNet filter at the KenLM-grade order. */
-  def streamingLadderLmScore(stream: DataFrame, id: String, ts: String,
-                             text: String,
-                             ladder: Seq[Seq[(String, Long)]],
-                             oovCost: Long, scaleBits: Int = 12,
-                             windowSec: Int = 10,
-                             lateness: String = "10 seconds"): DataFrame =
-    graft.ops.TextAnalysis.ladderCosted(
-        stream.withWatermark(ts, lateness), id, text, ladder, oovCost,
-        scaleBits, carry = Seq(ts))
-      .groupBy(window(col(ts), s"$windowSec seconds"), col(id))
-      .agg(count(lit(1)).as("n_ngrams"),
-        sum(col("__c")).as("total_cost"))
-      .withColumn("avg_cost_q", expr("total_cost div n_ngrams"))
 
   /** URL/domain curation at CRAWL INGEST — the streaming twin of
     * [[graft.ops.Curation.urlCurationVerdicts]] (web-corpus stage 0

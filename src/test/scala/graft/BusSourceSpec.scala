@@ -170,66 +170,6 @@ class BusSourceSpec extends SparkSpec {
     } finally q2.stop()
   }
 
-  test("socket transport: TCP-delivered envelopes equal a direct file drop") {
-    val spool = Files.createTempDirectory("bus-socket").toString
-    val fileDrop = Files.createTempDirectory("bus-filedrop").toString
-    writeFixture(fileDrop) // the reference rows: same lines dropped directly
-    val bridge = new graft.io.bus.SocketBridge(spool).start()
-    try {
-      def send(lines: Seq[String]): Unit = {
-        val s = new java.net.Socket("127.0.0.1", bridge.boundPort)
-        val out = new java.io.PrintWriter(new java.io.OutputStreamWriter(
-          s.getOutputStream, java.nio.charset.StandardCharsets.UTF_8))
-        lines.foreach(out.println)
-        out.flush()
-        s.close() // close flushes the spool batch
-      }
-      // streaming consumer over the spool, live while messages arrive
-      val q = pipeline(Sources.eventBusStream(spark, spool)).writeStream
-        .format("memory").queryName("socket_slice").outputMode("complete")
-        .start()
-      try {
-        send(fixture.take(3))
-        send(fixture.drop(3)) // second connection → separate spool batch
-        awaitCond("spool batches must become visible") {
-          Files.list(Paths.get(spool)).toArray.length >= 2
-        }
-        q.processAllAvailable()
-        val viaSocket = spark.table("socket_slice")
-          .collect().map(_.toString).sorted.toSeq
-        val viaFiles = pipeline(Sources.eventFileBatch(spark, fileDrop))
-          .collect().map(_.toString).sorted.toSeq
-        assert(viaSocket == viaFiles,
-          "socket-delivered rows must equal the file bridge's")
-        // raw envelope parity incl. the tab edge cases
-        val raw = spark.read.format("graft-bus").load(spool)
-          .collect().map(_.toString).sorted.toSeq
-        val rawRef = spark.read.format("graft-bus").load(fileDrop)
-          .collect().map(_.toString).sorted.toSeq
-        assert(raw == rawRef)
-      } finally q.stop()
-    } finally bridge.stop()
-
-    // a RESTARTED bridge on the same spool dir seeds its sequence past
-    // the existing files — never renaming onto a name the connector may
-    // already hold as consumed
-    val before = Files.list(Paths.get(spool)).toArray.map(_.toString).toSet
-    val bridge2 = new graft.io.bus.SocketBridge(spool).start()
-    try {
-      val s = new java.net.Socket("127.0.0.1", bridge2.boundPort)
-      val out = new java.io.PrintWriter(new java.io.OutputStreamWriter(
-        s.getOutputStream, java.nio.charset.StandardCharsets.UTF_8))
-      out.println(envLine(9, 9, "person", 0.9))
-      out.flush()
-      s.close()
-      awaitCond("restarted bridge must spool a NEW file") {
-        Files.list(Paths.get(spool)).toArray.length == before.size + 1
-      }
-      assert(Files.list(Paths.get(spool)).toArray.map(_.toString).toSet
-        .intersect(before) == before, "existing spool files untouched")
-    } finally bridge2.stop()
-  }
-
   test("maxFilesPerTrigger bounds micro-batch intake (ST5 backpressure)") {
     val dir = Files.createTempDirectory("bus-admit").toString
     (1 to 3).foreach(i => writeFixture(dir, s"f$i.txt",

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.streaming.{FunnelProgress, KeyedEvent, StatefulOps}
@@ -8,7 +8,11 @@ import scala.collection.mutable
 
 /** Micro-batch tests for the streaming stateful operators, mirroring the
   * reference's cache/pause semantics tests
-  * (tests/unit/test_cache.py:43-135, test_mqtt_sink_with_fakes.py:216-252). */
+  * (tests/unit/test_cache.py:43-135, test_mqtt_sink_with_fakes.py:216-252),
+  * and for batch operators served on a stream — directly or per
+  * micro-batch through [[StatefulOps.eachBatch]] — each against its own
+  * static run. A test named after a retired `streaming*` twin pins the
+  * batch op that now serves that case. */
 class StatefulOpsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -17,6 +21,52 @@ class StatefulOpsSpec extends SparkSpec {
 
   private def withQuery[T](q: StreamingQuery)(body: => T): T =
     try body finally q.stop()
+
+  private def sortedRows(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+
+  /** A batch op served on a stream: `op` runs per micro-batch through
+    * [[StatefulOps.eachBatch]] on a MemoryStream fed one micro-batch per
+    * chunk. Returns (served rows, `op`'s static run on all the rows). */
+  private def servedPerBatch[A: Encoder](names: Seq[String],
+      chunks: Seq[Seq[A]])(op: DataFrame => DataFrame)
+      : (Seq[Seq[Any]], Seq[Seq[Any]]) = {
+    implicit val ctx = spark.sqlContext
+    require(chunks.size >= 2, "feed at least two micro-batches")
+    val buf = mutable.ArrayBuffer.empty[Seq[Any]]
+    val in = MemoryStream[A]
+    val q = StatefulOps.eachBatch(in.toDF().toDF(names: _*)) { (b, _) =>
+      val out = sortedRows(op(b))
+      buf.synchronized(buf ++= out)
+    }.start()
+    withQuery(q) {
+      chunks.foreach { c => in.addData(c: _*); q.processAllAvailable() }
+    }
+    (buf.synchronized(buf.toSeq).sortBy(_.toString),
+      sortedRows(op(spark.createDataset(chunks.flatten).toDF(names: _*))))
+  }
+
+  private val sinkIds = new java.util.concurrent.atomic.AtomicInteger
+
+  /** A batch op run directly on a stream: `op` applied to a MemoryStream
+    * fed one micro-batch per chunk, collected from an append-mode memory
+    * sink. Returns (streamed rows, `op`'s static run on all the rows). */
+  private def streamedDirect[A: Encoder](names: Seq[String],
+      chunks: Seq[Seq[A]])(op: DataFrame => DataFrame)
+      : (Seq[Seq[Any]], Seq[Seq[Any]]) = {
+    implicit val ctx = spark.sqlContext
+    require(chunks.size >= 2, "feed at least two micro-batches")
+    val sink = s"direct_${sinkIds.incrementAndGet()}"
+    val in = MemoryStream[A]
+    val q = op(in.toDF().toDF(names: _*)).writeStream.format("memory")
+      .queryName(sink).outputMode("append").start()
+    val streamed = withQuery(q) {
+      chunks.foreach { c => in.addData(c: _*); q.processAllAvailable() }
+      sortedRows(spark.table(sink))
+    }
+    (streamed,
+      sortedRows(op(spark.createDataset(chunks.flatten).toDF(names: _*))))
+  }
 
   test("latestPerKeyTtl: last arrival wins within a key") {
     implicit val ctx = spark.sqlContext
@@ -161,7 +211,6 @@ class StatefulOpsSpec extends SparkSpec {
   }
 
   test("streamingIncrementalMinHash equals batch incrementalMinHashPairs") {
-    implicit val ctx = spark.sqlContext
     val existing = Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "alpha beta gamma delta epsilon zeta"),
@@ -170,70 +219,33 @@ class StatefulOpsSpec extends SparkSpec {
       (10L, "alpha beta gamma delta epsilon zeta"),
       (11L, "totally different words entirely here"),
       (12L, "nothing shared with anything at all"))
-    val batch = graft.ops.Dedup.incrementalMinHashPairs(existing,
-        incoming.toDF("doc_id", "text"), "doc_id", "text",
+    val (served, static) = servedPerBatch(Seq("doc_id", "text"),
+        Seq(incoming.take(1), incoming.drop(1))) { b =>
+      graft.ops.Dedup.incrementalMinHashPairs(existing, b, "doc_id", "text",
         numHashes = 12, bands = 4, threshold = 0.5)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(batch.nonEmpty) // fixture sanity: parity must compare something
-    // persisted: the static band table is re-read every micro-batch
-    val bandTab = graft.ops.Dedup.minHashBandTable(existing, "doc_id",
-      "text", numHashes = 12, bands = 4).persist()
-    val in = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val q = StatefulOps.streamingIncrementalMinHash(
-        in.toDF().toDF("doc_id", "ts", "text"), bandTab,
-        "doc_id", "text", "ts", numHashes = 12, bands = 4,
-        threshold = 0.5, lateness = "10 seconds")
-      .writeStream.format("memory").queryName("incmh")
-      .outputMode("append").start()
-    withQuery(q) {
-      in.addData(incoming.map { case (i, t) =>
-        (i, ts("2024-01-01 00:00:01"), t) }: _*)
-      q.processAllAvailable()
-      val streamed = spark.table("incmh")
-        .as[(Long, Long, Double)].collect().toSet
-      assert(streamed == batch,
-        s"stream-static detection must equal the batch operator: " +
-          s"$streamed vs $batch")
-      // multi-band duplicate suppression: identical docs collide on ALL
-      // 4 bands, yet each pair surfaced exactly once
-      assert(spark.table("incmh").count() == batch.size)
     }
-    bandTab.unpersist()
+    assert(static.nonEmpty) // fixture sanity: parity must compare something
+    // identical docs collide on ALL 4 bands, yet each pair surfaces once
+    assert(served == static && static.distinct == static,
+      s"served detection must equal the batch operator: $served vs $static")
   }
 
   test("streamingEditDistPairs equals batch incrementalEditDistancePairs") {
-    implicit val ctx = spark.sqlContext
     val existing = Seq((1L, "abcde"), (2L, "abcdf"), (3L, "zzz"))
       .toDF("doc_id", "text")
     val incoming = Seq((11L, "abcd"), (12L, "abcdefg"), (13L, "qqqqqq"))
-    val batch = graft.ops.Dedup.incrementalEditDistancePairs(existing,
-        incoming.toDF("doc_id", "text"), "doc_id", "text", Nil, 4, 3)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(batch.nonEmpty) // fixture sanity
-    val bandTab = graft.ops.Dedup.editDistBandTable(existing, "doc_id",
-      "text", Nil, maxLenDiff = 4).persist()
-    val in = MemoryStream[(Long, String)]
-    val q = StatefulOps.streamingEditDistPairs(
-        in.toDF().toDF("doc_id", "text"), bandTab, "doc_id", "text",
-        Nil, maxLenDiff = 4, maxDist = 3)
-      .writeStream.format("memory").queryName("editnd")
-      .outputMode("append").start()
-    withQuery(q) {
-      in.addData(incoming: _*)
-      q.processAllAvailable()
-      val streamed = spark.table("editnd")
-        .as[(Long, Long, Long)].collect().toSet
-      assert(streamed == batch,
-        s"stream-static detection must equal the batch operator: " +
-          s"$streamed vs $batch")
-      // stateless exactly-once: one output row per qualifying pair
-      assert(spark.table("editnd").count() == batch.size)
+    val (served, static) = servedPerBatch(Seq("doc_id", "text"),
+        Seq(incoming.take(2), incoming.drop(2))) { b =>
+      graft.ops.Dedup.incrementalEditDistancePairs(existing, b, "doc_id",
+        "text", Nil, maxLenDiff = 4, maxDist = 3)
     }
-    bandTab.unpersist()
+    assert(static.nonEmpty) // fixture sanity
+    // one output row per qualifying pair
+    assert(served == static && static.distinct == static,
+      s"served detection must equal the batch operator: $served vs $static")
   }
 
   test("streamingImageNearDup equals batch incrementalImageNearDupPairs") {
-    implicit val ctx = spark.sqlContext
     import graft.ops.{MediaItem, Multimodal}
     def ramp(p: Int): Array[Byte] = {
       val grays = new Array[Int](9)
@@ -246,41 +258,21 @@ class StatefulOpsSpec extends SparkSpec {
       val b = ramp(p)
       MediaItem(id, "image", b, "image/png", b.length.toLong)
     }
-    val existing = Seq(item(1L, 0x00), item(2L, 0x55), item(3L, 0x7f))
-    val incoming = Seq((10L, 0x00), (11L, 0x54), (12L, 0x33))
-    val batch = Multimodal.incrementalImageNearDupPairs(
-        existing.toDS(), incoming.map { case (i, p) => item(i, p) }.toDS(),
+    val existing = Seq(item(1L, 0x00), item(2L, 0x55), item(3L, 0x7f)).toDS()
+    val incoming = Seq(item(10L, 0x00), item(11L, 0x54), item(12L, 0x33))
+    val names = Seq("item_id", "media_type", "blob", "mime", "byte_len")
+    val (served, static) = servedPerBatch(names,
+        Seq(incoming.take(1), incoming.drop(1))) { b =>
+      Multimodal.incrementalImageNearDupPairs(existing, b.as[MediaItem],
         maxDist = 8)
-      .as[(Long, Long, Int)].collect().toSet
-    assert(batch.nonEmpty) // fixture sanity: parity must compare something
-    // persisted: the static band table is re-read every micro-batch
-    val bandTab = graft.ops.Dedup.hammingBandTable(
-      Multimodal.perceptualHash(existing.toDS()), "item_id", "dhash",
-      bits = 64, maxDist = 8).persist()
-    val in = MemoryStream[(Long, java.sql.Timestamp, Array[Byte])]
-    val q = StatefulOps.streamingImageNearDup(
-        in.toDF().toDF("item_id", "ts", "blob"), bandTab,
-        "ts", "item_id", "blob", maxDist = 8, lateness = "10 seconds")
-      .writeStream.format("memory").queryName("imgnd")
-      .outputMode("append").start()
-    withQuery(q) {
-      in.addData(incoming.map { case (i, p) =>
-        (i, ts("2024-01-01 00:00:01"), ramp(p)) }: _*)
-      q.processAllAvailable()
-      val streamed = spark.table("imgnd")
-        .as[(Long, Long, Int)].collect().toSet
-      assert(streamed == batch,
-        s"stream-static detection must equal the batch operator: " +
-          s"$streamed vs $batch")
-      // multi-chunk duplicate suppression: identical hashes collide on
-      // all 9 chunks, yet each pair surfaced exactly once
-      assert(spark.table("imgnd").count() == batch.size)
     }
-    bandTab.unpersist()
+    assert(static.nonEmpty) // fixture sanity: parity must compare something
+    // identical hashes collide on all 9 chunks, yet each pair surfaces once
+    assert(served == static && static.distinct == static,
+      s"served detection must equal the batch operator: $served vs $static")
   }
 
   test("streamingIvfPqSearch: stream-static ANN equals its batch application") {
-    implicit val ctx = spark.sqlContext
     // two separated clusters in dim 4 (same fixture as SimilaritySpec)
     val corpus = Seq(
       (1L, Seq(4.0f, 0.0f, 4.0f, 0.0f)),
@@ -290,77 +282,40 @@ class StatefulOpsSpec extends SparkSpec {
       (31L, Seq(0.0f, 3.0f, 0.0f, 3.0f))
     ).toDF("vec_id", "embedding")
     val cent = graft.ops.Similarity.trainIvfCentroids(corpus, "vec_id",
-      "embedding", k = 2, iters = 1)
+      "embedding", k = 2, iters = 1).persist()
     val cb = graft.ops.Similarity.trainPqCodebooks(corpus, "vec_id",
-      "embedding", dim = 4, m = 2, ksub = 2, iters = 1)
-    val cents = cent.as[(Long, Seq[Float], Double)].collect().toSeq
-    val cbLit = cb.as[(Int, Int, Seq[Float])].collect().toSeq
-    // persisted: the static index is re-read every micro-batch
-    val index = graft.ops.Similarity.ivfPqIndex(corpus, "vec_id",
-      "embedding", cent, cb, dim = 4, m = 2).persist()
+      "embedding", dim = 4, m = 2, ksub = 2, iters = 1).persist()
     val queries = Seq(
       (100L, Seq(4.0f, 0.0f, 4.0f, 0.0f)), // lands in the A cell
       (200L, Seq(0.0f, 3.0f, 0.0f, 3.0f))  // lands in the B cell
     )
-    def search(df: org.apache.spark.sql.DataFrame) =
-      StatefulOps.streamingIvfPqSearch(df, index, cents, cbLit,
-        "vec_id", "embedding", dim = 4, m = 2, ksub = 2, nProbe = 1,
-        minScore = 1.0)
-    val batch = search(queries.toDF("vec_id", "embedding"))
-      .as[(Long, Long, Double)].collect().toSet
-    // A query sees only A members (nProbe=1 prunes B): adot = 32
-    assert(batch.contains((100L, 1L, 32.0)) && batch.contains((100L, 20L, 32.0)))
-    assert(!batch.exists(r => r._1 == 100L && Set(2L, 30L, 31L)(r._2)))
-    val in = MemoryStream[(Long, Seq[Float])]
-    val q = search(in.toDF().toDF("vec_id", "embedding"))
-      .writeStream.format("memory").queryName("ivfpq")
-      .outputMode("append").start()
-    withQuery(q) {
-      in.addData(queries: _*)
-      q.processAllAvailable()
-      val streamed = spark.table("ivfpq")
-        .as[(Long, Long, Double)].collect().toSet
-      assert(streamed == batch,
-        s"stateless stream-static search must equal batch: $streamed vs $batch")
+    val (served, static) = servedPerBatch(Seq("vec_id", "embedding"),
+        Seq(queries.take(1), queries.drop(1))) { b =>
+      graft.ops.Similarity.ivfPqTopK(b, corpus, "vec_id", "embedding",
+        k = 10, cent, nProbe = 1, cb, dim = 4, m = 2, ksub = 2)
     }
-    index.unpersist()
+    assert(served == static,
+      s"served search must equal batch: $served vs $static")
+    // the A query sees only A members (nProbe = 1 prunes B): adot = 32
+    val forA = static.filter(_.head == 100L)
+    assert(forA.map(_(2)).toSet == Set(1L, 20L) &&
+      forA.forall(_(3) == 32.0), s"got $forA")
+    cent.unpersist(); cb.unpersist()
   }
 
   test("streamingBm25Search: live queries vs postings index equal batch bm25Search") {
-    implicit val ctx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
     val docs = Seq((1L, "apple banana apple"), (2L, "banana cherry"),
       (3L, "cherry cherry date egg"), (4L, "apple date")).toDF("doc_id", "text")
     val postings = graft.ops.TextAnalysis
       .indexPostings(docs, "doc_id", "text").persist()
     val queries = Seq((100L, "apple date"), (200L, "cherry"),
       (300L, "absent banana"))
-    // batch reference: every candidate (k ≥ corpus) at the same threshold
-    val batch = graft.ops.TextAnalysis.bm25Search(postings,
-        queries.toDF("q_id", "qtext"), "q_id", "qtext", k = 10)
-      .filter(col("score_q") >= 1000L)
-      .select("q_id", "doc_id", "score_q", "n_terms")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    val in = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val q = StatefulOps.streamingBm25Search(
-        in.toDF().toDF("ts", "q_id", "qtext"), postings, "q_id", "ts",
-        "qtext", minScore = 1000L, windowSec = 10, lateness = "5 seconds")
-      .writeStream.format("memory").queryName("bm25live")
-      .outputMode("append").start()
-    withQuery(q) {
-      in.addData(queries.map { case (id, tx) =>
-        (t("2024-01-01 00:00:01"), id, tx) }: _*)
-      q.processAllAvailable()
-      assert(spark.table("bm25live").isEmpty) // window [0,10) still open
-      in.addData((t("2024-01-01 00:00:30"), 999L, "zzz")) // close it
-      q.processAllAvailable()
-      val streamed = spark.table("bm25live")
-        .select("q_id", "doc_id", "score_q", "n_terms")
-        .as[(Long, Long, Long, Long)].collect().toSet
-      assert(streamed == batch && batch.nonEmpty,
-        s"live serving must equal the batch search: $streamed vs $batch")
+    val (served, static) = servedPerBatch(Seq("q_id", "qtext"),
+        Seq(queries.take(2), queries.drop(2))) { b =>
+      graft.ops.TextAnalysis.bm25Search(postings, b, "q_id", "qtext", k = 10)
     }
+    assert(served == static && static.nonEmpty,
+      s"live serving must equal the batch search: $served vs $static")
     postings.unpersist()
   }
 
@@ -569,8 +524,6 @@ class StatefulOpsSpec extends SparkSpec {
   }
 
   test("streamingIvfSq8Search: stream-static dense serving equals batch") {
-    implicit val ctx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
     val corpus = Seq(
       (1L, Seq(4.0f, 0.0f, 4.0f, 0.0f)),
       (2L, Seq(0.0f, 3.0f, 0.0f, 3.0f)),
@@ -579,56 +532,23 @@ class StatefulOpsSpec extends SparkSpec {
       (31L, Seq(0.25f, 3.0f, 0.0f, 3.0f))
     ).toDF("vec_id", "embedding")
     val cent = graft.ops.Similarity.trainIvfCentroids(corpus, "vec_id",
-      "embedding", k = 2, iters = 1)
+      "embedding", k = 2, iters = 1).persist()
     val (lo, hi) = graft.ops.Similarity.trainSq8Bounds(corpus, "embedding")
-    val cents = cent.as[(Long, Seq[Float], Double)].collect().toSeq
     val index = graft.ops.Similarity.ivfSq8Index(corpus, "vec_id",
       "embedding", cent, lo, hi).persist()
     val queries = Seq(
       (100L, Seq(4.0f, 0.0f, 4.0f, 0.0f)),
       (200L, Seq(0.0f, 3.0f, 0.0f, 3.0f)))
-    // batch reference: the ranked search at k ≥ cell population,
-    // re-thresholded on the integer score
-    val batch = graft.ops.Similarity.ivfSq8Search(index,
-        queries.toDF("vec_id", "embedding"), "vec_id", "embedding",
-        k = 10, cent, nProbe = 1, lo, hi)
-      .filter(col("iscore") >= 1L)
-      .select(col("q_id"), col("neighbor_id"), col("iscore"))
-      .as[(Long, Long, Long)].collect().toSet
-    val in = MemoryStream[(Long, Seq[Float])]
-    val q = StatefulOps.streamingIvfSq8Search(
-        in.toDF().toDF("vec_id", "embedding"), index, cents, "vec_id",
-        "embedding", nProbe = 1, lo, hi, minScore = 1L)
-      .writeStream.format("memory").queryName("sq8live")
-      .outputMode("append").start()
-    withQuery(q) {
-      in.addData(queries: _*)
-      q.processAllAvailable()
-      val streamed = spark.table("sq8live")
-        .as[(Long, Long, Long)].collect().toSet
-      assert(streamed == batch && batch.nonEmpty,
-        s"stateless stream-static serving must equal batch: $streamed vs $batch")
-      // nProbe=1 really prunes: no cross-cluster candidates
-      assert(!streamed.exists(r => r._1 == 100L && Set(2L, 30L, 31L)(r._2)))
-    }
-    // the foreachBatch twin: exact ranked top-k per micro-batch
-    val ranked = graft.ops.Similarity.ivfSq8Search(index,
-        queries.toDF("vec_id", "embedding"), "vec_id", "embedding",
+    val (served, static) = servedPerBatch(Seq("vec_id", "embedding"),
+        Seq(queries.take(1), queries.drop(1))) { b =>
+      graft.ops.Similarity.ivfSq8Search(index, b, "vec_id", "embedding",
         k = 3, cent, nProbe = 1, lo, hi)
-      .collect().map(_.toSeq).toSet
-    val buf = scala.collection.mutable.Set.empty[Seq[Any]]
-    val in2 = MemoryStream[(Long, Seq[Float])]
-    val q2 = StatefulOps.eachBatch(in2.toDF().toDF("vec_id", "embedding")) {
-      (b, _) => buf ++= graft.ops.Similarity.ivfSq8Search(index, b,
-        "vec_id", "embedding", k = 3, cent, nProbe = 1, lo, hi)
-        .collect().map(_.toSeq)
-    }.start()
-    withQuery(q2) {
-      in2.addData(queries: _*)
-      q2.processAllAvailable()
     }
-    assert(buf.toSet == ranked && ranked.nonEmpty)
-    index.unpersist()
+    assert(served == static && static.nonEmpty,
+      s"served ranked search must equal batch: $served vs $static")
+    // nProbe = 1 really prunes: no cross-cluster candidates
+    assert(!served.exists(r => r.head == 100L && Set[Any](2L, 30L, 31L)(r(2))))
+    index.unpersist(); cent.unpersist()
   }
 
   test("scriptComposition at ingest: stateless row-local panel equals batch") {
@@ -688,89 +608,55 @@ class StatefulOpsSpec extends SparkSpec {
   }
 
   test("streamingOutlierScore: ingest scoring equals batch centroidDistances exactly") {
-    implicit val ctx = spark.sqlContext
-    // one far outlier among clustered rows; threshold sits between them
+    // one far outlier among clustered rows
     val rows = Seq(
       (1L, Seq(0.10f, 0.20f)), (2L, Seq(0.12f, 0.18f)),
       (3L, Seq(0.11f, 0.21f)), (9L, Seq(0.90f, -0.80f)))
-    val batchDf = rows.toDF("vec_id", "embedding")
-    val mu = graft.ops.Similarity.trainEmbeddingCentroid(batchDf, "embedding")
-    val batch = graft.ops.Similarity
-      .centroidDistances(batchDf, "vec_id", "embedding", mu)
-      .as[(Long, Long)].collect().toMap
-    assert(batch.size == 4 && batch(9L) > batch(1L))
-    val cut = batch(9L) // exactly at the outlier's distance: >= keeps it
-    val in = MemoryStream[(Long, Seq[Float])]
-    val q = StatefulOps.streamingOutlierScore(
-        in.toDF().toDF("vec_id", "embedding"), "embedding", mu, cut)
-      .writeStream.format("memory").queryName("outliers")
-      .outputMode("append").start()
-    withQuery(q) {
-      in.addData(rows: _*)
-      q.processAllAvailable()
-      val streamed = spark.table("outliers")
-        .select("vec_id", "dist2", "is_outlier")
-        .as[(Long, Long, Boolean)].collect().toSet
-      // exact int64 parity with the batch pass, and only row 9 flagged
-      assert(streamed == batch.map { case (id, d) => (id, d, d >= cut) }.toSet)
-      assert(streamed.count(_._3) == 1 && streamed.find(_._3).get._1 == 9L)
+    val mu = graft.ops.Similarity.trainEmbeddingCentroid(
+      rows.toDF("vec_id", "embedding"), "embedding")
+    // no watermark, no state store: the batch op runs on the stream as is
+    val (streamed, static) = streamedDirect(Seq("vec_id", "embedding"),
+        Seq(rows.take(2), rows.drop(2))) { s =>
+      graft.ops.Similarity.centroidDistances(s, "vec_id", "embedding", mu)
     }
+    assert(streamed == static && static.size == 4,
+      s"ingest scoring must equal the batch pass: $streamed vs $static")
+    // a threshold at the outlier's distance flags row 9 alone
+    val dist = streamed.map(r => r.head -> r(1).asInstanceOf[Long]).toMap
+    assert(dist.filter(_._2 >= dist(9L)).keySet == Set(9L))
   }
 
   test("streamingPcaProject: ingest projection equals batch pcaProject exactly") {
-    implicit val ctx = spark.sqlContext
     val rows = (1 to 12).map(i =>
       (i.toLong, Seq(i * 0.02f - 0.1f, 0.3f - i * 0.01f, i * 0.005f)))
-    val batchDf = rows.toDF("vec_id", "embedding")
-    val w = graft.ops.Similarity.trainPcaComponents(batchDf, "embedding", k = 2)
-    val batch = graft.ops.Similarity
-      .pcaProject(batchDf, "vec_id", "embedding", w)
-      .as[(Long, Int, Long)].collect().toSet
-    assert(batch.size == 24)
-    val in = MemoryStream[(Long, Seq[Float])]
-    val q = StatefulOps.streamingPcaProject(
-        in.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", w)
-      .writeStream.format("memory").queryName("pcastream")
-      .outputMode("append").start()
-    withQuery(q) {
-      in.addData(rows: _*)
-      q.processAllAvailable()
-      val streamed = spark.table("pcastream")
-        .as[(Long, Int, Long)].collect().toSet
-      assert(streamed == batch,
-        "stateless ingest projection must equal the batch pass bit-exactly")
+    val w = graft.ops.Similarity.trainPcaComponents(
+      rows.toDF("vec_id", "embedding"), "embedding", k = 2)
+    val (streamed, static) = streamedDirect(Seq("vec_id", "embedding"),
+        Seq(rows.take(5), rows.drop(5))) { s =>
+      graft.ops.Similarity.pcaProject(s, "vec_id", "embedding", w)
     }
+    assert(streamed == static && static.size == 24,
+      "ingest projection must equal the batch pass bit-exactly")
   }
 
   test("streamingQualityGate: ingest scoring equals batch qualityScores exactly") {
-    implicit val ctx = spark.sqlContext
     val rows = (0 until 20).map { i =>
       val y = i % 2
       val base = if (y == 1) 0.5f else -0.5f
       (i.toLong, Seq(base, ((i * 37 % 11) - 5) / 50.0f), y)
     }
-    val batchDf = rows.toDF("vec_id", "embedding", "y")
     val (w, b) = graft.ops.Curation.trainQualityClassifier(
-      batchDf, "embedding", org.apache.spark.sql.functions.col("y"))
-    val batch = graft.ops.Curation
-      .qualityScores(batchDf, "vec_id", "embedding", w, b)
-      .as[(Long, Long, Int)].collect().toSet
-    val in = MemoryStream[(Long, Seq[Float])]
-    val q = StatefulOps.streamingQualityGate(
-        in.toDF().toDF("vec_id", "embedding"), "embedding", w, b)
-      .writeStream.format("memory").queryName("qgate")
-      .outputMode("append").start()
-    withQuery(q) {
-      in.addData(rows.map(r => (r._1, r._2)): _*)
-      q.processAllAvailable()
-      val streamed = spark.table("qgate")
-        .select("vec_id", "score", "keep")
-        .as[(Long, Long, Int)].collect().toSet
-      assert(streamed == batch,
-        "stateless ingest quality gate must equal the batch pass bit-exactly")
-      // and the gate actually separates the planted classes at ingest
-      assert(streamed.forall { case (id, _, keep) => keep == (id % 2) })
+      rows.toDF("vec_id", "embedding", "y"), "embedding",
+      org.apache.spark.sql.functions.col("y"))
+    val (streamed, static) = streamedDirect(Seq("vec_id", "embedding"),
+        Seq(rows.take(7).map(r => (r._1, r._2)),
+          rows.drop(7).map(r => (r._1, r._2)))) { s =>
+      graft.ops.Curation.qualityScores(s, "vec_id", "embedding", w, b)
     }
+    assert(streamed == static && static.size == 20,
+      "ingest quality gate must equal the batch pass bit-exactly")
+    // and the gate actually separates the planted classes at ingest
+    assert(streamed.forall(r => r(2) == (r.head.asInstanceOf[Long] % 2)))
   }
 
   test("streamingQualityDrift: windowed keep-rate/score-sum, late data dropped") {
@@ -924,62 +810,59 @@ class StatefulOpsSpec extends SparkSpec {
 
   test("streamingHllRegisters: closed window equals the batch registers") {
     implicit val ctx = spark.sqlContext
+    import org.apache.spark.sql.functions.{col, window}
     def t(s: String) = java.sql.Timestamp.valueOf(s)
     val w1 = Seq((t("2024-01-01 00:00:00"), "g", "a"),
       (t("2024-01-01 00:00:01"), "g", "b"),
       (t("2024-01-01 00:00:02"), "g", "c"),
       (t("2024-01-01 00:00:03"), "g", "a")) // dup cannot move registers
+    // the batch op with the event-time window as one of its group keys
+    def registers(df: DataFrame) = graft.ops.Sampling.hllRegisters(
+        df.withColumn("window", window(col("ts"), "10 seconds")),
+        Seq("window", "g"), "v", bucketBits = 4)
+      .select("window", "g", "bucket", "register")
     val in = MemoryStream[(java.sql.Timestamp, String, String)]
-    val q = StatefulOps.streamingHllRegisters(
-        in.toDF().toDF("ts", "g", "v"), "ts", Seq("g"), "v",
-        bucketBits = 4, windowSec = 10, lateness = "5 seconds")
+    val q = registers(in.toDF().toDF("ts", "g", "v")
+        .withWatermark("ts", "5 seconds"))
       .writeStream.format("memory").queryName("shll")
       .outputMode("append").start()
     withQuery(q) {
-      in.addData(w1: _*)
+      in.addData(w1.take(2): _*)
       q.processAllAvailable()
-      assert(spark.table("shll").isEmpty)
+      in.addData(w1.drop(2): _*)
+      q.processAllAvailable()
+      assert(spark.table("shll").isEmpty) // window [0,10) still open
       in.addData((t("2024-01-01 00:00:16"), "g", "z"))
       q.processAllAvailable()
-      val closed = spark.table("shll").select("bucket", "register")
-        .as[(Int, Long)].collect().toSet
-      val batch = graft.ops.Sampling.hllRegisters(
+      val closed = sortedRows(spark.table("shll"))
+      val static = sortedRows(registers(w1.toDF("ts", "g", "v")))
+      assert(closed == static, s"stream $closed vs batch $static")
+      // and the window key changes nothing: the registers are the
+      // un-windowed batch sketch of the same rows
+      val plain = graft.ops.Sampling.hllRegisters(
           w1.toDF("ts", "g", "v"), Seq("g"), "v", bucketBits = 4)
         .select("bucket", "register").as[(Int, Long)].collect().toSet
-      assert(closed == batch, s"stream $closed vs batch $batch")
+      assert(spark.table("shll").select("bucket", "register")
+        .as[(Int, Long)].collect().toSet == plain)
     }
   }
 
   test("streamingSq8Audit: ingest encode equals the batch pass bit-exactly") {
-    implicit val ctx = spark.sqlContext
     val rows = (1 to 20).map(i =>
       (i.toLong, Seq(i * 0.05f, 0.7f, -i * 0.01f)))
-    val batchDf = rows.toDF("vec_id", "embedding")
-    val (lo, hi) = graft.ops.Similarity.trainSq8Bounds(batchDf, "embedding")
-    val batch = graft.ops.Similarity
-      .sq8Encode(batchDf, "vec_id", "embedding", lo, hi)
-      .as[(Long, Long, Long)].collect().toSet
-    val in = MemoryStream[(Long, Seq[Float])]
-    val q = StatefulOps.streamingSq8Audit(
-        in.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", lo, hi)
-      .writeStream.format("memory").queryName("sq8audit")
-      .outputMode("append").start()
-    withQuery(q) {
-      in.addData(rows: _*)
-      q.processAllAvailable()
-      val streamed = spark.table("sq8audit")
-        .as[(Long, Long, Long)].collect().toSet
-      assert(streamed == batch, "ingest SQ8 audit must equal batch")
-      // and an out-of-bounds arrival (beyond the trained hi) clamps to
-      // code 255 instead of throwing: err2 is large but finite
-      in.addData((99L, Seq(10.0f, 0.7f, 0.0f)))
-      q.processAllAvailable()
-      assert(spark.table("sq8audit").count() == 21)
+    val (lo, hi) = graft.ops.Similarity.trainSq8Bounds(
+      rows.toDF("vec_id", "embedding"), "embedding")
+    // the second micro-batch carries an out-of-bounds arrival (beyond the
+    // trained hi): it clamps to code 255 instead of throwing
+    val (streamed, static) = streamedDirect(Seq("vec_id", "embedding"),
+        Seq(rows, Seq((99L, Seq(10.0f, 0.7f, 0.0f))))) { s =>
+      graft.ops.Similarity.sq8Encode(s, "vec_id", "embedding", lo, hi)
     }
+    assert(streamed == static && static.size == 21,
+      "ingest SQ8 audit must equal batch")
   }
 
   test("streamingContaminationCheck equals batch contaminationCheck (stream-static)") {
-    implicit val ctx = spark.sqlContext
     // the q50/DedupSpec contamination fixture: doc 10 shares one trigram,
     // doc 12 is a verbatim train doc, doc 11 is clean
     val train = Seq(
@@ -989,109 +872,54 @@ class StatefulOpsSpec extends SparkSpec {
       (10L, "a quick brown fox appears"),
       (11L, "nothing in common at all"),
       (12L, "the quick brown fox jumps"))
-    val batch = graft.ops.Dedup.contaminationCheck(
-        train, heldOut.toDF("doc_id", "text"), "doc_id", "text", n = 3)
-      .as[(Long, Long, Long)].collect().toSet
-    // persisted: the static side is re-read every micro-batch
-    val inv = graft.ops.Dedup.trainGramInventory(train, "doc_id", "text", n = 3)
-      .persist()
-    val in = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val stream = in.toDF().toDF("doc_id", "ts", "text")
-    val q = StatefulOps.streamingContaminationCheck(stream, inv,
-        "doc_id", "text", "ts", n = 3,
-        lateness = "10 seconds", windowLen = "1 minute")
-      .writeStream.format("memory").queryName("contam").outputMode("append").start()
-    withQuery(q) {
-      in.addData(heldOut.map { case (i, t) => (i, ts("2024-01-01 00:00:01"), t) }: _*)
-      q.processAllAvailable()
-      // a clean far-future doc advances the watermark and closes the window
-      in.addData((99L, ts("2024-01-01 01:00:00"), "zz yy xx ww vv"))
-      q.processAllAvailable()
-      val streamed = spark.table("contam")
-        .select("test_id", "n_shared_grams", "sample_train_id")
-        .as[(Long, Long, Long)].collect().toSet
-      assert(streamed == batch,
-        s"stream-static report must equal the batch operator: $streamed vs $batch")
+    val (served, static) = servedPerBatch(Seq("doc_id", "text"),
+        Seq(heldOut.take(2), heldOut.drop(2))) { b =>
+      graft.ops.Dedup.contaminationCheck(train, b, "doc_id", "text", n = 3)
     }
-    inv.unpersist()
+    assert(served == static && static.size == 2,
+      s"served report must equal the batch operator: $served vs $static")
   }
 
   test("streamingNoveltyProfile equals batch noveltyProfile (stream-static)") {
-    implicit val ctx = spark.sqlContext
     val ref = Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text")
     val probe = Seq(
       (10L, "alpha beta gamma delta"),        // fully known → novelty 0
       (11L, "totally fresh words here"),      // fully fresh → novelty 1
       (12L, "alpha beta something else here")) // 1 of 4 known
-    val batch = graft.ops.Dedup.noveltyProfile(
-        probe.toDF("doc_id", "text"), ref, "doc_id", "text", n = 2)
-      .as[(Long, Long, Long, Double)].collect().toSet
-    assert(batch.nonEmpty)
-    // persisted: the static side is re-read every micro-batch
-    val inv = graft.ops.Dedup.trainGramInventory(ref, "doc_id", "text", n = 2)
-      .persist()
-    val in = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val q = StatefulOps.streamingNoveltyProfile(
-        in.toDF().toDF("doc_id", "ts", "text"), inv,
-        "doc_id", "text", "ts", n = 2,
-        lateness = "10 seconds", windowLen = "1 minute")
-      .writeStream.format("memory").queryName("novel").outputMode("append").start()
-    withQuery(q) {
-      in.addData(probe.map { case (i, t) => (i, ts("2024-01-01 00:00:01"), t) }: _*)
-      q.processAllAvailable()
-      // a far-future doc advances the watermark and closes the window
-      in.addData((99L, ts("2024-01-01 01:00:00"), "zz yy xx ww vv"))
-      q.processAllAvailable()
-      val streamed = spark.table("novel")
-        .filter(org.apache.spark.sql.functions.col("doc_id") =!= 99L)
-        .select("doc_id", "n_grams", "n_known", "novelty")
-        .as[(Long, Long, Long, Double)].collect().toSet
-      assert(streamed == batch,
-        s"stream-static novelty must equal the batch operator: $streamed vs $batch")
+    val (served, static) = servedPerBatch(Seq("doc_id", "text"),
+        Seq(probe.take(1), probe.drop(1))) { b =>
+      graft.ops.Dedup.noveltyProfile(b, ref, "doc_id", "text", n = 2)
     }
-    inv.unpersist()
+    assert(served == static && static.size == 3,
+      s"served novelty must equal the batch operator: $served vs $static")
   }
 
   test("streamingSemanticDedupFilter drops static near-dups; assignment matches batch") {
-    implicit val ctx = spark.sqlContext
-    val cents = Seq((10L, Seq(1.0f, 0.0f, 0.0f), 1.0),
-      (20L, Seq(0.0f, 1.0f, 0.0f), 1.0))
-    val centDf = cents.toDF("cent_id", "cent_vec", "cent_norm")
+    import org.apache.spark.sql.functions.col
+    val centDf = Seq((10L, Seq(1.0f, 0.0f, 0.0f), 1.0),
+      (20L, Seq(0.0f, 1.0f, 0.0f), 1.0)).toDF("cent_id", "cent_vec", "cent_norm")
     val ref = Seq((1L, Seq(1.0f, 0.0f, 0.0f)), (4L, Seq(0.0f, 1.0f, 0.0f)))
       .toDF("vec_id", "embedding")
-    val refAsg = StatefulOps.refAssignedCells(ref, "vec_id", "embedding",
-      centDf).persist()
-    val in = MemoryStream[(Long, Seq[Float])]
-    val q = StatefulOps.streamingSemanticDedupFilter(
-        in.toDF().toDF("vec_id", "embedding"), refAsg, cents,
-        "vec_id", "embedding", threshold = 0.98)
-      .select("vec_id", "cell")
-      .writeStream.format("memory").queryName("semdedup")
-      .outputMode("append").start()
-    withQuery(q) {
-      in.addData((2L, Seq(0.99f, 0.14f, 0.0f)), (3L, Seq(0.95f, 0.31f, 0.0f)),
-        (5L, Seq(0.0f, 0.99f, 0.14f)), (6L, Seq(0.0f, 0.0f, 1.0f)))
-      q.processAllAvailable()
-      val out = spark.table("semdedup").as[(Long, Long)].collect().toSet
-      // 2 and 5 are near-dups of static 1 and 4 → dropped; 3 survives
-      // (only the STATIC corpus dedups the stream — cross-arrival dedup
-      // is the batch operator's job); 6 pins the argmax tie-break
-      // (cos 0 against both centroids → larger cent_id wins)
-      assert(out == Set((3L, 10L), (6L, 20L)), s"got $out")
+    val arrivals = Seq((2L, Seq(0.99f, 0.14f, 0.0f)),
+      (3L, Seq(0.95f, 0.31f, 0.0f)), (5L, Seq(0.0f, 0.99f, 0.14f)),
+      (6L, Seq(0.0f, 0.0f, 1.0f)))
+    // the served form against a static reference: semanticDecontaminate
+    // per micro-batch gives each arrival's verdict, and its cell comes
+    // from the batch assignment (row-local, so split-invariant)
+    val (served, static) = servedPerBatch(Seq("vec_id", "embedding"),
+        Seq(arrivals.take(2), arrivals.drop(2))) { b =>
+      graft.ops.Similarity.semanticDecontaminate(b, "vec_id", "embedding",
+          ref, "embedding", threshold = 0.98)
+        .select(col("vec_id"), col("kept"))
+        .join(graft.ops.Similarity.semanticDedup(b, "vec_id", "embedding",
+          centDf, threshold = 2.0).select("vec_id", "cell"), "vec_id")
     }
-    // the literal-argmax cell must equal the batch assignCells verdict
-    // (the function is plain DataFrame ops, so it runs on batch input)
-    val probe = Seq((2L, Seq(0.99f, 0.14f, 0.0f)), (3L, Seq(0.95f, 0.31f, 0.0f)),
-      (5L, Seq(0.0f, 0.99f, 0.14f)), (6L, Seq(0.0f, 0.0f, 1.0f)))
-      .toDF("vec_id", "embedding")
-    val litCells = StatefulOps.streamingSemanticDedupFilter(probe, refAsg,
-        cents, "vec_id", "embedding", threshold = 2.0) // nothing drops
-      .select("vec_id", "cell").as[(Long, Long)].collect().toSet
-    val batchCells = StatefulOps.refAssignedCells(probe, "vec_id", "embedding",
-        centDf)
-      .select("c_id", "cell").as[(Long, Long)].collect().toSet
-    assert(litCells == batchCells, s"$litCells vs $batchCells")
-    refAsg.unpersist()
+    assert(served == static, s"served $served vs batch $static")
+    // 2 and 5 are near-dups of static 1 and 4 → dropped; 3 survives;
+    // 6 pins the argmax tie-break (cos 0 against both centroids → larger
+    // cent_id wins)
+    assert(served == Seq(Seq(2L, false, 10L), Seq(3L, true, 10L),
+      Seq(5L, false, 20L), Seq(6L, true, 20L)), s"got $served")
   }
 
   test("ST2/ST3 contract: watermarked streaming equals batch-minus-late-rows") {
@@ -1215,83 +1043,38 @@ class StatefulOpsSpec extends SparkSpec {
   }
 
   test("streamingBpePricing: windowed ingest pricing equals batch bpeTokenCounts") {
-    implicit val ctx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
     val texts = Seq((1L, "low lower low"), (2L, "lower lowest"),
       (3L, "low low low low"))
-    val corpus = texts.toDF("doc_id", "text")
-    val merges = graft.ops.TextAnalysis.collectMerges(corpus, "text", 2)
-    val dict = graft.ops.TextAnalysis.bpePricingDict(corpus, "text", merges)
-    val batch = graft.ops.TextAnalysis
-      .bpeTokenCounts(corpus, "doc_id", "text", merges)
-      .as[(Long, Long, Long)].collect().toSet
-    val rows = texts.map { case (id, tx) =>
-      (t("2024-01-01 00:00:01"), id, tx) // one open window holds each doc
+    val merges = graft.ops.TextAnalysis.collectMerges(
+      texts.toDF("doc_id", "text"), "text", 2)
+    // a document's price is complete inside the micro-batch carrying it:
+    // no window, no watermark
+    val (served, static) = servedPerBatch(Seq("doc_id", "text"),
+        Seq(texts.take(1), texts.drop(1))) { b =>
+      graft.ops.TextAnalysis.bpeTokenCounts(b, "doc_id", "text", merges)
     }
-    val in = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val q = StatefulOps.streamingBpePricing(
-        in.toDF().toDF("ts", "doc_id", "text"), "doc_id", "ts", "text",
-        dict, windowSec = 10, lateness = "5 seconds")
-      .writeStream.format("memory").queryName("bpeprice")
-      .outputMode("append").start()
-    withQuery(q) {
-      in.addData(rows: _*)
-      q.processAllAvailable()
-      assert(spark.table("bpeprice").isEmpty) // window [0,10) still open
-      // advance the watermark past the window: every doc's price emits
-      in.addData((t("2024-01-01 00:00:30"), 99L, "low"))
-      q.processAllAvailable()
-      val streamed = spark.table("bpeprice")
-        .filter(col("doc_id") < 99)
-        .select("doc_id", "n_words", "n_bpe")
-        .as[(Long, Long, Long)].collect().toSet
-      assert(streamed == batch,
-        s"ingest pricing must equal the batch pass: $streamed vs $batch")
-    }
+    assert(served == static && static.size == 3,
+      s"ingest pricing must equal the batch pass: $served vs $static")
   }
 
   test("streamingLmScore: ingest perplexity gate equals batch bigramLmScore") {
-    implicit val ctx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
     val train = Seq((0L, "a b a b c")).toDF("doc_id", "text")
     val (costs, oov) = graft.ops.TextAnalysis.trainBigramLm(train, "text",
       topV = 16)
     val texts = Seq((1L, "a b a b"), (2L, "c c c"), (3L, "b c a b x"))
-    val batch = graft.ops.TextAnalysis
-      .bigramLmScore(texts.toDF("doc_id", "text"), "doc_id", "text",
-        costs, oov)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    val dict = graft.ops.TextAnalysis.lmCostDict(spark, costs)
-    val in = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val q = StatefulOps.streamingLmScore(
-        in.toDF().toDF("ts", "doc_id", "text"), "doc_id", "ts", "text",
-        dict, oov, windowSec = 10, lateness = "5 seconds")
-      .writeStream.format("memory").queryName("lmgate")
-      .outputMode("append").start()
-    withQuery(q) {
-      in.addData(texts.map { case (id, tx) =>
-        (t("2024-01-01 00:00:01"), id, tx) }: _*)
-      q.processAllAvailable()
-      in.addData((t("2024-01-01 00:00:30"), 99L, "a b")) // close the window
-      q.processAllAvailable()
-      val streamed = spark.table("lmgate").filter(col("doc_id") < 99)
-        .select("doc_id", "n_ngrams", "total_cost", "avg_cost_q")
-        .as[(Long, Long, Long, Long)].collect().toSet
-      assert(streamed == batch,
-        s"ingest LM gate must equal the batch pass: $streamed vs $batch")
-      // OOV text really pays the OOV cost at ingest (the gate separates)
-      val byId = streamed.map(r => r._1 -> r._4).toMap
-      assert(byId(1L) < byId(2L))
+    val (served, static) = servedPerBatch(Seq("doc_id", "text"),
+        Seq(texts.take(2), texts.drop(2))) { b =>
+      graft.ops.TextAnalysis.bigramLmScore(b, "doc_id", "text", costs, oov)
     }
+    assert(served == static && static.size == 3,
+      s"ingest LM gate must equal the batch pass: $served vs $static")
+    // OOV text really pays the OOV cost at ingest (the gate separates)
+    val byId = served.map(r => r.head -> r(3).asInstanceOf[Long]).toMap
+    assert(byId(1L) < byId(2L))
   }
 
   test("streamingLadderLmScore: ingest 5-gram ladder gate equals batch " +
       "over a mixed-order corpus") {
-    implicit val ctx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
     val train = Seq((0L, "a b c d e a b c d e"),
       (1L, "a b c x y a b c x y")).toDF("doc_id", "text")
     val (lad, oov) = graft.ops.TextAnalysis.trainLadderLm(train, "text",
@@ -1301,34 +1084,15 @@ class StatefulOpsSpec extends SparkSpec {
     // OOV (three penalties + oov per gram)
     val texts = Seq((1L, "a b c d e"), (2L, "x a b c d"),
       (3L, "q r s t u v"))
-    val batch = graft.ops.TextAnalysis.ladderLmScore(
-        texts.toDF("doc_id", "text"), "doc_id", "text", lad, oov)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    val in = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val q = StatefulOps.streamingLadderLmScore(
-        in.toDF().toDF("ts", "doc_id", "text"), "doc_id", "ts", "text",
-        lad, oov, windowSec = 10, lateness = "5 seconds")
-      .writeStream.format("memory").queryName("ladgate")
-      .outputMode("append").start()
-    withQuery(q) {
-      // every prefix: the two arrival chunks land in the same window,
-      // the closer event flushes it — emitted rows must equal batch
-      in.addData((t("2024-01-01 00:00:01"), 1L, texts.head._2))
-      q.processAllAvailable()
-      in.addData(texts.tail.map { case (id, tx) =>
-        (t("2024-01-01 00:00:02"), id, tx) }: _*)
-      q.processAllAvailable()
-      in.addData((t("2024-01-01 00:00:30"), 99L, "a b c d e"))
-      q.processAllAvailable()
-      val streamed = spark.table("ladgate").filter(col("doc_id") < 99)
-        .select("doc_id", "n_ngrams", "total_cost", "avg_cost_q")
-        .as[(Long, Long, Long, Long)].collect().toSet
-      assert(streamed == batch && batch.size == 3,
-        s"ingest ladder gate must equal the batch pass: $streamed vs $batch")
-      // the gate separates: in-distribution < mixed < OOV
-      val byId = streamed.map(r => r._1 -> r._4).toMap
-      assert(byId(1L) < byId(2L) && byId(2L) < byId(3L))
+    val (served, static) = servedPerBatch(Seq("doc_id", "text"),
+        Seq(texts.take(1), texts.drop(1))) { b =>
+      graft.ops.TextAnalysis.ladderLmScore(b, "doc_id", "text", lad, oov)
     }
+    assert(served == static && static.size == 3,
+      s"ingest ladder gate must equal the batch pass: $served vs $static")
+    // the gate separates: in-distribution < mixed < OOV
+    val byId = served.map(r => r.head -> r(3).asInstanceOf[Long]).toMap
+    assert(byId(1L) < byId(2L) && byId(2L) < byId(3L))
   }
 
   test("minKProbLadderWriter: streamed ladder Min-K scores equal batch") {
@@ -1356,35 +1120,22 @@ class StatefulOpsSpec extends SparkSpec {
   }
 
   test("streamingRangeJoin: stream-static interval match equals batch rangeJoin") {
-    implicit val ctx = spark.sqlContext
     val intervals = Seq((100L, 0L, 250L), (200L, 240L, 400L),
       (300L, 1000L, 1100L)).toDF("incident_id", "lo_us", "hi_us")
     val points = Seq((1L, 0L), (2L, 245L), (3L, 250L), (4L, 251L),
       (5L, 399L), (6L, 1050L), (7L, 500L))
-    val batch = graft.ops.EventOps.rangeJoin(
-        points.toDF("event_id", "t_us"), intervals,
-        "t_us", "lo_us", "hi_us", bucketWidth = 100L)
-      .select("event_id", "incident_id")
-      .as[(Long, Long)].collect().toSet
-    // hand-check: p2/p3 fall in BOTH overlapping intervals, p7 in none
-    assert(batch == Set((1L, 100L), (2L, 100L), (2L, 200L), (3L, 100L),
-      (3L, 200L), (4L, 200L), (5L, 200L), (6L, 300L)))
-    val in = MemoryStream[(Long, Long)]
-    val q = StatefulOps.streamingRangeJoin(
-        in.toDF().toDF("event_id", "t_us"), intervals,
-        "t_us", "lo_us", "hi_us", bucketWidth = 100L)
-      .select("event_id", "incident_id")
-      .writeStream.format("memory").queryName("rjoin")
-      .outputMode("append").start()
-    withQuery(q) {
-      in.addData(points.take(4): _*)
-      q.processAllAvailable()
-      in.addData(points.drop(4): _*) // stateless: arrival order is free
-      q.processAllAvailable()
-      val streamed = spark.table("rjoin").as[(Long, Long)].collect().toSet
-      assert(streamed == batch,
-        "stateless stream-static range join must equal the batch pass")
+    // stateless: the batch plan runs on the stream, arrival order is free
+    val (streamed, static) = streamedDirect(Seq("event_id", "t_us"),
+        Seq(points.take(4), points.drop(4))) { s =>
+      graft.ops.EventOps.rangeJoin(s, intervals, "t_us", "lo_us", "hi_us",
+        bucketWidth = 100L).select("event_id", "incident_id")
     }
+    assert(streamed == static,
+      "the range join on the stream must equal the batch pass")
+    // hand-check: p2/p3 fall in BOTH overlapping intervals, p7 in none
+    assert(static.map(r => (r.head, r(1))).toSet == Set((1L, 100L),
+      (2L, 100L), (2L, 200L), (3L, 100L), (3L, 200L), (4L, 200L),
+      (5L, 200L), (6L, 300L)))
   }
 
   test("streamingRateAnomalies: live windows vs trained baseline equal batch") {

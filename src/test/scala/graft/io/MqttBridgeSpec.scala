@@ -79,6 +79,8 @@ class MqttBridgeSpec extends SparkSpec {
     val lines = Seq(
       ("nvr/detections/1", envLine(1, 1, "person", 0.9)),
       ("nvr/detections/1", envLine(1, 2, "car", 0.8)),
+      ("nvr/detections/abc", "garbage payload"), // dropped by validity gate
+      ("payload", "with\ttabs"),                 // payload keeps its tabs
       ("nvr/detections/2", envLine(2, 1, "dog", 0.7)))
     Files.write(Paths.get(fileDrop, "part-0.txt"),
       lines.map { case (t, p) => s"$t\t$p" }.mkString("\n").getBytes)
@@ -86,20 +88,25 @@ class MqttBridgeSpec extends SparkSpec {
     val bridge = new MqttBridge(spool).start()
     try {
       val c = new MqttClient("127.0.0.1", bridge.boundPort, "ingest").connect()
-      // first two at QoS 1 (ack awaited), third published then REDELIVERED
-      // with DUP as an ack-less client would after a reconnect
-      c.publish(lines(0)._1, lines(0)._2, qos = 1)
-      c.publish(lines(1)._1, lines(1)._2, qos = 1)
-      val pid = c.publishNoAck(lines(2)._1, lines(2)._2)
-      c.publishDup(lines(2)._1, lines(2)._2, pid)
+      // all but the last at QoS 1 (ack awaited), the last published then
+      // REDELIVERED with DUP as an ack-less client would after a reconnect
+      lines.init.foreach { case (t, p) => c.publish(t, p, qos = 1) }
+      val pid = c.publishNoAck(lines.last._1, lines.last._2)
+      c.publishDup(lines.last._1, lines.last._2, pid)
       c.disconnect()
 
       awaitCond("QoS-1 publishes must be spooled") {
-        Files.list(Paths.get(spool)).toArray.length >= 4
+        Files.list(Paths.get(spool)).toArray.length >= lines.size + 1
       }
       // raw envelope level: the duplicate IS there (QoS 1 = at-least-once)
       val raw = spark.read.format("graft-bus").load(spool)
-      assert(raw.count() == 4)
+      assert(raw.count() == lines.size + 1)
+      // and, with it collapsed, the raw envelopes equal the file drop's,
+      // tab edge cases included
+      def rawRows(dir: String): Seq[String] =
+        spark.read.format("graft-bus").load(dir).distinct()
+          .collect().map(_.toString).sorted.toSeq
+      assert(rawRows(spool) == rawRows(fileDrop))
       // pipeline level: latest-per-key (W1) absorbs the duplicate — rows
       // equal the clean file drop's
       def slice(dir: String): Seq[String] =
@@ -130,6 +137,10 @@ class MqttBridgeSpec extends SparkSpec {
       intercept[java.io.IOException] {
         c1.publish("nvr/detections/1", envLine(1, 3, "lost", 0.5), qos = 1)
       }
+      def spoolFiles: Map[String, Seq[Byte]] =
+        Files.list(Paths.get(spool)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+          .map(p => p.getFileName.toString -> Files.readAllBytes(p).toSeq).toMap
+      val before = spoolFiles
       // supervisor restarts the bridge on the SAME port + spool dir a
       // beat later; the reconnect loop's early attempts hit the dead
       // port and back off until the new bind lands
@@ -152,6 +163,10 @@ class MqttBridgeSpec extends SparkSpec {
       assert(raw.length == 3, s"expected 3 spooled lines, got ${raw.length}")
       assert(raw.map(_.getString(1)).distinct.length == 3,
         "acked publishes must survive a bridge restart exactly once")
+      val after = spoolFiles
+      assert(before.nonEmpty && before.forall { case (name, bytes) =>
+        after.get(name).contains(bytes) },
+        "existing spool files untouched by the restarted bridge")
     } finally {
       first.stop()
       if (second != null) second.stop()
