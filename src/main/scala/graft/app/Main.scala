@@ -79,9 +79,9 @@ object Main {
   def pipelineBuilder(spark: SparkSession, eventsDir: String, outDir: String,
                       ckRoot: String, maxFiles: Option[Int])
                      (c: EngineConfig, paused: () => Boolean): StreamingQuery = {
-    // ingest runs on the native bus connector (graft.io.bus DataSource V2:
-    // exactly-once file offsets, maxFilesPerTrigger admission control)
-    val events = Sources.eventBusStream(spark, eventsDir, maxFiles)
+    // ingest runs on Spark's file stream source (exactly-once per file
+    // through its source and offset logs, maxFilesPerTrigger admission)
+    val events = Sources.eventFileStream(spark, eventsDir, maxFiles)
       .filter(col("topic_source_id").isin(c.streamIds: _*))
       // F3: confidence threshold applied inside the nested array (the
       // reference delegates this to the inference layer; the engine
@@ -144,12 +144,7 @@ object Main {
     * render sink's data dependency; pixels stay out of the engine). */
   def wallEvents(spark: SparkSession, detectionsDir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    // a subscriber may start before the processor has published anything
-    // (the reference subscribes to the broker regardless) — make the
-    // drop zone exist so the stream can begin empty
-    val p = new org.apache.hadoop.fs.Path(detectionsDir)
-    org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration).mkdirs(p)
+    Sources.ensureDir(spark, detectionsDir)
     val frame = StructType(Seq(
       StructField("topic", StringType), StructField("source_id", IntegerType),
       StructField("payload", StringType)))
@@ -225,6 +220,15 @@ object Main {
     q.awaitTermination()
   }
 
+  /** Above this many paths, `InMemoryFileIndex` lists them with a Spark
+    * job of one task per path (default 32). The file stream source
+    * re-resolves each trigger's admitted files through that index, so
+    * with the default a trigger of more than 32 spool files would pay a
+    * listing job of one task per file. A fixed value well above any
+    * per-trigger file count keeps that listing on the driver. */
+  private[graft] val ListingThreshold =
+    "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "100000"
+
   def main(argv: Array[String]): Unit = {
     val mode = argv.headOption.getOrElse("pipeline")
     val args = parseArgs(argv)
@@ -237,6 +241,7 @@ object Main {
         .config("spark.sql.shuffle.partitions",
           args.getOrElse("shuffle-partitions", "32"))
         .config("spark.ui.enabled", "false")
+        .config(ListingThreshold._1, ListingThreshold._2)
       graft.Queries.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
       b.getOrCreate()
     }
@@ -268,7 +273,7 @@ object Main {
     val maxFiles = args.get("max-files-per-trigger").map(_.toInt)
 
     // `--mqtt-port N` (0 = ephemeral): serve real MQTT 3.1.1 on loopback,
-    // spooling PUBLISHes into the SAME drop dir the connector drains — a
+    // spooling PUBLISHes into the SAME drop dir the ingest stream drains — a
     // paho-style client (the reference's transport) publishes events
     // straight into this running pipeline; QoS-1 is durable-then-ack.
     val mqtt = args.get("mqtt-port").map { p =>
@@ -295,7 +300,11 @@ object Main {
       val cmds = Sources.parseCommands(
         spark.readStream.format("text").load(controlDir)
           .withColumn("seq", input_file_name()))
+      // a fixed poll interval: on the default trigger an idle control
+      // query lists the directory back to back
       harness.attach(cmds, "seq")
+        .trigger(org.apache.spark.sql.streaming.Trigger
+          .ProcessingTime("500 milliseconds"))
         .option("checkpointLocation", s"$ckRoot/control").start()
     }
     // ST3/K5: periodic retained metrics (reference default 10 s; 0 = off)

@@ -18,7 +18,7 @@ object Sources {
 
   /** Envelope lines: `topic<TAB>payload`. One file line per bus message —
     * the file-bridge analog of a wildcard subscription. */
-  private def parseEnvelope(lines: DataFrame): DataFrame =
+  private[graft] def parseEnvelope(lines: DataFrame): DataFrame =
     lines.select(
       substring_index(col("value"), "\t", 1).as("topic"),
       // everything after the first tab (payload may itself contain tabs)
@@ -35,13 +35,16 @@ object Sources {
       .filter(Schemas.eventIsValid(col("event")))
       .select(col("topic_source_id"), col("event.*"))
 
-  /** Streaming file-bridge source (S2 analog): tails a directory of
-    * envelope files. `maxFilesPerTrigger` is the backpressure/frame-drop
+  /** Live ingest (S1/S2): Spark's file stream source over the bus drop
+    * directory. Its source and offset logs make each file exactly-once
+    * across restarts, and hidden `.`/`_` files (the bridge's temp files)
+    * are never read. `maxFilesPerTrigger` is the backpressure/frame-drop
     * knob (ST5, pipeline_manager.py:122-123): it bounds per-micro-batch
     * intake so a backlog drains at a controlled rate instead of one giant
     * batch (the Kafka analog is maxOffsetsPerTrigger). */
   def eventFileStream(spark: SparkSession, dir: String,
                       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    ensureDir(spark, dir)
     val reader = spark.readStream.format("text")
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     parseEventBus(parseEnvelope(reader.load(dir)))
@@ -51,32 +54,20 @@ object Sources {
   def eventFileBatch(spark: SparkSession, dir: String): DataFrame =
     parseEventBus(parseEnvelope(spark.read.format("text").load(dir)))
 
-  /** Streaming ingest over the native bus connector (graft.io.bus — a
-    * DataSource V2 MicroBatchStream delivering `(topic, payload)` rows
-    * directly, S1-S3/K1's live contract). Functionally identical to
-    * [[eventFileStream]] over the same drop directory; the connector owns
-    * the envelope split, exactly-once file offsets, and
-    * `maxFilesPerTrigger` admission control. */
-  def eventBusStream(spark: SparkSession, dir: String,
-                     maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val reader = spark.readStream.format("graft-bus")
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    parseEventBus(reader.load(dir))
+  /** A subscriber may start before anything was published (the reference
+    * subscribes to the broker regardless), but Spark's file stream source
+    * rejects an absent path: make the drop directory exist so the stream
+    * can begin empty. */
+  private[graft] def ensureDir(spark: SparkSession, dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(p)
   }
-
-  /** Batch read over the bus connector — same rows as [[eventFileBatch]]. */
-  def eventBusBatch(spark: SparkSession, dir: String): DataFrame =
-    parseEventBus(spark.read.format("graft-bus").load(dir))
 
   /** Command stream (S3 analog): JSON command payloads, one per line.
     * Malformed commands parse to all-null structs and are dropped with
     * the same drop-and-log semantics as events
-    * (control_plane.py:316-327). */
-  def commandFileStream(spark: SparkSession, dir: String): DataFrame =
-    parseCommands(spark.readStream.format("text").load(dir))
-
-  /** Non-`value` columns (e.g. an ingest sequence for ordering) are
-    * carried through the parse. */
+    * (control_plane.py:316-327). Non-`value` columns (e.g. an ingest
+    * sequence for ordering) are carried through the parse. */
   def parseCommands(lines: DataFrame): DataFrame = {
     val carried = lines.columns.filterNot(_ == "value").map(col)
     lines.select(carried :+ from_json(col("value"), Schemas.command).as("cmd"): _*)

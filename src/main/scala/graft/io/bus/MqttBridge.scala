@@ -9,13 +9,13 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 /** A loopback MQTT 3.1.1 broker-bridge: network transport → atomic
-  * spool → exactly-once `graft-bus` connector, with the REAL broker wire
+  * spool → exactly-once file stream source, with the REAL broker wire
   * protocol on the transport, so a client that today talks to the
   * reference's broker (paho-mqtt, processor/mqtt_sink.py:104-117,
   * wall/mqtt_listener.py:60-69) connects to this bridge unchanged. The
   * spool is there because a Spark streaming source must RE-SERVE any
   * uncommitted offset range after a restart, which a raw socket cannot:
-  * durability is the spool, exactly-once is the connector's offset log.
+  * durability is the spool, exactly-once is the source's offset log.
   *
   * Served: CONNECT/CONNACK (protocol-level check, rc 0x01 on a non-3.1.1
   * client), PUBLISH QoS 0 and 1, SUBSCRIBE/SUBACK with `+`/`#` wildcard
@@ -32,7 +32,8 @@ import scala.jdk.CollectionConverters._
   *    disconnect (fire-and-forget permits batching; nothing was acked).
   * Spool lines are the repo-wide `topic TAB payload` envelope
   * (events/protocol.py:11-28 wire shape), drained exactly-once by the
-  * DSv2 connector's file offsets.
+  * file stream source; the `.mqtt-N.tmp` temp file is hidden from it
+  * until the rename publishes it.
   *
   * Also forwards: live PUBLISHes fan out to matching subscribers at
   * QoS 0 (the wall/metrics listener path), so the bridge is a usable

@@ -1762,17 +1762,15 @@ object Dedup {
     * funnelling every row into one degenerate bucket. Slices use an
     * UNSIGNED shift so full-width 64-bit fingerprints band correctly. */
   private[graft] def hammingKeyed(fp: DataFrame, id: String, fpCol: String,
-                                  bits: Int, chunks: Int,
-                                  carry: Seq[String] = Nil): DataFrame = {
+                                  bits: Int, chunks: Int): DataFrame = {
     val widths = Array.tabulate(chunks)(c =>
       bits / chunks + (if (c < bits % chunks) 1 else 0))
     val starts = widths.scanLeft(0)(_ + _)
-    fp.select(Seq(col(id).as("__doc"), col(fpCol).as("__fp")) ++
-      carry.map(col) :+
+    fp.select(col(id).as("__doc"), col(fpCol).as("__fp"),
       posexplode(array((0 until chunks).map { c =>
         val mask = if (widths(c) >= 64) -1L else (1L << widths(c)) - 1L
         shiftrightunsigned(col(fpCol), starts(c)).bitwiseAND(mask)
-      }: _*)).as(Seq("ck", "cv")): _*)
+      }: _*)).as(Seq("ck", "cv")))
   }
 
   /** Hamming-distance near-dup pairs over ANY int64 fingerprint table
@@ -1968,11 +1966,11 @@ object Dedup {
       within, maxLenDiff, maxDist)
   }
 
-  /** The incoming side of the cross-corpus edit-distance forms: length,
-    * bucket, and the 3-bucket explode (row-local — streaming-safe). */
-  private[graft] def edProbeSide(incoming: DataFrame, id: String,
-                                 text: String, within: Seq[String],
-                                 maxLenDiff: Int): DataFrame = {
+  /** The incoming side of the cross-corpus edit-distance form: length,
+    * bucket, and the 3-bucket explode (row-local). */
+  private def edProbeSide(incoming: DataFrame, id: String,
+                          text: String, within: Seq[String],
+                          maxLenDiff: Int): DataFrame = {
     require(maxLenDiff >= 0, s"need maxLenDiff >= 0, got $maxLenDiff")
     val w = maxLenDiff + 1
     incoming.select(
@@ -1985,11 +1983,11 @@ object Dedup {
       .drop("__bi")
   }
 
-  /** Probe-vs-band-table join + Myers verify shared by the incremental
-    * and streaming cross-corpus forms (stateless — stream-static safe). */
-  private[graft] def crossEditPairs(probe: DataFrame, bands: DataFrame,
-                                    within: Seq[String], maxLenDiff: Int,
-                                    maxDist: Int): DataFrame = {
+  /** Probe-vs-band-table join + Myers verify of the incremental
+    * cross-corpus form (stateless). */
+  private def crossEditPairs(probe: DataFrame, bands: DataFrame,
+                             within: Seq[String], maxLenDiff: Int,
+                             maxDist: Int): DataFrame = {
     require(maxDist >= 0, s"need maxDist >= 0, got $maxDist")
     probe.join(bands.withColumnRenamed("__bb", "__k"),
         ("__k" +: within).toSeq)

@@ -4729,8 +4729,7 @@ object TextAnalysis {
     * per top-order n-gram occurrence with its backoff-chain cost. */
   private[graft] def ladderCosted(df: DataFrame, id: String, text: String,
                            ladder: Seq[Seq[(String, Long)]], oovCost: Long,
-                           scaleBits: Int,
-                           carry: Seq[String] = Nil): DataFrame = {
+                           scaleBits: Int): DataFrame = {
     require(ladder.nonEmpty && ladder.forall(_.nonEmpty),
       "ladderLm: empty model")
     require(scaleBits >= 1 && scaleBits <= 20, s"bad scaleBits: $scaleBits")
@@ -4738,14 +4737,13 @@ object TextAnalysis {
     val maxOrder = ladder.size + 1
     val penalty = 1L << scaleBits
     val wcols = (1 to maxOrder).map(j => s"w$j")
-    val lead = col(id) +: carry.map(col)
     // per exploded row, the order-k suffix key is the last k words
     def key(k: Int): Column =
       concat_ws(" ", wcols.takeRight(k).map(col): _*)
     var t = df
-      .select(lead :+ posexplode(ngramStructs(col(text), maxOrder))
-        .as(Seq("__p", "__g")): _*)
-      .select(lead ++ Seq(col("__p")) ++
+      .select(col(id), posexplode(ngramStructs(col(text), maxOrder))
+        .as(Seq("__p", "__g")))
+      .select(Seq(col(id), col("__p")) ++
         wcols.map(w => col(s"__g.$w").as(w)): _*)
     (2 to maxOrder).foreach { k =>
       val dict = ladder(k - 2).toDF(s"__k$k", s"__c$k")
@@ -4758,7 +4756,7 @@ object TextAnalysis {
     (3 to maxOrder).foreach { k =>
       chain = coalesce(col(s"__c$k"), lit(penalty) + chain)
     }
-    t.select(lead ++ Seq(col("__p"), chain.as("__c")): _*)
+    t.select(col(id), col("__p"), chain.as("__c"))
   }
 
   /** CCNet's head/middle/tail cut points as a trained artifact: the

@@ -1,16 +1,20 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.functions._
 import graft.io.Sources
 import graft.ops.EventOps
+import graft.streaming.StatefulOps
 import scala.collection.mutable
 
-/** The native bus connector (graft.io.bus, DataSource V2) versus the file
-  * bridge it replaces: identical rows in batch and streaming, exactly-once
-  * per file across restarts, and admission control via maxFilesPerTrigger.
-  * This is the IoSlice end-to-end contract re-run on the new source. */
+/** Live ingest over the bus drop directory (Spark's file stream source
+  * plus the envelope parse): the raw `(topic, payload)` split, exactly-once
+  * per file across restarts, starting on an absent directory, the
+  * streaming slice against the batch replay when the fixture spans
+  * several micro-batches, and admission control via maxFilesPerTrigger. */
 class BusSourceSpec extends SparkSpec {
   import spark.implicits._
 
@@ -39,34 +43,35 @@ class BusSourceSpec extends SparkSpec {
         size(col("detections")).as("n_det")),
       Seq("source_id"), "timestamp", "frame_id")
 
-  test("batch: connector rows are identical to the file bridge's") {
+  test("batch: raw envelope rows keep payload tabs and split tabless lines") {
     val dir = Files.createTempDirectory("bus-batch").toString
     writeFixture(dir)
-    // raw envelope level: same (topic, payload) pairs, tab edge cases incl.
-    val bridge = spark.read.format("text").load(dir)
-      .select(substring_index(col("value"), "\t", 1).as("topic"),
-        expr("substring(value, instr(value, '\t') + 1)").as("payload"))
-      .collect().map(_.toString).sorted.toSeq
-    val bus = spark.read.format("graft-bus").load(dir)
-      .collect().map(_.toString).sorted.toSeq
-    assert(bus == bridge)
-    // parsed event level too
-    val a = Sources.eventFileBatch(spark, dir).collect().map(_.toString).sorted.toSeq
-    val b = Sources.eventBusBatch(spark, dir).collect().map(_.toString).sorted.toSeq
-    assert(a == b && a.size == 3)
+    val raw = Sources.parseEnvelope(spark.read.text(dir))
+      .as[(String, String)].collect().toSet
+    assert(raw.contains(("payload", "with\ttabs")))
+    assert(raw.contains(("not-even-an-envelope", "not-even-an-envelope")))
+    assert(raw.size == fixture.size)
+    // garbage payload, tabbed payload and tabless line fail the validity gate
+    assert(Sources.eventFileBatch(spark, dir).count() == 3)
   }
 
   test("streaming: end-to-end slice on the connector equals the file bridge") {
     val dir = Files.createTempDirectory("bus-stream").toString
-    writeFixture(dir)
+    // one fixture line per file, one file per micro-batch: the slice's
+    // latest-per-key state has to carry across micro-batches
+    fixture.zipWithIndex.foreach { case (line, i) =>
+      writeFixture(dir, s"part-$i.txt", Seq(line)) }
     val expected = pipeline(Sources.eventFileBatch(spark, dir))
       .collect().map(_.toString).sorted.toSeq
-    val q = pipeline(Sources.eventBusStream(spark, dir)).writeStream
+    assert(expected.size == 2)
+    val q = pipeline(Sources.eventFileStream(spark, dir, Some(1))).writeStream
       .format("memory").queryName("bus_slice").outputMode("complete").start()
     try {
       q.processAllAvailable()
       val streamed = spark.table("bus_slice").collect().map(_.toString).sorted.toSeq
       assert(streamed == expected)
+      assert(q.recentProgress.count(_.numInputRows > 0) > 1,
+        "the fixture spans several micro-batches")
     } finally q.stop()
   }
 
@@ -74,7 +79,7 @@ class BusSourceSpec extends SparkSpec {
     val dir = Files.createTempDirectory("bus-incr").toString
     val ck = Files.createTempDirectory("bus-incr-ck").toString
     val seen = mutable.ArrayBuffer.empty[(Int, Long)]
-    def start() = Sources.eventBusStream(spark, dir).writeStream
+    def start() = Sources.eventFileStream(spark, dir).writeStream
       .option("checkpointLocation", ck)
       .foreachBatch { (b: DataFrame, _: Long) =>
         val rows = b.select("source_id", "frame_id").as[(Int, Long)].collect()
@@ -105,69 +110,16 @@ class BusSourceSpec extends SparkSpec {
   test("a subscriber can start on an empty (even absent) drop directory") {
     val parent = Files.createTempDirectory("bus-empty").toString
     val dir = s"$parent/not-created-yet"
-    val q = Sources.eventBusStream(spark, dir).writeStream
+    val q = Sources.eventFileStream(spark, dir).writeStream
       .format("memory").queryName("bus_empty").outputMode("append").start()
     try {
       q.processAllAvailable()
       assert(spark.table("bus_empty").isEmpty)
-      Files.createDirectory(Paths.get(dir))
       writeFixture(dir, "late.txt", Seq(envLine(5, 1, "person", 0.9)))
       q.processAllAvailable()
       assert(spark.table("bus_empty").select("source_id")
         .as[Int].collect().toSeq == Seq(5))
     } finally q.stop()
-  }
-
-  test("offset log compacts by file age; pruned files never replay") {
-    val dir = Files.createTempDirectory("bus-compact").toString
-    val ck = Files.createTempDirectory("bus-compact-ck").toString
-    val seen = mutable.ArrayBuffer.empty[(Int, Long)]
-    def start() = Sources.parseEventBus(
-      spark.readStream.format("graft-bus")
-        .option("maxFileAgeMs", "60000").load(dir))
-      .writeStream.option("checkpointLocation", ck)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val rows = b.select("source_id", "frame_id").as[(Int, Long)].collect()
-        seen.synchronized(seen ++= rows)
-        ()
-      }.start()
-
-    // a consumed backlog whose mtimes sit 10 minutes in the past
-    val old = java.time.Instant.now().minusSeconds(600)
-    (1 to 5).foreach { i =>
-      writeFixture(dir, s"old$i.txt", Seq(envLine(1, i.toLong, "person", 0.9)))
-      Files.setLastModifiedTime(Paths.get(dir, s"old$i.txt"),
-        java.nio.file.attribute.FileTime.from(old.plusSeconds(i)))
-    }
-    val q1 = start()
-    try {
-      q1.processAllAvailable()
-      // a fresh file advances the retention horizon past the old batch
-      writeFixture(dir, "now.txt", Seq(envLine(2, 1, "person", 0.9)))
-      q1.processAllAvailable()
-      assert(seen.sorted.toSeq ==
-        (1 to 5).map(i => (1, i.toLong)) :+ ((2, 1L)))
-    } finally q1.stop()
-
-    // the checkpoint's newest offset holds ONLY the in-window file — the
-    // five consumed old files are compacted out, bounding offset size
-    val offsetFiles = Files.list(Paths.get(ck, "offsets")).toArray
-      .map(_.toString).filter(_.split("/").last.forall(_.isDigit))
-    val latest = offsetFiles.maxBy(_.split("/").last.toLong)
-    val js = new String(Files.readAllBytes(Paths.get(latest)))
-    assert(js.contains("now.txt") && !js.contains("old1.txt"),
-      s"offset not compacted: $js")
-
-    // restart on the compacted checkpoint: nothing replays (the pruned
-    // files are barred by the horizon, not the consumed set), new data in
-    writeFixture(dir, "later.txt", Seq(envLine(3, 1, "person", 0.9)))
-    val q2 = start()
-    try {
-      q2.processAllAvailable()
-      assert(seen.sorted.toSeq ==
-        ((1 to 5).map(i => (1, i.toLong)) ++ Seq((2, 1L), (3, 1L))),
-        "pruned files must not replay; the post-restart file must arrive")
-    } finally q2.stop()
   }
 
   test("maxFilesPerTrigger bounds micro-batch intake (ST5 backpressure)") {
@@ -176,10 +128,10 @@ class BusSourceSpec extends SparkSpec {
       Seq(envLine(i, i.toLong, "person", 0.9))))
     val batchSizes = mutable.ArrayBuffer.empty[Long]
     // option name deliberately cased wrong: data source options are
-    // case-insensitive by Spark convention and the connector honors that
-    val q = Sources.parseEventBus(
-      spark.readStream.format("graft-bus").option("MAXFILESPERTRIGGER", "1")
-        .load(dir))
+    // case-insensitive by Spark convention and the file source honors that
+    val q = Sources.parseEventBus(Sources.parseEnvelope(
+      spark.readStream.format("text").option("MAXFILESPERTRIGGER", "1")
+        .load(dir)))
       .writeStream
       .foreachBatch { (b: DataFrame, _: Long) =>
         batchSizes.synchronized(batchSizes += b.count())
@@ -191,5 +143,54 @@ class BusSourceSpec extends SparkSpec {
       assert(sizes.sum == 3, s"all files drain: $sizes")
       assert(sizes.forall(_ <= 1), s"one file per micro-batch: $sizes")
     } finally q.stop()
+  }
+
+  test("read stage: a micro-batch of 40 spool files is one scan of at most " +
+      "defaultParallelism tasks and no job besides the sink's") {
+    val dir = Files.createTempDirectory("bus-read").toString
+    val out = Files.createTempDirectory("bus-read-out").toString
+    (1 to 40).foreach(i => writeFixture(dir, f"mqtt-$i%012d.txt",
+      Seq(envLine(i % 12, i.toLong, "person", 0.9))))
+    val marker = "bus-read-stage-marker"
+    // (streaming query id, tasks per stage) of each job, in start order
+    val jobs = mutable.ArrayBuffer.empty[(String, Seq[Int])]
+    @volatile var markerSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { props =>
+          if (props.getProperty("spark.job.description") == marker)
+            markerSeen = true
+          else Option(props.getProperty("sql.streaming.queryId")).foreach {
+            id => jobs.synchronized(jobs += id -> e.stageInfos.map(_.numTasks))
+          }
+        }
+    }
+    val (key, value) = graft.app.Main.ListingThreshold
+    spark.conf.set(key, value)
+    spark.sparkContext.addSparkListener(listener)
+    val queryId = try {
+      val q = StatefulOps.eachBatch(Sources.eventFileStream(spark, dir)) {
+        (b, _) => b.write.mode("append").parquet(out)
+      }.trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      // listener events arrive in order: once a later marker job is seen,
+      // every job of the micro-batch has been recorded
+      spark.sparkContext.setJobDescription(marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      awaitCond("marker job seen")(markerSeen)
+      q.id.toString
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.unset(key)
+    }
+    assert(spark.read.parquet(out).count() == 40)
+    val seen = jobs.synchronized(jobs.toSeq).collect {
+      case (id, tasks) if id == queryId => tasks }
+    val par = spark.sparkContext.defaultParallelism
+    assert(seen.flatten.forall(_ <= par),
+      s"a stage ran more than $par tasks: $seen")
+    // eachBatch's emptiness probe and the sink's write, no listing job
+    assert(seen.size == 2, s"jobs (tasks per stage): $seen")
   }
 }

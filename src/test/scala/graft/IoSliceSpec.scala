@@ -24,6 +24,7 @@ class IoSliceSpec extends SparkSpec {
       ev(1, 2, "2024-01-01T00:00:01.000Z", "car", 0.8),
       ev(2, 1, "2024-01-01T00:00:00.500Z", "dog", 0.7),
       "nvr/detections/abc\tgarbage payload",        // dropped by validity gate
+      "payload\twith\ttabs",                         // payload keeps its tabs
       "not-even-an-envelope")                        // degenerate line
     Files.write(java.nio.file.Paths.get(dir, "part-0.txt"),
       lines.mkString("\n").getBytes)

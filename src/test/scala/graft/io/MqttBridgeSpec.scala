@@ -99,19 +99,19 @@ class MqttBridgeSpec extends SparkSpec {
         Files.list(Paths.get(spool)).toArray.length >= lines.size + 1
       }
       // raw envelope level: the duplicate IS there (QoS 1 = at-least-once)
-      val raw = spark.read.format("graft-bus").load(spool)
+      val raw = Sources.parseEnvelope(spark.read.text(spool))
       assert(raw.count() == lines.size + 1)
       // and, with it collapsed, the raw envelopes equal the file drop's,
       // tab edge cases included
       def rawRows(dir: String): Seq[String] =
-        spark.read.format("graft-bus").load(dir).distinct()
+        Sources.parseEnvelope(spark.read.text(dir)).distinct()
           .collect().map(_.toString).sorted.toSeq
       assert(rawRows(spool) == rawRows(fileDrop))
       // pipeline level: latest-per-key (W1) absorbs the duplicate — rows
       // equal the clean file drop's
       def slice(dir: String): Seq[String] =
         EventOps.latestPerKey(
-          Sources.eventBusBatch(spark, dir)
+          Sources.eventFileBatch(spark, dir)
             .select(col("source_id"), col("frame_id"), col("timestamp"),
               size(col("detections")).as("n_det")),
           Seq("source_id"), "timestamp", "frame_id")
@@ -159,7 +159,7 @@ class MqttBridgeSpec extends SparkSpec {
       awaitCond("post-restart publish must be spooled") {
         Files.list(Paths.get(spool)).toArray.length >= 3
       }
-      val raw = spark.read.format("graft-bus").load(spool).collect()
+      val raw = Sources.parseEnvelope(spark.read.text(spool)).collect()
       assert(raw.length == 3, s"expected 3 spooled lines, got ${raw.length}")
       assert(raw.map(_.getString(1)).distinct.length == 3,
         "acked publishes must survive a bridge restart exactly once")
@@ -184,7 +184,7 @@ class MqttBridgeSpec extends SparkSpec {
       awaitCond("disconnect must flush the QoS-0 buffer") {
         Files.list(Paths.get(spool)).toArray.length >= 1
       }
-      val rows = spark.read.format("graft-bus").load(spool).collect()
+      val rows = Sources.parseEnvelope(spark.read.text(spool)).collect()
       assert(rows.length == 5 && rows.forall(_.getString(0) == "t/a"))
     } finally bridge.stop()
   }
