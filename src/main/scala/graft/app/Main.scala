@@ -1,8 +1,8 @@
 package graft.app
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import graft.control.{ControlHarness, EngineConfig}
 import graft.io.{Sinks, Sources}
 import graft.model.Schemas
@@ -19,9 +19,11 @@ import graft.streaming.StatefulOps
   *  - `pipeline`: streaming processor — ingest envelopes, filter, publish
   *    per-key detections, run the control plane (commands dir → ACK/status
   *    tables), until terminated. Flags mirror cli.py: --instance-id,
-  *    --confidence, --max-fps (via --max-files-per-trigger backpressure),
-  *    --model, and stream selection --n/--start/--end/--streams
-  *    (cli.py:112-124).
+  *    --confidence, --max-fps, --model, and stream selection
+  *    --n/--start/--end/--streams (cli.py:112-124). `--max-fps` is
+  *    validated, reported in status and restarts the pipeline when
+  *    `set_fps` changes it, but no data-plane code reads it: ingest is
+  *    bounded only by `--max-files-per-trigger`.
   *  - `wall`: the consumer process (reference VideoWall, pixels excluded):
   *    subscribe to the published detections, parse + label, maintain the
   *    retained latest-per-source tiles table the renderer draws from.
@@ -30,6 +32,15 @@ import graft.streaming.StatefulOps
   *    without pixels).
   */
 object Main {
+
+  /** The one cadence of the live queries (pipeline, wall, control): at
+    * most one trigger per second, so each query's fixed per-trigger work
+    * is paid once a second however the events arrive. The reference's
+    * wall expires a detection after 1 s (wall/config.py:50-51) and its
+    * default stream rate is 1 fps (cli.py:62). A trigger that runs
+    * longer than the interval is followed at once by the next one, so a
+    * backlog drains as fast as back-to-back triggers would drain it. */
+  val LiveTrigger: Trigger = Trigger.ProcessingTime("1 second")
 
   private def parseArgs(argv: Array[String]): Map[String, String] =
     argv.drop(1).sliding(2, 2).collect {
@@ -75,7 +86,7 @@ object Main {
     * projection (command_handlers.py:266-310, 567-647). The checkpoint is
     * shared across restarts: the file-source offset log replays unread
     * envelopes and the new plan's filter decides their fate — a removed
-    * stream's backlog is dropped, not published. */
+    * stream's backlog is dropped, not published. Runs on [[LiveTrigger]]. */
   def pipelineBuilder(spark: SparkSession, eventsDir: String, outDir: String,
                       ckRoot: String, maxFiles: Option[Int])
                      (c: EngineConfig, paused: () => Boolean): StreamingQuery = {
@@ -89,11 +100,14 @@ object Main {
       .withColumn("detections", filter(col("detections"),
         d => d.getField("confidence") >= c.confidenceThreshold))
     // one part-file per micro-batch: the wall's file listing and the
-    // `metrics` fold both grow with the file count
+    // `metrics` fold both grow with the file count. The append is the
+    // batch's one read, so a batch whose every row the filters dropped
+    // still appends, a zero-row part-file.
     StatefulOps.pauseGatedWriter(events, paused) { (batch, _) =>
       Sinks.detectionPublishFrame(batch, "nvr/detections")
         .coalesce(1).write.mode("append").parquet(s"$outDir/detections")
-    }.option("checkpointLocation", s"$ckRoot/pipeline").start()
+    }.trigger(LiveTrigger)
+      .option("checkpointLocation", s"$ckRoot/pipeline").start()
   }
 
   /** On-demand METRICS publication (command_handlers.py:340-372): the
@@ -111,10 +125,11 @@ object Main {
     * .IncrementalReport]]), so its cost is O(new data), not O(instance
     * lifetime) — the reference reports from running counters in O(1) and
     * a full-log rescan per command would diverge from that as the
-    * published log grows. Returns the number of files folded (0 when
+    * published log grows. `metrics` is the caller's held
+    * [[metricsTable]]. Returns the number of files folded (0 when
     * nothing new was published). */
   def publishFullMetrics(spark: SparkSession, outDir: String,
-                         cfg: EngineConfig): Int = {
+                         cfg: EngineConfig, metrics: Sinks.RetainedTable): Int = {
     val parse: DataFrame => DataFrame = raw => raw
       .select(Schemas.parseEvent(col("payload")).as("e"))
       .select(col("e.source_id").as("source_id"),
@@ -131,11 +146,16 @@ object Main {
         .withColumn("instance_id", lit(cfg.instanceId))
         .withColumn("timestamp", lit(new java.sql.Timestamp(
           System.currentTimeMillis())))
-      Sinks.upsertRetained(spark, stamped, s"$outDir/metrics",
-        Seq("instance_id", "source_id"), "timestamp", "n_frames")
+      metrics.upsert(stamped)
     }
     folded
   }
+
+  /** The retained per-(instance, source) report table that
+    * [[publishFullMetrics]] upserts into. */
+  def metricsTable(spark: SparkSession, outDir: String): Sinks.RetainedTable =
+    new Sinks.RetainedTable(spark, s"$outDir/metrics",
+      Seq("instance_id", "source_id"), "timestamp", "n_frames")
 
   /** The wall consumer's ingest (reference process #2:
     * wall/mqtt_listener.py:86-96 parse + wall/detection_cache.py cache
@@ -155,16 +175,19 @@ object Main {
   }
 
   /** The wall's tile cache as a retained table (W1 last-value-wins per
-    * source, K3-style upsert): each micro-batch reduces to its latest row
-    * per source, then merges into the tiles table. Display labels (E3)
+    * source, K3-style upsert), held by the writer on the driver: each
+    * micro-batch reduces to its latest row per source on the executors,
+    * then those fleet-sized rows merge into the tiles table. Runs on
+    * [[LiveTrigger]]. Display labels (E3)
     * are formatted AFTER the reduction — the interpreted `transform` HOF
     * touches |sources| rows per batch, never the full event stream (only
     * surviving tiles get rendered, so labeling losers would be wasted
     * interpreted work). Read-side freshness (ST1's TTL) belongs to the
     * consumer: `EventOps.latestPerKeyWithTtl` over the table, exactly
     * like the reference expires on `get`. */
-  def wallWriter(events: DataFrame, tilesPath: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+  def wallWriter(events: DataFrame, tilesPath: String): DataStreamWriter[Row] = {
+    val tiles = new Sinks.RetainedTable(events.sparkSession, tilesPath,
+      Seq("source_id"), "timestamp", "frame_id")
     StatefulOps.eachBatch(events) { (batch, _) =>
       val latest = EventOps.latestPerKey(batch,
         Seq("source_id"), "timestamp", "frame_id")
@@ -172,9 +195,9 @@ object Main {
           d => EventOps.label(d.getField("class_name"),
             d.getField("confidence"), d.getField("tracker_id")))))
         .drop("detections")
-      Sinks.upsertRetained(batch.sparkSession, latest, tilesPath,
-        Seq("source_id"), "timestamp", "frame_id")
-    }
+      tiles.upsert(latest)
+    }.trigger(LiveTrigger)
+  }
 
   /** Periodic lightweight-metrics publication (ST3/K5 cadence,
     * metrics_reporter.py:164-233): a streaming query over this instance's
@@ -184,8 +207,7 @@ object Main {
     * timer becomes a `ProcessingTime` trigger; `intervalSec = 0` disables
     * it, like `--metrics-interval 0`. */
   def metricsPublisher(spark: SparkSession, outDir: String, instanceId: String,
-                       intervalSec: Int)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+                       intervalSec: Int): DataStreamWriter[Row] = {
     val events = wallEvents(spark, s"$outDir/detections")
       .select(col("source_id"), col("timestamp").as("ts"),
         (col("inference_time_ms") / 1000).as("value"))
@@ -196,18 +218,17 @@ object Main {
     // update mode = the CURRENT interval's aggregates each trigger (the
     // reference publishes a live snapshot, not a watermark-closed one);
     // the watermark still bounds window state
+    val lite = new Sinks.RetainedTable(spark, s"$outDir/metrics_lite",
+      Seq("instance_id", "source_id"), "window_start", "n")
     StatefulOps.eachBatch(report) { (batch, _) =>
       val rows = batch
         .select(col("user_id").as("source_id"),
           col("window.start").as("window_start"), col("n"),
           col("n_valid"), col("rate"), col("avg_val_ms").as("avg_inference_ms"))
         .withColumn("instance_id", lit(instanceId))
-      Sinks.upsertRetained(batch.sparkSession, rows,
-        s"$outDir/metrics_lite", Seq("instance_id", "source_id"),
-        "window_start", "n")
+      lite.upsert(rows)
     }.outputMode("update")
-      .trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime(s"$intervalSec seconds"))
+      .trigger(Trigger.ProcessingTime(s"$intervalSec seconds"))
   }
 
   private def runWall(spark: SparkSession, args: Map[String, String],
@@ -218,6 +239,17 @@ object Main {
         args.getOrElse("checkpoint-dir", s"$outDir/_ck_wall"))
       .start()
     q.awaitTermination()
+  }
+
+  /** The control loop's command query over `controlDir` (one command
+    * file per operator command), on [[LiveTrigger]]: an idle control
+    * query lists the directory once a second, not back to back. */
+  def controlWriter(spark: SparkSession, harness: ControlHarness,
+                    controlDir: String): DataStreamWriter[Row] = {
+    val cmds = Sources.parseCommands(
+      spark.readStream.format("text").load(controlDir)
+        .withColumn("seq", input_file_name()))
+    harness.attach(cmds, "seq").trigger(LiveTrigger)
   }
 
   /** Above this many paths, `InMemoryFileIndex` lists them with a Spark
@@ -282,13 +314,15 @@ object Main {
       br
     }
 
+    val statusTable = new Sinks.RetainedTable(spark, s"$outDir/status",
+      Seq("instance_id"), "timestamp", "status")
+    val metrics = metricsTable(spark, outDir)
     val harness = new ControlHarness(cfg,
       pipelineBuilder(spark, eventsDir, outDir, ckRoot, maxFiles),
       acks => if (acks.nonEmpty)
         acks.toDF().write.mode("append").parquet(s"$outDir/acks"),
-      status => Sinks.upsertRetained(spark, Seq(status).toDF(),
-        s"$outDir/status", Seq("instance_id"), "timestamp", "status"),
-      onMetricsRequest = c => publishFullMetrics(spark, outDir, c))
+      status => statusTable.upsert(Seq(status).toDF()),
+      onMetricsRequest = c => publishFullMetrics(spark, outDir, c, metrics))
     // ST7 supervision: crashed pipeline queries (exception present) are
     // logged; clean stops (restart/stop commands) are not failures.
     graft.control.Supervisor.install(spark) { (runId, ex) =>
@@ -297,14 +331,7 @@ object Main {
     harness.start()
 
     args.get("control-dir").foreach { controlDir =>
-      val cmds = Sources.parseCommands(
-        spark.readStream.format("text").load(controlDir)
-          .withColumn("seq", input_file_name()))
-      // a fixed poll interval: on the default trigger an idle control
-      // query lists the directory back to back
-      harness.attach(cmds, "seq")
-        .trigger(org.apache.spark.sql.streaming.Trigger
-          .ProcessingTime("500 milliseconds"))
+      controlWriter(spark, harness, controlDir)
         .option("checkpointLocation", s"$ckRoot/control").start()
     }
     // ST3/K5: periodic retained metrics (reference default 10 s; 0 = off)

@@ -3,6 +3,7 @@ package graft.io
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.StructType
 
 /** Sinks (K1-K5). The reference's broker-side behaviors map to two table
   * disciplines:
@@ -15,40 +16,89 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *  - non-retained streams (detections K1, ACKs K4) are append-only.
   *
   * Scale note: the retained tables are keyed by instance/source — their
-  * cardinality is the fleet size, not the event volume. The merge below
-  * reads+rewrites only that tiny table per batch; the event stream never
-  * flows through it. */
+  * cardinality is the fleet size, not the event volume. Their writer
+  * holds them on the driver; the event stream never flows through them. */
 object Sinks {
 
-  /** Merge a micro-batch into a last-value-wins table at `path`, keyed by
-    * `key`, newest by (`orderCol`, `tieBreak`). Atomic via
-    * write-then-swap of a staging directory. Streaming callers reach it
-    * through [[graft.streaming.StatefulOps.eachBatch]], which skips
-    * empty micro-batches, so it makes no emptiness check of its own (one
-    * more scan of the batch); an empty `batch` rewrites the table
-    * unchanged. */
-  def upsertRetained(spark: SparkSession, batch: DataFrame, path: String,
-                     key: Seq[String], orderCol: String, tieBreak: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
+  /** A last-value-wins table at `path`, keyed by `key`, newest by
+    * (`orderCol`, `tieBreak`), held on the driver by its one writer.
+    * Both order columns compare with Spark's `desc` null ordering (a
+    * null loses); on a full tie the incoming row wins, so a replayed
+    * batch leaves the table as it was. The other columns (the MAPs of a
+    * status row among them) are carried and never compared.
+    *
+    * The first non-empty upsert loads the table once, read with the
+    * batch's declared schema (no inference job). Each upsert collects
+    * the batch (one job; callers pass fleet-sized rows), merges it on
+    * the driver and writes the whole table as one part-file (one job).
+    * An empty batch writes nothing. A writer that restarts builds a new
+    * value, which loads the table again.
+    *
+    * Not atomic: the write lands in a staging directory, then the table
+    * directory is deleted and the staging directory renamed in its
+    * place. A reader between the delete and the rename finds no table. */
+  final class RetainedTable(spark: SparkSession, path: String,
+      key: Seq[String], orderCol: String, tieBreak: String) {
+    private val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    val target = new org.apache.hadoop.fs.Path(path)
-    val existing =
-      if (fs.exists(target)) Some(spark.read.parquet(path)) else None
-    val unioned = existing.map(_.unionByName(batch)).getOrElse(batch)
-    // row_number, not EventOps.latestPerKey: status payloads carry MAP
-    // columns (config/health projections) which struct-max cannot order;
-    // the retained table is fleet-sized, so a window sort is irrelevant.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(key.map(col): _*)
-      .orderBy(col(orderCol).desc, col(tieBreak).desc)
-    val merged = unioned
-      .withColumn("__rn", org.apache.spark.sql.functions.row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    val staging = new org.apache.hadoop.fs.Path(path + ".staging")
-    merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    fs.delete(target, true)
-    fs.rename(staging, target)
+    private val target = new org.apache.hadoop.fs.Path(path)
+    private var schema: StructType = _
+    private val rows = scala.collection.mutable.LinkedHashMap.empty[Seq[Any], Row]
+
+    def upsert(batch: DataFrame): Unit = synchronized {
+      val incoming = batch.collect()
+      if (incoming.nonEmpty) {
+        if (schema == null) {
+          schema = StructType(batch.schema.fields.map(_.copy(nullable = true)))
+          if (fs.exists(target))
+            spark.read.schema(schema).parquet(path).collect().foreach(merge)
+        }
+        require(batch.columns.sameElements(schema.fieldNames),
+          s"$path holds columns ${schema.fieldNames.mkString(",")}, " +
+            s"the batch has ${batch.columns.mkString(",")}")
+        incoming.foreach(merge)
+        val staging = new org.apache.hadoop.fs.Path(path + ".staging")
+        spark.createDataFrame(java.util.Arrays.asList(rows.values.toSeq: _*),
+            schema).coalesce(1)
+          .write.mode(SaveMode.Overwrite).parquet(staging.toString)
+        fs.delete(target, true)
+        fs.rename(staging, target)
+      }
+    }
+
+    private def merge(r: Row): Unit = {
+      val k = key.map(c => r.get(r.fieldIndex(c)))
+      val older = rows.get(k).exists { held =>
+        val c = ascNullsFirst(r.getAs[Any](orderCol), held.getAs[Any](orderCol))
+        if (c != 0) c < 0
+        else ascNullsFirst(r.getAs[Any](tieBreak), held.getAs[Any](tieBreak)) < 0
+      }
+      if (!older) rows(k) = r
+    }
   }
+
+  /** Spark's ascending order of two atomic values of one column, a null
+    * first (so it loses under `desc`): strings by UTF-8 bytes, floating
+    * point with NaN above all and -0.0 = 0.0. */
+  private def ascNullsFirst(a: Any, b: Any): Int = (a, b) match {
+    case (null, null) => 0
+    case (null, _) => -1
+    case (_, null) => 1
+    case (x: String, y: String) =>
+      org.apache.spark.unsafe.types.UTF8String.fromString(x)
+        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(y))
+    case (x: Double, y: Double) => if (x == y) 0 else java.lang.Double.compare(x, y)
+    case (x: Float, y: Float) => if (x == y) 0 else java.lang.Float.compare(x, y)
+    case (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.compareUnsigned(x, y)
+    case (x: Comparable[Any] @unchecked, y) => x.compareTo(y)
+  }
+
+  /** One upsert through a fresh [[RetainedTable]]: loads the table,
+    * merges `batch` and writes it back. A long-lived writer holds its
+    * own value instead, so the table is read once, not per batch. */
+  def upsertRetained(spark: SparkSession, batch: DataFrame, path: String,
+                     key: Seq[String], orderCol: String, tieBreak: String): Unit =
+    new RetainedTable(spark, path, key, orderCol, tieBreak).upsert(batch)
 
   /** K4: ACK append (QoS 1, not retained) — plain append-mode parquet.
     * Exactly-once per micro-batch via the streaming commit log. */

@@ -535,20 +535,29 @@ object StatefulOps {
   }
 
   /** The one micro-batch stage: every `foreachBatch` sink in the engine
-    * is built here. The batch is persisted, so it is read from its
-    * source once however many actions `process` runs on it (each extra
-    * action on an unpersisted foreachBatch frame re-runs the source
-    * scan); a batch that one check on the cached data finds empty never
-    * reaches `process`, so no job, part-file or state write is spent on
-    * it; and the cache is released in a `finally`, also when `process`
-    * throws and fails the query. */
+    * is built here. `process` gets the micro-batch as it is, so a body
+    * that reads it once (an append, a collect) costs that one job and
+    * nothing more. A body that reads it more than once wraps itself in
+    * [[cachedNonEmpty]]. A batch can be empty (a filter dropped every
+    * row, or a stateful query's no-data batch): a one-read body handles
+    * it in its one job. */
   def eachBatch(stream: DataFrame)(
       process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      batch.persist()
-      try if (!batch.isEmpty) process(batch, bid)
-      finally batch.unpersist()
-    }
+    stream.writeStream.foreachBatch(process)
+
+  /** A micro-batch body for [[eachBatch]] that reads its batch more than
+    * once: the batch is persisted, so it is read from its source once
+    * however many actions `process` runs on it (each extra action on an
+    * unpersisted foreachBatch frame re-runs the source scan); a batch
+    * that one check on the cached data finds empty never reaches
+    * `process`; and the cache is released in a `finally`, also when
+    * `process` throws and fails the query. */
+  def cachedNonEmpty(process: (DataFrame, Long) => Unit)
+      : (DataFrame, Long) => Unit = { (batch, bid) =>
+    batch.persist()
+    try if (!batch.isEmpty) process(batch, bid)
+    finally batch.unpersist()
+  }
 
   /** Streaming pause gate (F1/ST6, processor/mqtt_sink.py:77-94): the
     * flag is checked once per micro-batch on the driver and the whole
@@ -600,7 +609,7 @@ object StatefulOps {
       delete: (SparkSession, DataFrame) => Unit,
       replace: DataFrame => Unit, compact: SparkSession => Boolean)(
       onBatch: (Long, Boolean) => Unit): DataStreamWriter[Row] =
-    eachBatch(stream) { (batch, bid) =>
+    eachBatch(stream)(cachedNonEmpty { (batch, bid) =>
       val spark = batch.sparkSession
       val bad = batch.filter(col(op).isNull ||
         !col(op).isin("upsert", "delete"))
@@ -633,7 +642,7 @@ object StatefulOps {
         delete(spark, dels)
       if (!ups.isEmpty) replace(ups)
       onBatch(bid, spark.catalog.tableExists(table) && compact(spark))
-    }
+    })
 
   /** Threshold compaction for the two-table PAIR indexes: the shared
     * sidecar's dead share of `table` decides, and `compact` swaps both
@@ -805,7 +814,7 @@ object StatefulOps {
       canonicalizeUrls: Boolean = false)(
       process: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     require(maxPerDomain >= 1, s"bad maxPerDomain: $maxPerDomain")
-    eachBatch(stream) { (batch, bid) =>
+    eachBatch(stream)(cachedNonEmpty { (batch, bid) =>
       val spark = batch.sparkSession
       registryKeySchemeGuard(spark, table, canonicalizeUrls)
       // the registry key: raw URL or its canonical form (the batch
@@ -873,7 +882,7 @@ object StatefulOps {
             .when(!col("__keep"), lit("domain_cap"))
             .otherwise(lit(null).cast("string")).as("reason"))
       process(verdicts, bid)
-    }
+    })
   }
 
   /** Exact-dedup ADMISSION REGISTRY at ingest — the corpus-LIFETIME
@@ -905,7 +914,7 @@ object StatefulOps {
       text: String, table: String, buckets: Int)(
       process: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     require(buckets >= 1, s"bad buckets: $buckets")
-    eachBatch(stream) { (batch, bid) =>
+    eachBatch(stream)(cachedNonEmpty { (batch, bid) =>
       val spark = batch.sparkSession
       val b = batch.select(col(id).as("doc_id"),
         md5(col(text)).as("h"))
@@ -942,7 +951,7 @@ object StatefulOps {
           when(col("__keep").isNull, lit("exact_dup"))
             .otherwise(lit(null).cast("string")).as("reason"))
       process(verdicts, bid)
-    }
+    })
   }
 
   /** CDC maintenance for the maxsim SQ8 PAIR index
@@ -1239,9 +1248,12 @@ final class CurationFunnelStream private[streaming](
     process(s8, bid)
   }
 
-  /** The funnel's micro-batch sink; start it like any other writer. */
+  /** The funnel's micro-batch sink; start it like any other writer.
+    * `onBatch` reads its batch once (into `b0`), but it runs every
+    * stage's jobs however few rows arrive, so an empty batch is skipped
+    * by [[StatefulOps.cachedNonEmpty]]'s check. */
   def writer: DataStreamWriter[Row] =
-    StatefulOps.eachBatch(stream)(onBatch)
+    StatefulOps.eachBatch(stream)(StatefulOps.cachedNonEmpty(onBatch))
 
   /** The accumulated curated corpus `(doc_id, ct, src)` — stage-8
     * survivors of every batch so far. */

@@ -110,6 +110,18 @@ class AppPipelineSpec extends SparkSpec {
     val wall = Main.wallWriter(Main.wallEvents(spark, s"$outDir/detections"),
       s"$outDir/tiles")
       .option("checkpointLocation", s"$outDir/_ck_wall").start()
+    // Spark jobs per wall micro-batch, by batch id
+    val wallJobs = scala.collection.mutable.Map.empty[String, Int]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { props =>
+          if (props.getProperty("sql.streaming.queryId") == wall.id.toString)
+            Option(props.getProperty("streaming.sql.batchId")).foreach { b =>
+              wallJobs.synchronized(wallJobs(b) = wallJobs.getOrElse(b, 0) + 1)
+            }
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
     try {
       writeFile(eventsDir, "a.txt", Seq(envLine(1, 1), envLine(1, 2), envLine(2, 1)))
       pipeline.processAllAvailable()
@@ -134,7 +146,40 @@ class AppPipelineSpec extends SparkSpec {
       pipeline.processAllAvailable()
       wall.processAllAvailable()
       assert(tiles == Map(1 -> 7L, 2 -> 1L), "tile updated to the new frame")
-    } finally { wall.stop(); pipeline.stop() }
+      // the held tiles table: the batch's collect and the table's write,
+      // no read of the table and no cache or emptiness probe
+      org.apache.spark.sql.graftx.Listeners.drain(spark.sparkContext)
+      val perBatch = wallJobs.synchronized(wallJobs.toMap)
+      assert(perBatch.nonEmpty && perBatch.values.forall(_ <= 3),
+        s"the wall's trigger runs at most 3 jobs: $perBatch")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      wall.stop(); pipeline.stop()
+    }
+  }
+
+  test("pipeline, wall and control queries run on the one 1 s cadence") {
+    val eventsDir = Files.createTempDirectory("cadence-events").toString
+    val outDir = Files.createTempDirectory("cadence-out").toString
+    val controlDir = Files.createTempDirectory("cadence-control").toString
+    val build = Main.pipelineBuilder(spark, eventsDir, outDir,
+      s"$outDir/_ck", None) _
+    val h = new ControlHarness(EngineConfig("inst-1", streamIds = Vector(1)),
+      build, _ => (), _ => ())
+    val queries = Seq(
+      build(h.config, () => false),
+      Main.wallWriter(Main.wallEvents(spark, s"$outDir/detections"),
+        s"$outDir/tiles").option("checkpointLocation", s"$outDir/_ck_wall").start(),
+      Main.controlWriter(spark, h, controlDir)
+        .option("checkpointLocation", s"$outDir/_ck_control").start())
+    try {
+      val triggers = queries.map(_.asInstanceOf[
+        org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.trigger)
+      assert(Main.LiveTrigger == org.apache.spark.sql.streaming.Trigger
+        .ProcessingTime("1 second"))
+      assert(triggers.forall(_ == Main.LiveTrigger), s"triggers: $triggers")
+    } finally queries.foreach(_.stop())
   }
 
   test("MQTT transport feeds the processor pipeline end to end") {
@@ -247,7 +292,10 @@ class AppPipelineSpec extends SparkSpec {
       EngineConfig("inst-1", streamIds = Vector(1, 2)),
       Main.pipelineBuilder(spark, eventsDir, outDir, ck, None),
       _ => (), _ => (),
-      onMetricsRequest = c => folds += Main.publishFullMetrics(spark, outDir, c))
+      onMetricsRequest = {
+        val metrics = Main.metricsTable(spark, outDir)
+        c => folds += Main.publishFullMetrics(spark, outDir, c, metrics)
+      })
     h.start()
     try {
       writeFile(eventsDir, "a.txt",

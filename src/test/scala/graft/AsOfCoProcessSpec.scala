@@ -84,14 +84,15 @@ class AsOfCoProcessSpec extends SparkSpec {
         .queryName("sup_ok").outputMode("append").start()
       in.addData(ev(1, "2024-01-01 00:00:00", 1, 1.0))
       ok.processAllAvailable(); ok.stop(); ok.awaitTermination()
-      // crash: the micro-batch stage's process throws. Specs run one at
-      // a time, so an RDD persisted now that was not before is the
-      // failed batch's cache, which eachBatch must have released.
+      // crash: a cached micro-batch body throws. Specs run one at a
+      // time, so an RDD persisted now that was not before is the failed
+      // batch's cache, which cachedNonEmpty must have released.
       val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
-      val bad = StatefulOps.eachBatch(in.toDF()) { (batch, _) =>
-        batch.count()
-        throw new RuntimeException("boom")
-      }.start()
+      val bad = StatefulOps.eachBatch(in.toDF())(StatefulOps.cachedNonEmpty {
+        (batch, _) =>
+          batch.count()
+          throw new RuntimeException("boom")
+      }).start()
       in.addData(ev(2, "2024-01-01 00:00:01", 1, 1.0))
       intercept[Exception] { bad.processAllAvailable() }
       assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore,

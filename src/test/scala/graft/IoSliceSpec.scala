@@ -70,6 +70,110 @@ class IoSliceSpec extends SparkSpec {
     assert(out == Map("i-1" -> "paused", "i-2" -> "running"))
   }
 
+  /** The row_number merge a retained upsert ran before the table was
+    * held on the driver: the table unioned with the batch, the first row
+    * per key by (orderCol desc, tieBreak desc). The oracle for
+    * [[Sinks.RetainedTable]]. */
+  private def rowNumberMerge(table: Option[org.apache.spark.sql.DataFrame],
+      batch: org.apache.spark.sql.DataFrame, key: Seq[String],
+      orderCol: String, tieBreak: String): org.apache.spark.sql.DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(key.map(col): _*)
+      .orderBy(col(orderCol).desc, col(tieBreak).desc)
+    table.map(_.unionByName(batch)).getOrElse(batch)
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
+  }
+
+  private type RetainedRow = (Int, Option[java.sql.Timestamp], Option[Long],
+    String, Map[String, Int])
+
+  test("held retained table merges like the row_number oracle, " +
+      "replays are no-ops, a fresh value continues the merge") {
+    val rnd = new scala.util.Random(7)
+    val stamps = Vector(None, Some(ts("2024-01-01 00:00:00")),
+      Some(ts("2024-01-01 00:00:01")), Some(ts("2024-01-01 00:00:02")))
+    val ties = Vector(None, Some(0L), Some(1L))
+    // keys repeat inside a batch, order and tie values are tied or null;
+    // the payload and the MAP column are functions of (k, ts, tb), so a
+    // full tie carries the same row and the oracle's pick is determined
+    def row(): RetainedRow = {
+      val (k, t, tb) = (rnd.nextInt(4), stamps(rnd.nextInt(stamps.size)),
+        ties(rnd.nextInt(ties.size)))
+      (k, t, tb, s"$k/$t/$tb", Map("k" -> k, s"tb$tb" -> t.size))
+    }
+    def batch(n: Int) = Seq.fill(n)(row())
+      .toDF("k", "ts", "tb", "payload", "tags")
+    def table(path: String) = spark.read.parquet(path).collect().toSet
+    val key = Seq("k")
+    (1 to 12).foreach { trial =>
+      val path = Files.createTempDirectory("retained").toString + "/t"
+      val held = new Sinks.RetainedTable(spark, path, key, "ts", "tb")
+      val batches = Seq.fill(3)(batch(1 + rnd.nextInt(8)))
+      batches.foreach(held.upsert)
+      val oracle = batches.foldLeft(Option.empty[org.apache.spark.sql.DataFrame]) {
+        (t, b) => Some(rowNumberMerge(t, b, key, "ts", "tb"))
+      }.get
+      val merged = table(path)
+      assert(merged == oracle.collect().toSet, s"trial $trial")
+      held.upsert(batches.last)
+      assert(table(path) == merged, s"trial $trial: a replayed batch changed the table")
+      val more = batch(1 + rnd.nextInt(8))
+      new Sinks.RetainedTable(spark, path, key, "ts", "tb").upsert(more)
+      assert(table(path) ==
+        rowNumberMerge(Some(oracle), more, key, "ts", "tb").collect().toSet,
+        s"trial $trial: a fresh value over the table")
+    }
+    // on a full tie of (ts, tb) the incoming row wins
+    val path = Files.createTempDirectory("retained-tie").toString + "/t"
+    val held = new Sinks.RetainedTable(spark, path, key, "ts", "tb")
+    def one(payload: String) = Seq[RetainedRow]((1, stamps(1), Some(1L),
+      payload, Map.empty)).toDF("k", "ts", "tb", "payload", "tags")
+    held.upsert(one("old"))
+    held.upsert(one("new"))
+    assert(spark.read.parquet(path).select("payload").as[String].collect()
+      .toSeq == Seq("new"))
+  }
+
+  test("held retained table: one collect and one write job per upsert, " +
+      "no read after the first load, no job for an empty batch") {
+    val path = Files.createTempDirectory("retained-jobs").toString + "/t"
+    // not a local relation, so its collect is a job
+    def batch(sid: Int, fid: Long) = spark.range(1).select(
+      lit(sid).as("source_id"), lit(ts("2024-01-01 00:00:00")).as("timestamp"),
+      lit(fid).as("frame_id"))
+    Sinks.upsertRetained(spark, batch(1, 1), path, Seq("source_id"),
+      "timestamp", "frame_id")
+    @volatile var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs += 1
+    }
+    def jobsOf(body: => Unit): Int = {
+      org.apache.spark.sql.graftx.Listeners.drain(spark.sparkContext)
+      jobs = 0
+      body
+      org.apache.spark.sql.graftx.Listeners.drain(spark.sparkContext)
+      jobs
+    }
+    val held = new Sinks.RetainedTable(spark, path, Seq("source_id"),
+      "timestamp", "frame_id")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // the first upsert also loads the table, with the declared schema:
+      // one read job, no inference job
+      assert(jobsOf(held.upsert(batch(2, 1))) == 3)
+      assert(jobsOf(held.upsert(batch(1, 5))) == 2)
+      assert(jobsOf(held.upsert(batch(3, 1))) == 2)
+      assert(jobsOf(held.upsert(batch(3, 1).limit(0))) == 0)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val tiles = spark.read.parquet(path).select("source_id", "frame_id")
+      .as[(Int, Long)].collect().toMap
+    assert(tiles == Map(1 -> 5L, 2 -> 1L, 3 -> 1L))
+    assert(new java.io.File(path).list().count(_.endsWith(".parquet")) == 1,
+      "one part-file")
+  }
+
   test("ackWriter appends across micro-batches; sampleEveryNth strides") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val ctx = spark.sqlContext
