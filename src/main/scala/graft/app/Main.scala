@@ -112,43 +112,61 @@ object Main {
 
   /** On-demand METRICS publication (command_handlers.py:340-372): the
     * full per-source report over everything this instance has published,
-    * upserted into the retained metrics table keyed by
+    * upserted into the held retained `metrics` table keyed by
     * (instance, source) — the engine analog of the retained
     * `{status}/metrics/{instance_id}` topic. The engine's events carry
     * inference/e2e measurements but no decode timings or frame geometry
     * (those never cross the bus) — the corresponding report columns are
     * null, which the null-skipping averages ignore (F6).
     *
-    * INCREMENTAL: the command folds only files published since the last
-    * command into a retained per-source state (decimal sums + counts —
-    * bit-identical to a full recompute, see [[graft.metrics
-    * .IncrementalReport]]), so its cost is O(new data), not O(instance
-    * lifetime) — the reference reports from running counters in O(1) and
-    * a full-log rescan per command would diverge from that as the
-    * published log grows. `metrics` is the caller's held
-    * [[metricsTable]]. Returns the number of files folded (0 when
-    * nothing new was published). */
-  def publishFullMetrics(spark: SparkSession, outDir: String,
-                         cfg: EngineConfig, metrics: Sinks.RetainedTable): Int = {
-    val parse: DataFrame => DataFrame = raw => raw
-      .select(Schemas.parseEvent(col("payload")).as("e"))
-      .select(col("e.source_id").as("source_id"),
-        lit(null).cast("double").as("decode_s"),
-        (col("e.inference_time_ms") / 1000).as("inference_s"),
-        (col("e.latency_ms") / 1000).as("e2e_s"),
-        lit(null).cast("int").as("w"), lit(null).cast("int").as("h"))
-    val (reportOpt, folded) = graft.metrics.IncrementalReport.foldAndReport(
-      spark, s"$outDir/detections", s"$outDir/metrics_state", parse)
-    // nothing ever published: report nothing, like the reference's
-    // warm-up validity gate (F5)
-    reportOpt.foreach { rep =>
-      val stamped = rep
-        .withColumn("instance_id", lit(cfg.instanceId))
-        .withColumn("timestamp", lit(new java.sql.Timestamp(
-          System.currentTimeMillis())))
-      metrics.upsert(stamped)
+    * The fold is [[graft.metrics.Metrics.fullReport]] run unchanged as a
+    * complete-mode streaming aggregate over the published detections,
+    * one `AvailableNow` run per command, checkpointed at
+    * `<ckRoot>/metrics_report`: each command reads only the rows
+    * published since the last one (the reference reports from running
+    * counters in O(1)). Its sums, counts and maxes are order-independent,
+    * so the report is bit-identical to a batch recompute. The upsert runs
+    * inside the micro-batch, before the batch commits, so a failed
+    * upsert is replayed by the next command. A command that finds
+    * nothing new runs no batch and leaves the report as it was.
+    *
+    * `fold` is the caller's [[foldSession]]; `metrics` its held
+    * [[metricsTable]]. Folds run one at a time, because two queries on
+    * one checkpoint cannot run at once; the lock is not the table's,
+    * whose upsert runs on the query's thread. Returns the number of rows
+    * folded. */
+  def publishFullMetrics(fold: SparkSession, outDir: String, ckRoot: String,
+                         cfg: EngineConfig, metrics: Sinks.RetainedTable): Long =
+    foldLock.synchronized {
+      val events = wallEvents(fold, s"$outDir/detections")
+        .select(col("source_id"), lit(null).cast("double").as("decode_s"),
+          (col("inference_time_ms") / 1000).as("inference_s"),
+          (col("latency_ms") / 1000).as("e2e_s"),
+          lit(null).cast("int").as("w"), lit(null).cast("int").as("h"))
+      val report = graft.metrics.Metrics.fullReport(events,
+        "source_id", "decode_s", "inference_s", "e2e_s", "w", "h")
+      val q = StatefulOps.eachBatch(report) { (batch, _) =>
+        metrics.upsert(batch
+          .withColumn("instance_id", lit(cfg.instanceId))
+          .withColumn("timestamp", lit(new java.sql.Timestamp(
+            System.currentTimeMillis()))))
+      }.outputMode("complete").trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", s"$ckRoot/metrics_report").start()
+      q.awaitTermination()
+      q.recentProgress.map(_.numInputRows).sum
     }
-    folded
+
+  private val foldLock = new Object
+
+  /** The session the `metrics` fold runs on, created once per engine: a
+    * side session of `spark` with its own `StreamingQueryManager`, so a
+    * fold's termination or failure never reaches the main session's
+    * `awaitAnyTermination` loop; one shuffle partition, because its
+    * state is one row per source. */
+  def foldSession(spark: SparkSession): SparkSession = {
+    val fold = spark.newSession()
+    fold.conf.set("spark.sql.shuffle.partitions", "1")
+    fold
   }
 
   /** The retained per-(instance, source) report table that
@@ -212,9 +230,10 @@ object Main {
       .select(col("source_id"), col("timestamp").as("ts"),
         (col("inference_time_ms") / 1000).as("value"))
     val report = graft.metrics.Metrics.validityGate(
-      StatefulOps.metricsAggregateStreaming(
-        events.withColumnRenamed("source_id", "user_id"),
-        windowSec = intervalSec, lateness = s"$intervalSec seconds"), "rate")
+      StatefulOps.metricsAggregate(
+        events.withColumnRenamed("source_id", "user_id")
+          .withWatermark("ts", s"$intervalSec seconds"),
+        windowSec = intervalSec), "rate")
     // update mode = the CURRENT interval's aggregates each trigger (the
     // reference publishes a live snapshot, not a watermark-closed one);
     // the watermark still bounds window state
@@ -317,12 +336,13 @@ object Main {
     val statusTable = new Sinks.RetainedTable(spark, s"$outDir/status",
       Seq("instance_id"), "timestamp", "status")
     val metrics = metricsTable(spark, outDir)
+    val fold = foldSession(spark)
     val harness = new ControlHarness(cfg,
       pipelineBuilder(spark, eventsDir, outDir, ckRoot, maxFiles),
       acks => if (acks.nonEmpty)
         acks.toDF().write.mode("append").parquet(s"$outDir/acks"),
       status => statusTable.upsert(Seq(status).toDF()),
-      onMetricsRequest = c => publishFullMetrics(spark, outDir, c, metrics))
+      onMetricsRequest = c => publishFullMetrics(fold, outDir, ckRoot, c, metrics))
     // ST7 supervision: crashed pipeline queries (exception present) are
     // logged; clean stops (restart/stop commands) are not failures.
     graft.control.Supervisor.install(spark) { (runId, ex) =>

@@ -2,7 +2,6 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.StructType
 
 /** Sinks (K1-K5). The reference's broker-side behaviors map to two table
@@ -92,21 +91,6 @@ object Sinks {
     case (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.compareUnsigned(x, y)
     case (x: Comparable[Any] @unchecked, y) => x.compareTo(y)
   }
-
-  /** One upsert through a fresh [[RetainedTable]]: loads the table,
-    * merges `batch` and writes it back. A long-lived writer holds its
-    * own value instead, so the table is read once, not per batch. */
-  def upsertRetained(spark: SparkSession, batch: DataFrame, path: String,
-                     key: Seq[String], orderCol: String, tieBreak: String): Unit =
-    new RetainedTable(spark, path, key, orderCol, tieBreak).upsert(batch)
-
-  /** K4: ACK append (QoS 1, not retained) — plain append-mode parquet.
-    * Exactly-once per micro-batch via the streaming commit log. */
-  def ackWriter(acks: DataFrame, path: String, checkpoint: String): DataStreamWriter[Row] =
-    acks.writeStream.format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
 
   /** K1/K2: per-key publish — serialize the event struct to JSON with its
     * topic (events/protocol.py:11-28). `Main.pipelineBuilder` appends it

@@ -28,8 +28,11 @@ import scala.jdk.CollectionConverters._
   *    unacked redelivery (DUP) spools again, and downstream idempotence
   *    (K3 last-value-wins upsert, W1 latest-per-key) absorbs the
   *    duplicate: exactly the broker+QoS-1 model the reference runs on.
-  *  - QoS 0 PUBLISH buffers and flushes every `flushEveryLines` or on
-  *    disconnect (fire-and-forget permits batching; nothing was acked).
+  *  - QoS 0 PUBLISH buffers while the socket has further bytes pending
+  *    and spools once it has none, so a burst becomes one spool file and
+  *    a lone message is spooled at once (fire-and-forget permits
+  *    batching; nothing was acked). A continuous burst spools every
+  *    [[MqttBridge.MaxQos0Lines]] lines; a disconnect spools the rest.
   * Spool lines are the repo-wide `topic TAB payload` envelope
   * (events/protocol.py:11-28 wire shape), drained exactly-once by the
   * file stream source; the `.mqtt-N.tmp` temp file is hidden from it
@@ -48,11 +51,9 @@ import scala.jdk.CollectionConverters._
   * scan ([[MqttBridge.nextSeq]]), so a restarted bridge appends after
   * the old one's files instead of clobbering them. */
 final class MqttBridge(spoolDir: String, port: Int = 0,
-                       flushEveryLines: Int = 256,
                        bindAddress: String = "127.0.0.1",
                        bindRetries: Int = 20,
                        bindBackoffMs: Long = 50) {
-  require(flushEveryLines >= 1, "flushEveryLines must be >= 1")
   require(bindRetries >= 0 && bindBackoffMs >= 0, "bind retry/backoff >= 0")
   import Mqtt._
 
@@ -152,7 +153,8 @@ final class MqttBridge(spoolDir: String, port: Int = 0,
               writePacket(c.out, PubAck, 0, new Writer().u16(packetId).bytes)
             } else c.synchronized {
               c.buffer += line
-              if (c.buffer.size >= flushEveryLines) {
+              if (in.available() == 0 ||
+                  c.buffer.size >= MqttBridge.MaxQos0Lines) {
                 spool(c.buffer.toSeq); c.buffer.clear()
               }
             }
@@ -227,6 +229,9 @@ final class MqttBridge(spoolDir: String, port: Int = 0,
 }
 
 object MqttBridge {
+  /** The most QoS-0 lines one spool file takes from a continuous burst. */
+  private val MaxQos0Lines = 256
+
   private val SpoolName = """mqtt-(\d{12})\.txt""".r
 
   private def nextSeq(spoolDir: String): Long = {

@@ -28,9 +28,9 @@ object EventOps {
     * shuffling the whole table.
     *
     * Constraint: every payload column must be of an ORDERABLE type
-    * (struct-max compares the whole struct) — maps are not. For small
-    * tables with map payloads use a `row_number` window instead
-    * (see graft.io.Sinks.upsertRetained). */
+    * (struct-max compares the whole struct) — maps are not. A
+    * fleet-sized table with map payloads merges on the driver instead
+    * (see graft.io.Sinks.RetainedTable). */
   def latestPerKey(df: DataFrame, key: Seq[String], orderCol: String,
                    tieBreak: String): DataFrame = {
     val payload = df.columns.filterNot(key.contains)

@@ -217,7 +217,9 @@ object StatefulOps {
 
   /** Tumbling metrics window (ST3/A1-A3, metrics_reporter.py:164-233):
     * identical plan in batch and streaming — throughput + per-key average
-    * latency per 10 s window. The warm-up gate (F5,
+    * latency per 10 s window. On a stream, pass `events` with a watermark
+    * on `ts`: it bounds window state (without it, state grows forever in
+    * update mode and append-mode queries are rejected). The warm-up gate (F5,
     * metrics_reporter.py:170-172: publish only when inference_throughput
     * > 0) maps to "at least one non-null measurement in the window":
     * `count(value)` excludes nulls, so an all-null window IS suppressed
@@ -230,14 +232,6 @@ object StatefulOps {
         (count(lit(1)) / windowSec.toDouble).as("rate"),
         round(avg(col("value")) * 1000, 2).as("avg_val_ms"))
       .filter(col("n_valid") > 0)
-
-  /** Streaming form of [[metricsAggregate]]: the watermark bounds window
-    * state (without it, state grows forever in Update mode and Append-mode
-    * queries are rejected). `lateness` mirrors the reference's tolerance
-    * for stale data — effectively the detection TTL (ST2). */
-  def metricsAggregateStreaming(events: DataFrame, windowSec: Int = 10,
-                                lateness: String = "10 seconds"): DataFrame =
-    metricsAggregate(events.withWatermark("ts", lateness), windowSec)
 
   /** Stream–state as-of co-processing (J2, the system's defining stateful
     * operator): frames and events share one keyed state; each frame pairs

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.functions.col
 import graft.app.Main
 import graft.control.{ControlHarness, EngineConfig}
 import graft.model.Command
@@ -246,120 +247,174 @@ class AppPipelineSpec extends SparkSpec {
     } finally { metrics.stop(); pipeline.stop() }
   }
 
+  /** An envelope whose timings vary per event, so the report's decimal
+    * sums are not round numbers. */
+  private def measuredLine(sid: Int, fid: Long): String =
+    envLine(sid, fid).replace(""""inference_time_ms":7.5""",
+      s""""inference_time_ms":${fid * 3.7 + sid / 3.0},"latency_ms":${fid * 41.3 / 7}""")
+
+  private val reportCols = Seq("source_id", "n_frames", "avg_decode_ms",
+    "avg_inference_ms", "avg_e2e_ms", "resolution")
+
+  /** The retained `metrics` table's report columns. */
+  private def retainedReport(outDir: String): Set[org.apache.spark.sql.Row] =
+    spark.read.parquet(s"$outDir/metrics").select(reportCols.map(col): _*)
+      .collect().toSet
+
+  /** `Metrics.fullReport` as a batch over every published detection. */
+  private def recomputedReport(outDir: String): Set[org.apache.spark.sql.Row] =
+    graft.metrics.Metrics.fullReport(
+      spark.read.parquet(s"$outDir/detections")
+        .select(graft.model.Schemas.parseEvent(col("payload")).as("e"))
+        .selectExpr("e.source_id as source_id",
+          "cast(null as double) as decode_s",
+          "e.inference_time_ms / 1000 as inference_s",
+          "e.latency_ms / 1000 as e2e_s",
+          "cast(null as int) as w", "cast(null as int) as h"),
+      "source_id", "decode_s", "inference_s", "e2e_s", "w", "h")
+      .select(reportCols.map(col): _*).collect().toSet
+
+  // the fold-and-report step is `Main.publishFullMetrics`; its state dir is the
+  // fold checkpoint under `<ck>`
   test("foldAndReport serializes concurrent folds on one state dir (no double-count)") {
-    val dataDir = Files.createTempDirectory("fold-data").toString
-    val stateDir = Files.createTempDirectory("fold-state").toString
-    Seq((1, 1.0, 2.0, 3.0, 10, 20), (1, 1.0, 2.0, 3.0, 10, 20),
-        (1, 1.0, 2.0, 3.0, 10, 20), (2, 1.0, 2.0, 3.0, 10, 20),
-        (2, 1.0, 2.0, 3.0, 10, 20))
-      .toDF("source_id", "decode_s", "inference_s", "e2e_s", "w", "h")
-      .repartition(2).write.mode("overwrite").parquet(dataDir)
-    // two simultaneous `metrics` commands race the first fold: unguarded,
-    // both read meta v0, both fold every file, and the state double-counts
+    val eventsDir = Files.createTempDirectory("fold-events").toString
+    val outDir = Files.createTempDirectory("fold-out").toString
+    writeFile(eventsDir, "a.txt", Seq(measuredLine(1, 1), measuredLine(1, 2),
+      measuredLine(1, 3), measuredLine(2, 1), measuredLine(2, 2)))
+    graft.io.Sinks.detectionPublishFrame(
+      graft.io.Sources.eventFileBatch(spark, eventsDir), "nvr/detections")
+      .write.mode("append").parquet(s"$outDir/detections")
+    val fold = Main.foldSession(spark)
+    val metrics = Main.metricsTable(spark, outDir)
+    val cfg = EngineConfig("inst-1", streamIds = Vector(1, 2))
+    // two simultaneous `metrics` callers race the first fold: unserialized,
+    // two queries start on one checkpoint and Spark fails one of them
     val gate = new java.util.concurrent.CountDownLatch(1)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     val futures = (0 until 2).map { _ =>
-      pool.submit(new java.util.concurrent.Callable[Int] {
-        def call(): Int = {
+      pool.submit(new java.util.concurrent.Callable[Long] {
+        def call(): Long = {
           gate.await()
-          graft.metrics.IncrementalReport
-            .foldAndReport(spark, dataDir, stateDir, identity)._2
+          Main.publishFullMetrics(fold, outDir, s"$outDir/_ck", cfg, metrics)
         }
       })
     }
     gate.countDown()
-    val folded = futures.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+    val folded = futures.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
     pool.shutdown()
-    val nFiles = Files.list(Paths.get(dataDir)).toArray.map(_.toString)
-      .count { p =>
-        val n = Paths.get(p).getFileName.toString
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-    assert(folded.sorted == Seq(0, nFiles),
-      s"one racer folds all $nFiles files, the loser folds 0 — got $folded")
-    val report = graft.metrics.IncrementalReport
-      .foldAndReport(spark, dataDir, stateDir, identity)._1.get
+    assert(folded.sorted == Seq(0L, 5L),
+      s"one caller folds all 5 rows, the other none — got $folded")
+    val report = spark.read.parquet(s"$outDir/metrics")
       .select("source_id", "n_frames").as[(Int, Long)].collect().toMap
-    assert(report == Map(1 -> 3L, 2 -> 2L), s"double-counted state: $report")
+    assert(report == Map(1 -> 3L, 2 -> 2L), s"double-counted report: $report")
+    assert(retainedReport(outDir) == recomputedReport(outDir))
   }
 
   test("on-demand metrics publication writes the retained report table") {
     val eventsDir = Files.createTempDirectory("app-events2").toString
     val outDir = Files.createTempDirectory("app-out2").toString
     val ck = s"$outDir/_ck"
-    val folds = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val folds = scala.collection.mutable.ArrayBuffer.empty[Long]
     val h: ControlHarness = new ControlHarness(
       EngineConfig("inst-1", streamIds = Vector(1, 2)),
       Main.pipelineBuilder(spark, eventsDir, outDir, ck, None),
       _ => (), _ => (),
       onMetricsRequest = {
+        val fold = Main.foldSession(spark)
         val metrics = Main.metricsTable(spark, outDir)
-        c => folds += Main.publishFullMetrics(spark, outDir, c, metrics)
+        c => folds += Main.publishFullMetrics(fold, outDir, ck, c, metrics)
       })
     h.start()
+    def stamps(): Map[Int, java.sql.Timestamp] =
+      spark.read.parquet(s"$outDir/metrics").select("source_id", "timestamp")
+        .as[(Int, java.sql.Timestamp)].collect().toMap
     try {
       writeFile(eventsDir, "a.txt",
-        Seq(envLine(1, 1), envLine(1, 2), envLine(2, 1)))
+        Seq(measuredLine(1, 1), measuredLine(1, 2), measuredLine(2, 1)))
       h.pipeline.get.processAllAvailable()
       h.handle(Command("metrics", Map.empty, Seq.empty))
       val byFrame = spark.read.parquet(s"$outDir/metrics")
         .select("source_id", "n_frames")
         .as[(Int, Long)].collect().toMap
       assert(byFrame == Map(1 -> 2L, 2 -> 1L), s"unexpected report rows: $byFrame")
-      assert(folds == Seq(folds.head) && folds.head > 0)
+      assert(folds == Seq(3L), s"the first fold reads every row, got $folds")
+      assert(retainedReport(outDir) == recomputedReport(outDir))
 
-      // re-request with NOTHING new published: an idempotent upsert that
-      // reads ZERO detection files — the report comes from folded state
+      // nothing new published: the fold runs no batch and reads 0 rows;
+      // the report, timestamps included, stays as it was
+      val before = stamps()
       h.handle(Command("metrics", Map.empty, Seq.empty))
-      assert(folds.last == 0, s"no-new-data request must fold 0 files, got $folds")
-      assert(spark.read.parquet(s"$outDir/metrics").count() == 2)
+      assert(folds.last == 0L, s"no-new-data request must fold 0 rows, got $folds")
+      assert(stamps() == before)
 
-      // new data: the next command folds ONLY the new batch's files and
-      // the report matches a full recompute bit-for-bit
-      writeFile(eventsDir, "b.txt", Seq(envLine(1, 3), envLine(1, 4)))
+      // new data: the next command folds ONLY the new rows, and the
+      // report equals a full recompute bit for bit
+      writeFile(eventsDir, "b.txt", Seq(measuredLine(1, 3), measuredLine(1, 4)))
       h.pipeline.get.processAllAvailable()
       h.handle(Command("metrics", Map.empty, Seq.empty))
-      val allFiles = Files.list(Paths.get(s"$outDir/detections")).toArray
-        .map(_.toString).count { p =>
-          val n = Paths.get(p).getFileName.toString
-          !n.startsWith("_") && !n.startsWith(".") // skip _SUCCESS + .crc
-        }
-      assert(folds.last > 0 && folds.last < allFiles,
-        s"incremental fold must read only the new files (folded ${folds.last} of $allFiles)")
-      val got = spark.read.parquet(s"$outDir/metrics")
-        .select("source_id", "n_frames", "avg_inference_ms", "avg_e2e_ms")
-        .as[(Int, Long, Option[Double], Option[Double])].collect().toSet
-      val full = graft.metrics.Metrics.fullReport(
-        spark.read.parquet(s"$outDir/detections")
-          .select(graft.model.Schemas.parseEvent(
-            org.apache.spark.sql.functions.col("payload")).as("e"))
-          .selectExpr("e.source_id as source_id",
-            "cast(null as double) as decode_s",
-            "e.inference_time_ms / 1000 as inference_s",
-            "e.latency_ms / 1000 as e2e_s",
-            "cast(null as int) as w", "cast(null as int) as h"),
-        "source_id", "decode_s", "inference_s", "e2e_s", "w", "h")
-        .select("source_id", "n_frames", "avg_inference_ms", "avg_e2e_ms")
-        .as[(Int, Long, Option[Double], Option[Double])].collect().toSet
-      assert(got == full, s"incremental report $got != full recompute $full")
+      assert(folds.last == 2L, s"incremental fold must read only the 2 new rows, got $folds")
+      val full = recomputedReport(outDir)
+      assert(full.size == 2)
+      assert(retainedReport(outDir) == full)
 
-      // documented crash recovery: losing the fold state entirely (meta
-      // + versions) degrades to a full refold — same report, never a
-      // wrong one; the fold count shows everything was re-read
-      val statePath = java.nio.file.Paths.get(s"$outDir/metrics_state")
+      // losing the fold's checkpoint degrades to a full refold (every row
+      // read again) with the same report, never a wrong one
       def deleteRec(p: java.nio.file.Path): Unit = {
         if (Files.isDirectory(p))
           Files.list(p).toArray.foreach(c => deleteRec(c.asInstanceOf[java.nio.file.Path]))
         Files.deleteIfExists(p)
       }
-      deleteRec(statePath)
+      deleteRec(Paths.get(s"$ck/metrics_report"))
       h.handle(Command("metrics", Map.empty, Seq.empty))
-      assert(folds.last == allFiles,
-        s"state loss must trigger a full refold (${folds.last} of $allFiles)")
-      val afterRecovery = spark.read.parquet(s"$outDir/metrics")
-        .select("source_id", "n_frames", "avg_inference_ms", "avg_e2e_ms")
-        .as[(Int, Long, Option[Double], Option[Double])].collect().toSet
-      assert(afterRecovery == full, "recovered report must equal the recompute")
+      assert(folds.last == 5L, s"checkpoint loss must refold all 5 rows, got $folds")
+      assert(retainedReport(outDir) == full, "recovered report must equal the recompute")
+    } finally h.pipeline.foreach(_.stop())
+  }
+
+  test("metrics fold: a failed upsert still ACKs, stays off the main session, " +
+    "and is replayed by the next command") {
+    val eventsDir = Files.createTempDirectory("fold-fault-events").toString
+    val outDir = Files.createTempDirectory("fold-fault-out").toString
+    val ck = s"$outDir/_ck"
+    // the first command's table sits under a regular file: its write fails
+    val blocker = Paths.get(outDir, "blocker")
+    Files.write(blocker, Array[Byte](1))
+    val bad = new graft.io.Sinks.RetainedTable(spark, s"$blocker/metrics",
+      Seq("instance_id", "source_id"), "timestamp", "n_frames")
+    val good = Main.metricsTable(spark, outDir)
+    val fold = Main.foldSession(spark)
+    val acks = scala.collection.mutable.ArrayBuffer.empty[graft.model.Ack]
+    val folds = scala.collection.mutable.ArrayBuffer.empty[Long]
+    var calls = 0
+    val h: ControlHarness = new ControlHarness(
+      EngineConfig("inst-1", streamIds = Vector(1, 2)),
+      Main.pipelineBuilder(spark, eventsDir, outDir, ck, None),
+      as => acks ++= as, _ => (),
+      onMetricsRequest = { c =>
+        calls += 1
+        folds += Main.publishFullMetrics(fold, outDir, ck, c,
+          if (calls == 1) bad else good)
+      })
+    spark.streams.resetTerminated()
+    h.start()
+    try {
+      writeFile(eventsDir, "a.txt",
+        Seq(measuredLine(1, 1), measuredLine(1, 2), measuredLine(2, 1)))
+      h.pipeline.get.processAllAvailable()
+      h.handle(Command("metrics", Map.empty, Seq.empty))
+      assert(folds.isEmpty, "the failed fold must not return")
+      assert(acks.map(_.ack_status) == Seq("received", "completed"),
+        s"a failed publication still completes its command: $acks")
+      // the failed fold's query belongs to the side session: the main
+      // session's termination loop sees nothing
+      spark.streams.awaitAnyTermination(100)
+      assert(h.pipeline.exists(_.isActive))
+      assert(!Files.exists(Paths.get(s"$outDir/metrics")))
+
+      // the next command replays the uncommitted batch into a good table
+      h.handle(Command("metrics", Map.empty, Seq.empty))
+      assert(folds == Seq(3L), s"the replay folds every row, got $folds")
+      assert(retainedReport(outDir) == recomputedReport(outDir))
     } finally h.pipeline.foreach(_.stop())
   }
 }

@@ -61,10 +61,14 @@ class IoSliceSpec extends SparkSpec {
       .toDF("instance_id", "status", "timestamp")
     val b2 = Seq(("i-1", "paused", ts("2024-01-01 00:00:10")))
       .toDF("instance_id", "status", "timestamp")
-    Sinks.upsertRetained(spark, b1, dir, Seq("instance_id"), "timestamp", "status")
-    Sinks.upsertRetained(spark, b2, dir, Seq("instance_id"), "timestamp", "status")
+    // each upsert through a fresh value, so each one loads the table
+    def upsert(b: org.apache.spark.sql.DataFrame): Unit =
+      new Sinks.RetainedTable(spark, dir, Seq("instance_id"), "timestamp",
+        "status").upsert(b)
+    upsert(b1)
+    upsert(b2)
     // replay b2: at-least-once delivery must converge (idempotent)
-    Sinks.upsertRetained(spark, b2, dir, Seq("instance_id"), "timestamp", "status")
+    upsert(b2)
     val out = spark.read.parquet(dir)
       .select("instance_id", "status").as[(String, String)].collect().toMap
     assert(out == Map("i-1" -> "paused", "i-2" -> "running"))
@@ -142,8 +146,8 @@ class IoSliceSpec extends SparkSpec {
     def batch(sid: Int, fid: Long) = spark.range(1).select(
       lit(sid).as("source_id"), lit(ts("2024-01-01 00:00:00")).as("timestamp"),
       lit(fid).as("frame_id"))
-    Sinks.upsertRetained(spark, batch(1, 1), path, Seq("source_id"),
-      "timestamp", "frame_id")
+    new Sinks.RetainedTable(spark, path, Seq("source_id"), "timestamp",
+      "frame_id").upsert(batch(1, 1))
     @volatile var jobs = 0
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -174,21 +178,7 @@ class IoSliceSpec extends SparkSpec {
       "one part-file")
   }
 
-  test("ackWriter appends across micro-batches; sampleEveryNth strides") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val ctx = spark.sqlContext
-    val dir = Files.createTempDirectory("acks").toString
-    val in = MemoryStream[(String, String, String)]
-    val q = Sinks.ackWriter(
-      in.toDF().toDF("instance_id", "command", "ack_status"),
-      s"$dir/data", s"$dir/ck").start()
-    try {
-      in.addData(("i-1", "pause", "received")); q.processAllAvailable()
-      in.addData(("i-1", "pause", "completed")); q.processAllAvailable()
-      val acks = spark.read.parquet(s"$dir/data")
-        .select("ack_status").as[String].collect().toSet
-      assert(acks == Set("received", "completed"))
-    } finally q.stop()
+  test("sampleEveryNth strides") {
     val sampled = graft.ops.Multimodal.sampleEveryNth(
       (0L to 9L).toDF("item_id"), "item_id", 3)
       .as[Long].collect().toSet

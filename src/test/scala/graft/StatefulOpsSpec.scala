@@ -189,8 +189,8 @@ class StatefulOpsSpec extends SparkSpec {
   test("metricsAggregateStreaming: watermark emits closed windows, drops late data") {
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[KeyedEvent]
-    val q = StatefulOps.metricsAggregateStreaming(in.toDF(), windowSec = 10,
-      lateness = "10 seconds")
+    val q = StatefulOps.metricsAggregate(
+      in.toDF().withWatermark("ts", "10 seconds"), windowSec = 10)
       .writeStream.format("memory").queryName("wm").outputMode("append").start()
     withQuery(q) {
       in.addData(ev(1, "2024-01-01 00:00:01", 1), ev(2, "2024-01-01 00:00:05", 1))
@@ -936,8 +936,8 @@ class StatefulOpsSpec extends SparkSpec {
     val expected = StatefulOps.metricsAggregate(onTime.toDF(), windowSec = 10)
       .collect().map(_.toString).sorted.toSeq
     val in = MemoryStream[KeyedEvent]
-    val q = StatefulOps.metricsAggregateStreaming(in.toDF(), windowSec = 10,
-      lateness = "10 seconds")
+    val q = StatefulOps.metricsAggregate(
+      in.toDF().withWatermark("ts", "10 seconds"), windowSec = 10)
       .writeStream.format("memory").queryName("parity").outputMode("append").start()
     withQuery(q) {
       in.addData(onTime: _*)

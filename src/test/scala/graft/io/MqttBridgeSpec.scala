@@ -188,4 +188,24 @@ class MqttBridgeSpec extends SparkSpec {
       assert(rows.length == 5 && rows.forall(_.getString(0) == "t/a"))
     } finally bridge.stop()
   }
+
+  test("a lone QoS-0 publish is spooled while its connection stays open") {
+    val spool = Files.createTempDirectory("mqtt-qos0-open").toString
+    val bridge = new MqttBridge(spool).start()
+    try {
+      val c = new MqttClient("127.0.0.1", bridge.boundPort, "lone").connect()
+      try {
+        c.publish("t/a", "m1", qos = 0)
+        // no further bytes follow on the socket: the buffer spools now,
+        // not at a line count or on disconnect
+        awaitCond("a QoS-0 publish must reach the spool within 2 s", 2000) {
+          Files.list(Paths.get(spool)).toArray.exists(
+            _.toString.endsWith(".txt"))
+        }
+        val rows = Sources.parseEnvelope(spark.read.text(spool)).collect()
+        assert(rows.map(r => (r.getString(0), r.getString(1))).toSeq ==
+          Seq(("t/a", "m1")))
+      } finally c.disconnect()
+    } finally bridge.stop()
+  }
 }
